@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Runnable demo of the three reference-program façades:
@@ -11,13 +10,7 @@ import org.apache.spark.sql.functions._
 object Demo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("8", logLevel = "WARN")
 
     // points CSV derived from lineitem (same projection as the queries)
     val csvDir = java.nio.file.Files.createTempDirectory("graft_demo").toString + "/pts"

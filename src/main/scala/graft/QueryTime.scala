@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: time a handful of named SparkEntry queries under the
   * exact Bench protocol (same session config, same untimed warmup
@@ -15,14 +14,7 @@ object QueryTime {
     require(args.length >= 2, "usage: QueryTime <sfDir> <query> [query ...]")
     val sfDir = args(0)
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local()
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
     names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,

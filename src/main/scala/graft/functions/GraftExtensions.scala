@@ -7,35 +7,15 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 /** Library packaging for external users: inject graft's native
   * functions into every session via
   * `spark.sql.extensions=graft.functions.GraftExtensions` (or
-  * `.withExtensions(new GraftExtensions)`); SQL then resolves
-  * `graft_dot` / `graft_min_dist_sq` / `graft_word_ngrams` /
-  * `graft_top_dot` directly. In-library code paths use
-  * [[Native.register]], which installs the same builders into an
-  * already-running session.
+  * `.withExtensions(new GraftExtensions)`); SQL then resolves every
+  * `graft_*` name directly. In-library code paths use
+  * [[Native.register]], which installs the same table
+  * ([[Native.Functions]]) into an already-running session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  private type Exprs = Seq[org.apache.spark.sql.catalyst.expressions.Expression]
-
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (exprs: Exprs) => DotProduct(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("graft_min_dist_sq"),
-      new ExpressionInfo(classOf[MinDistSq].getName, "graft_min_dist_sq"),
-      (exprs: Exprs) => MinDistSq(exprs(0), exprs(1), exprs(2))))
-    e.injectFunction((
-      FunctionIdentifier("graft_word_ngrams"),
-      new ExpressionInfo(classOf[WordNgrams].getName, "graft_word_ngrams"),
-      (exprs: Exprs) => WordNgrams(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("graft_top_dot"),
-      new ExpressionInfo(classOf[TopDot].getName, "graft_top_dot"),
-      (exprs: Exprs) => TopDot(exprs(0), exprs(1), exprs(2))))
-    e.injectFunction((
-      FunctionIdentifier("graft_interleave_bits"),
-      new ExpressionInfo(classOf[InterleaveBits].getName, "graft_interleave_bits"),
-      (exprs: Exprs) => InterleaveBits(exprs(0), exprs(1))))
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    Native.Functions.foreach { case (name, cls, build) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
+    }
 }

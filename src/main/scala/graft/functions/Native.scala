@@ -20,6 +20,31 @@ import org.apache.spark.sql.types._
   */
 object Native {
 
+  /** Every native function: SQL name, expression class, builder —
+    * the ONE table both [[register]] (a running session) and
+    * [[GraftExtensions]] (a session built with
+    * `spark.sql.extensions`) install from. */
+  private[functions] val Functions
+      : Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("graft_dot", classOf[DotProduct], e => DotProduct(e(0), e(1))),
+    ("graft_min_dist_sq", classOf[MinDistSq], e => MinDistSq(e(0), e(1), e(2))),
+    ("graft_word_ngrams", classOf[WordNgrams], e => WordNgrams(e(0), e(1))),
+    ("graft_token_segments", classOf[TokenSegments],
+      e => TokenSegments(e(0), e(1))),
+    ("graft_top_dot", classOf[TopDot], e => TopDot(e(0), e(1), e(2))),
+    ("graft_zorder", classOf[InterleaveBits], e => InterleaveBits(e(0), e(1))),
+    // Spark's own runtime-filter probe expression, exposed for
+    // explicit (planner-independent) bloom pruning: args = serialized
+    // BloomFilter binary literal, xxhash64 long of the probed value.
+    // Codegen'd; same operator InjectRuntimeFilter plants.
+    ("graft_might_contain", classOf[BloomFilterMightContain],
+      e => BloomFilterMightContain(e(0), e(1))),
+    ("graft_pq_adc", classOf[PqAdc], e => PqAdc(e(0), e(1))),
+    ("graft_pq_adc_topk", classOf[PqAdcTopK],
+      e => PqAdcTopK(e(0), e(1), e(2), e(3))),
+    ("graft_dot_topk", classOf[DotTopK], e => DotTopK(e(0), e(1), e(2), e(3))),
+    ("graft_gather_vecs", classOf[GatherVecs], e => GatherVecs(e(0), e(1), e(2))))
+
   /** Idempotent per-session registration (temp functions live in the
     * session's FunctionRegistry). Guarded by functionExists so repeated
     * Column construction doesn't churn createOrReplaceTempFunction
@@ -27,34 +52,10 @@ object Native {
   def register(spark: SparkSession): Unit = {
     import org.apache.spark.sql.catalyst.FunctionIdentifier
     val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier("graft_dot"))) {
-      reg.createOrReplaceTempFunction("graft_dot",
-        exprs => DotProduct(exprs(0), exprs(1)), "internal")
-      reg.createOrReplaceTempFunction("graft_min_dist_sq",
-        exprs => MinDistSq(exprs(0), exprs(1), exprs(2)), "internal")
-      reg.createOrReplaceTempFunction("graft_word_ngrams",
-        exprs => WordNgrams(exprs(0), exprs(1)), "internal")
-      reg.createOrReplaceTempFunction("graft_token_segments",
-        exprs => TokenSegments(exprs(0), exprs(1)), "internal")
-      reg.createOrReplaceTempFunction("graft_top_dot",
-        exprs => TopDot(exprs(0), exprs(1), exprs(2)), "internal")
-      reg.createOrReplaceTempFunction("graft_zorder",
-        exprs => InterleaveBits(exprs(0), exprs(1)), "internal")
-      // Spark's own runtime-filter probe expression, exposed for
-      // explicit (planner-independent) bloom pruning: args = serialized
-      // BloomFilter binary literal, xxhash64 long of the probed value.
-      // Codegen'd; same operator InjectRuntimeFilter plants.
-      reg.createOrReplaceTempFunction("graft_might_contain",
-        exprs => BloomFilterMightContain(exprs(0), exprs(1)), "internal")
-      reg.createOrReplaceTempFunction("graft_pq_adc",
-        exprs => PqAdc(exprs(0), exprs(1)), "internal")
-      reg.createOrReplaceTempFunction("graft_pq_adc_topk",
-        exprs => PqAdcTopK(exprs(0), exprs(1), exprs(2), exprs(3)), "internal")
-      reg.createOrReplaceTempFunction("graft_dot_topk",
-        exprs => DotTopK(exprs(0), exprs(1), exprs(2), exprs(3)), "internal")
-      reg.createOrReplaceTempFunction("graft_gather_vecs",
-        exprs => GatherVecs(exprs(0), exprs(1), exprs(2)), "internal")
-    }
+    if (!reg.functionExists(FunctionIdentifier("graft_dot")))
+      Functions.foreach { case (name, _, build) =>
+        reg.createOrReplaceTempFunction(name, build, "internal")
+      }
   }
 
   /** Σ aᵢ·bᵢ over two array<double> columns — codegen'd. */
@@ -105,7 +106,8 @@ object Native {
     * subexpression per output segment (O(segments · tokens) regex
     * splits per document — quadratic in doc length). Same output:
     * ceil(m/n) segments, segment i = tokens[i·n .. min((i+1)·n, m))
-    * joined by one space; empty array for empty input. */
+    * joined by one space; empty array for empty input, null for null
+    * input. */
   def tokenSegmentsNative(tokens: Column, n: Int): Column = {
     register(SparkSession.active)
     call_function("graft_token_segments", tokens, org.apache.spark.sql.functions.lit(n))

@@ -716,7 +716,7 @@ object Similarity {
     * counts stay flat (cheaper in absolute terms, and the sf-fixture
     * faces keep their byte-stable outputs).
     *
-    * 64 is MEASURED, not guessed: the round-14 RoutedScaleProbe put
+    * 64 is MEASURED, not guessed: the round-14 routed-scale probe put
     * the routed/flat ABSOLUTE crossing between the 10× fixture (40
     * cells, routed 0.27× flat speed) and the 30× fixture (69 cells,
     * routed 1.23×) at the derived default spill — i.e. the crossing

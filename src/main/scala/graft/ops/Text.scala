@@ -165,8 +165,11 @@ object Text {
     * whose "lines" are not newline-delimited (the driver fixtures are
     * single-line token streams). Real newline data passes
     * `split(col("text"), "\n")` to [[boilerplateScrub]] directly
-    * instead. Empty docs yield an empty array (`sequence(0, -1)` would
-    * DESCEND in Spark, not produce nothing — hence the guard). */
+    * instead. Empty docs yield an empty array. NULL in, NULL out: a
+    * null text gives a null array, not an empty one — posexplode drops
+    * both alike, but a non-exploding caller (`size`, array equality)
+    * sees the difference; wrap in `coalesce(.., array())` where
+    * empty-array semantics are wanted. */
   def tokenSegments(c: Column, n: Int): Column = {
     require(n > 0, "segment size must be positive")
     // codegen'd single pass (graft.functions.TokenSegments). The

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.ops.{Dedup, Similarity}
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -98,7 +99,7 @@ object ContinuousIngest {
     * object-store connector being on the classpath. */
   private[streaming] def refuseNonAtomicRename(root: String,
                                                what: String): Unit =
-    Option(new org.apache.hadoop.fs.Path(root).toUri.getScheme)
+    Option(new HPath(root).toUri.getScheme)
       .map(_.toLowerCase(java.util.Locale.ROOT))
       .filter(NonAtomicRenameSchemes.contains)
       .foreach { s =>
@@ -202,10 +203,7 @@ object ContinuousIngest {
     * parameter set: every identity-relevant field is fingerprinted
     * beside the quantizers at (re)train time and [[loadQuantizers]]
     * refuses a mismatched caller (changing them against existing
-    * state is a [[rebuildIndexes]], exactly like changing `nlist`).
-    * Routed state written by a PRE-fingerprint build (fixed-fan-out
-    * assignment, no spill) carries no stamp to refuse on — run
-    * [[rebuildIndexes]] once when upgrading such a deployment. */
+    * state is a [[rebuildIndexes]], exactly like changing `nlist`). */
   final case class AnnParams(nlist: Int, m: Int = 8, ksub: Int = 16,
                              nAssign: Int = 3, sampleSize: Int = 0,
                              vecCol: String = "embedding",
@@ -239,34 +237,20 @@ object ContinuousIngest {
 
   private def writeAnnConfig(spark: SparkSession, st: IngestState,
                              a: AnnParams): Unit = {
-    val out = fsFor(spark, st.centroidsPath).create(
-      new org.apache.hadoop.fs.Path(st.centroidsPath, AnnConfigFile), true)
-    try out.write(annConfigFingerprint(a).getBytes("UTF-8"))
-    finally out.close()
+    Snapshot.writeText(fsFor(spark, st.centroidsPath),
+      new HPath(st.centroidsPath, AnnConfigFile), annConfigFingerprint(a))
   }
 
-  /** Loud config-drift guard: the persisted fingerprint (when
-    * present — roots bootstrapped before it existed are accepted and
-    * gain one at their next (re)train) must equal the caller's. A
-    * mismatch means the caller would append rows under a DIFFERENT
-    * assignment convention or quantizer sizing than the stored
-    * tables were built with — the remedy is [[rebuildIndexes]] under
-    * the new params, which retrains, rewrites every index table, and
-    * re-stamps. */
+  /** Loud config-drift guard: the persisted fingerprint must equal the
+    * caller's. A mismatch means the caller would append rows under a
+    * DIFFERENT assignment convention or quantizer sizing than the
+    * stored tables were built with — the remedy is [[rebuildIndexes]]
+    * under the new params, which retrains, rewrites every index table,
+    * and re-stamps. */
   private def checkAnnConfig(spark: SparkSession, st: IngestState,
                              a: AnnParams): Unit = {
-    val fs = fsFor(spark, st.centroidsPath)
-    val p = new org.apache.hadoop.fs.Path(st.centroidsPath, AnnConfigFile)
-    if (!fs.exists(p)) return
-    val in = fs.open(p)
-    val stored =
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](4096)
-        var n = in.read(buf)
-        while (n > 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-        new String(bytes.toByteArray, "UTF-8")
-      } finally in.close()
+    val stored = new String(readFileBytes(fsFor(spark, st.centroidsPath),
+      new HPath(st.centroidsPath, AnnConfigFile)), "UTF-8")
     val mine = annConfigFingerprint(a)
     if (stored != mine)
       sys.error("AnnParams drift against the persisted index state:\n" +
@@ -318,11 +302,6 @@ object ContinuousIngest {
 
   def loadQuantizers(spark: SparkSession, st: IngestState,
                      a: AnnParams): AnnQuantizers = {
-    // reader-side recovery is a deliberate no-op (one existence
-    // check): only the single writer moves a marked swap — see
-    // recoverIndexSwap. The call stays so a future writer-context
-    // loader has one obvious seam.
-    recoverIndexSwap(spark, st)
     // refuse params that disagree with the persisted assignment
     // identity — a mismatched caller would append rows under a
     // different convention than the stored batches
@@ -396,7 +375,7 @@ object ContinuousIngest {
   /** Is this root's docs table float-once (no embedding column)? */
   def docsSlim(spark: SparkSession, st: IngestState): Boolean =
     fsFor(spark, st.docsPath).exists(
-      new org.apache.hadoop.fs.Path(st.docsPath, DocsSlimMarker))
+      new HPath(st.docsPath, DocsSlimMarker))
 
   private def requireLayoutMatch(spark: SparkSession, st: IngestState,
                                  p: IngestParams): Unit = {
@@ -410,43 +389,15 @@ object ContinuousIngest {
         "re-bootstrap under the intended layout)")
   }
 
-  /** The V2 digests schema marker (underscore-prefixed inside the
-    * digests dir, so parquet readers skip it — the AnnConfigFile
-    * pattern). V2 rows are PER-DOC `(doc_id, text=md5, n_chars,
-    * n_ws_tokens)` instead of the legacy bare digest column, which
-    * turns every corpus-text pass [[deleteDocs]] used to pay into a
-    * metadata-class join against this table: the capture (which docs
-    * match the takedown ids, and their digests), the survivor
-    * digest-carry check (does any NON-deleted row still hold a
-    * tombstoned digest), and the stats adjustment (the per-doc
-    * length/token factors ride the digest row, so the delete
-    * subtracts a 1-row negative partial instead of re-aggregating
-    * the purged corpus). ~50 bytes/row — at 10⁸ docs a 5 GB
-    * column-pruned side table vs a 100 TB text scan. Dedup admission
-    * is untouched: every digest reader selects the `text` column and
-    * column pruning skips the rest.
-    *
-    * New roots are V2 from [[bootstrap]]; a legacy root keeps its
-    * bare-digest schema (and the legacy text-scan delete path,
-    * unchanged) until [[migrateDigests]] rebuilds the table from docs
-    * — mixing the two schemas in one table is exactly what the marker
-    * exists to prevent. */
-  private val DigestsV2Marker = "_GRAFT_DIGESTS_V2"
-
-  private def digestsV2(spark: SparkSession, st: IngestState): Boolean =
-    fsFor(spark, st.digestsPath).exists(
-      new org.apache.hadoop.fs.Path(st.digestsPath, DigestsV2Marker))
-
-  private def writeDigestsV2Marker(spark: SparkSession, st: IngestState): Unit =
-    fsFor(spark, st.digestsPath).create(
-      new org.apache.hadoop.fs.Path(st.digestsPath, DigestsV2Marker), true)
-      .close()
-
-  /** One V2 digest row per doc — the admit key (`text` = md5, the
-    * legacy column name, so every digest reader is schema-compatible
-    * via column pruning) plus the per-doc stats factors the delete
-    * path subtracts without touching corpus text. Computed in the
-    * same text pass that always hashed the batch. */
+  /** One digest row per doc — the admit key (`text` = md5; every
+    * admission reader selects only this column) plus the per-doc
+    * stats factors the delete path subtracts without touching corpus
+    * text. The table is therefore per-doc: every corpus-text pass
+    * [[deleteDocs]] would otherwise pay (the capture, the stats
+    * adjustment) becomes a metadata-class join against it (~50
+    * bytes/row — at 10⁸ docs a 5 GB column-pruned side table vs a
+    * 100 TB text scan). Computed in the same text pass that hashes the
+    * batch. */
   private def digestRows(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), md5(col("text")).as("text"),
       length(col("text")).cast("long").as("n_chars"),
@@ -522,7 +473,6 @@ object ContinuousIngest {
     * paths. */
   private[graft] def snapshotDirs(spark: SparkSession, path: String)
       : Option[(String, Seq[(String, String)])] = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val fs = fsFor(spark, path)
     val p = fs.makeQualified(new HPath(path))
     val mf = new HPath(p, SnapshotDirsFile)
@@ -539,22 +489,71 @@ object ContinuousIngest {
     }
   }
 
-  /** Refuse a writer face on a snapshot tree. One existence check —
-    * the faces this guards are per-batch or maintenance calls, never
-    * per-row. */
-  private def refuseSnapshotRoot(spark: SparkSession, st: IngestState,
-                                 caller: String): Unit =
-    require(!fsFor(spark, st.root).exists(
-        new org.apache.hadoop.fs.Path(st.root, SnapshotMarkerFile)),
-      s"$caller: ${st.root} is a SNAPSHOT tree (Snapshot.export) — " +
-        "snapshots are immutable serving artifacts; run maintenance " +
+  /** The ONE on-disk state format this build reads and writes. Every
+    * root [[bootstrap]] creates, and every tree [[Snapshot.export]],
+    * [[Snapshot.restore]] and [[Snapshot.sync]] produce, carries it in
+    * a root-level [[FormatFile]]; every writer entry refuses, by name,
+    * a root that is unstamped or stamped with another version — so
+    * no reader or writer carries a path for any other layout. */
+  private[graft] val StateFormat = 1
+  /** The root-level stamp: `format=<n>`, plus `snapshot=true` on a
+    * [[Snapshot]] version tree (`_`-prefixed: parquet readers skip
+    * it). */
+  private[graft] val FormatFile = "_GRAFT_FORMAT"
+
+  private[streaming] def stampText(snapshot: Boolean): String =
+    s"format=$StateFormat\n" + (if (snapshot) "snapshot=true\n" else "")
+
+  /** The stamp's `key=value` fields; None on an unstamped root. One
+    * open, no existence probe ahead of it. */
+  private def readStamp(spark: SparkSession,
+                        root: String): Option[Map[String, String]] = {
+    val p = new HPath(root, FormatFile)
+    val in =
+      try fsFor(spark, root).open(p)
+      catch { case _: java.io.FileNotFoundException => return None }
+    try Some(Snapshot.parseKv(new String(in.readAllBytes(), "UTF-8")))
+    finally in.close()
+  }
+
+  /** Refuse a root whose stamp is missing or names another format
+    * version, naming the root and both versions. Returns whether the
+    * root is a [[Snapshot]] version tree. */
+  private[graft] def requireFormat(spark: SparkSession, root: String,
+                                   caller: String): Boolean = {
+    val stamp = readStamp(spark, root).getOrElse(sys.error(
+      s"$caller: $root is unstamped (no $FormatFile) — this build reads " +
+        s"and writes only state format $StateFormat, which bootstrap, " +
+        "Snapshot.export, restore and sync stamp; this root was not " +
+        "made by them"))
+    val found = stamp.getOrElse("format", "none")
+    if (found != StateFormat.toString)
+      sys.error(s"$caller: $root is state format $found, but this build " +
+        s"reads and writes only state format $StateFormat — open it with " +
+        "the build that wrote it")
+    stamp.get("snapshot").contains("true")
+  }
+
+  /** The entry check of every writer face: this build's format, and
+    * not a snapshot tree (snapshots are immutable serving artifacts —
+    * maintenance runs on the primary, then re-exports). One stamp read
+    * answers both. */
+  private def requireWriterRoot(spark: SparkSession, st: IngestState,
+                                caller: String): Unit =
+    if (requireFormat(spark, st.root, caller))
+      sys.error(s"$caller: ${st.root} is a SNAPSHOT tree (Snapshot.export) " +
+        "— snapshots are immutable serving artifacts; run maintenance " +
         "against the primary state root and re-export")
 
   /** Initialize state from a (possibly empty) starting corpus, written
     * as the reserved `batch=-1` partition (foreachBatch ids start at
     * 0, so the bootstrap is never self-excluded). */
   def bootstrap(corpus: DataFrame, st: IngestState, p: IngestParams): Unit = {
-    refuseSnapshotRoot(corpus.sparkSession, st, "bootstrap")
+    // re-bootstrapping an existing root: it must be this build's format
+    // and not a snapshot tree (a fresh root is unstamped until the end
+    // of this call)
+    if (readStamp(corpus.sparkSession, st.root).isDefined)
+      requireWriterRoot(corpus.sparkSession, st, "bootstrap")
     // re-bootstrapping over an existing root with a PENDING tombstone:
     // the intent belongs to the OLD state (its captured batch lineage
     // and digests reference the corpus being replaced — applying it
@@ -588,11 +587,11 @@ object ContinuousIngest {
     // write used to create it; concurrently, the bloom thunk can run
     // first)
     fsFor(corpus.sparkSession, st.root).mkdirs(
-      new org.apache.hadoop.fs.Path(st.root))
+      new HPath(st.root))
     // the dedup-state writes all derive independently from the caller's
     // corpus frame — one concurrent group (a crashed bootstrap is
     // re-bootstrapped wholesale, so write order carries nothing; the
-    // layout/schema markers ride their table's thunk, after its write)
+    // layout marker rides its table's thunk, after its write)
     val dedupState = Seq[() => Unit](
       () => {
         (if (p.storeEmbeddingsInDocs) corpus
@@ -600,14 +599,11 @@ object ContinuousIngest {
           .write.mode("overwrite").parquet(s"${st.docsPath}/batch=-1")
         if (!p.storeEmbeddingsInDocs)
           fsFor(corpus.sparkSession, st.docsPath).create(
-            new org.apache.hadoop.fs.Path(st.docsPath, DocsSlimMarker), true)
+            new HPath(st.docsPath, DocsSlimMarker), true)
             .close()
       },
-      () => {
-        digestRows(corpus)
-          .write.mode("overwrite").parquet(s"${st.digestsPath}/batch=-1")
-        writeDigestsV2Marker(corpus.sparkSession, st)
-      },
+      () => digestRows(corpus)
+        .write.mode("overwrite").parquet(s"${st.digestsPath}/batch=-1"),
       () => partialStats(corpus)
         .write.mode("overwrite").parquet(s"${st.statsPath}/batch=-1")) ++
       // exact-only deployments maintain no band-key table (and pay no
@@ -640,6 +636,10 @@ object ContinuousIngest {
         }: Seq[() => Unit])
         writeDriftBase(corpus.sparkSession, st)
     }
+    // the stamp lands LAST: a crashed bootstrap leaves an unstamped root
+    // that every writer refuses until the re-bootstrap completes
+    Snapshot.writeText(fsFor(corpus.sparkSession, st.root),
+      new HPath(st.root, FormatFile), stampText(snapshot = false))
   }
 
   /** Persist the per-cell occupancy of the (just-written) sem and ivf
@@ -648,15 +648,12 @@ object ContinuousIngest {
     * quantizers trained, and immune to [[compactState]] (it is not a
     * `batch=` table, and batch ids play no role in it).
     *
-    * Also the MIGRATION / RE-ANCHOR face, public as
-    * [[snapshotDriftBase]]: a state root bootstrapped before the
-    * snapshot monitor existed has no `drift_base` — snapshotting the
-    * CURRENT occupancy baselines the monitor without a retrain (the
-    * reference era is then "now", which is the only honest choice
-    * when the train-time occupancy was never recorded). Re-anchoring
-    * a live deployment resets drift to zero by definition — do it
-    * after deliberate corpus-composition changes, not to silence a
-    * tripped monitor. */
+    * Also the RE-ANCHOR face, public as [[snapshotDriftBase]]:
+    * snapshotting the CURRENT occupancy baselines the monitor without
+    * a retrain (the reference era is then "now"). Re-anchoring a live
+    * deployment resets drift to zero by definition — do it after
+    * deliberate corpus-composition changes, not to silence a tripped
+    * monitor. */
   private def writeDriftBase(spark: SparkSession, st: IngestState): Unit = {
     val ivf = spark.read.option("basePath", st.ivfPath).parquet(st.ivfPath)
       .groupBy(col("list").as("cell")).agg(count(lit(1)).as("cnt"))
@@ -667,9 +664,9 @@ object ContinuousIngest {
     ivf.unionByName(sem).write.mode("overwrite").parquet(st.driftBasePath)
   }
 
-  /** See [[writeDriftBase]] — the public migration/re-anchor face. */
+  /** See [[writeDriftBase]] — the public re-anchor face. */
   def snapshotDriftBase(spark: SparkSession, st: IngestState): Unit = {
-    recoverIndexSwap(spark, st)
+    requireWriterRoot(spark, st, "snapshotDriftBase")
     writeDriftBase(spark, st)
   }
 
@@ -795,11 +792,10 @@ object ContinuousIngest {
   def rebuildIndexes(spark: SparkSession, st: IngestState,
                      a: AnnParams,
                      inFlightBatch: Option[Long] = None): AnnQuantizers = {
-    import org.apache.hadoop.fs.{Path => HPath}
     // a writer face like every other maintenance entry: a snapshot
     // version tree is immutable — rebuilding "on" one would delete and
     // swap its index tables in place
-    refuseSnapshotRoot(spark, st, "rebuildIndexes")
+    requireWriterRoot(spark, st, "rebuildIndexes")
     // complete or roll back a previously crashed rebuild first — the
     // corpus read below must not race a half-swapped index set. As
     // the single writer this call also finishes a crashed CLAIMED
@@ -881,22 +877,20 @@ object ContinuousIngest {
     * written BEFORE the swap marker, so every marked tmp carries it. */
   private def writeActiveSubdirs(fs: org.apache.hadoop.fs.FileSystem,
                                  tmpRoot: String): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val present = IndexSubdirs.filter(sub =>
       fs.exists(new HPath(tmpRoot, sub)))
-    val out = fs.create(new HPath(tmpRoot, ActiveSubdirsFile), true)
-    try out.write(present.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
+    Snapshot.writeText(fs, new HPath(tmpRoot, ActiveSubdirsFile),
+      present.mkString("\n"))
   }
 
   /** Complete a [[rebuildIndexes]] swap interrupted by a crash.
     * Idempotent and cheap when there is nothing to do (one existence
-    * check); [[loadQuantizers]] and [[rebuildIndexes]] call it
-    * automatically, so any reader that goes through the quantizers is
-    * crash-consistent without ceremony.
+    * check); the single-writer entries ([[rebuildIndexes]],
+    * [[deleteDocs]], [[processDeleteQueue]], [[start]], [[serve]])
+    * call it automatically.
     *
-    * ONLY THE WRITER EVER MOVES. A reader (`asWriter = false` — the
-    * [[loadQuantizers]]/[[indexDrift]] path) touches nothing, marked
+    * ONLY THE WRITER EVER MOVES. A reader (`asWriter = false`) touches
+    * nothing, marked
     * or not: an unmarked tmp may be a build in progress (deleting it
     * would destroy the rebuild mid-flight), and completing a MARKED
     * tmp from a reader would make the mover set unbounded — two
@@ -924,7 +918,6 @@ object ContinuousIngest {
     * trivially true. */
   def recoverIndexSwap(spark: SparkSession, st: IngestState,
                        asWriter: Boolean = false): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val fs = fsFor(spark, st.root)
     val tmpRoot = new HPath(s"${st.root}/$RebuildTmpDir")
     if (!fs.exists(tmpRoot)) return
@@ -933,7 +926,6 @@ object ContinuousIngest {
 
   private def completeIndexSwap(spark: SparkSession, st: IngestState,
                                 asWriter: Boolean): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val fs = fsFor(spark, st.root)
     val tmpRoot = new HPath(s"${st.root}/$RebuildTmpDir")
     // the listing races the OWNER's own tmp clear (rebuildIndexes
@@ -962,23 +954,11 @@ object ContinuousIngest {
         case _ => return // unmarked: build in progress or crashed build
       }
     }
-    // the manifest names the subdirs THIS build produced; absent only
-    // for a pre-manifest tmp layout (legacy: leave stale dirs alone)
-    val manifest: Option[Set[String]] = {
-      val mf = new HPath(tmpRoot, ActiveSubdirsFile)
-      if (!fs.exists(mf)) None
-      else {
-        val in = fs.open(mf)
-        try {
-          val bytes = new java.io.ByteArrayOutputStream()
-          val buf = new Array[Byte](4096)
-          var n = in.read(buf)
-          while (n > 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-          Some(new String(bytes.toByteArray, "UTF-8")
-            .split("\n").map(_.trim).filter(_.nonEmpty).toSet)
-        } finally in.close()
-      }
-    }
+    // the manifest names the subdirs THIS build produced (written
+    // before the marker, so every marked tmp carries it)
+    val active = new String(readFileBytes(fs,
+        new HPath(tmpRoot, ActiveSubdirsFile)), "UTF-8")
+      .split("\n").map(_.trim).filter(_.nonEmpty).toSet
     IndexSubdirs.foreach { sub =>
       val src = new HPath(tmpRoot, sub)
       val dst = new HPath(s"${st.root}/$sub")
@@ -991,7 +971,7 @@ object ContinuousIngest {
         require(fs.rename(src, dst),
           s"completeIndexSwap: rename $src -> $dst failed — index swap " +
             "left pending (marker retained); re-run recovery")
-      } else manifest match {
+      } else if (!active.contains(sub)) {
         // src absent + named in the manifest ⇒ already moved by an
         // earlier (crashed) pass — the re-entrancy case, keep dst.
         // Absent FROM the manifest ⇒ the new config never built it:
@@ -999,8 +979,7 @@ object ContinuousIngest {
         // (e.g. a sem_tree after a routed → flat change) — delete it,
         // or an out-of-band reader could pair the old tree with the
         // new tables. Idempotent, so a crash here re-runs safely.
-        case Some(active) if !active.contains(sub) => fs.delete(dst, true); ()
-        case _ => () // in-manifest (already moved) or legacy no-manifest
+        fs.delete(dst, true)
       }
     }
     fs.delete(tmpRoot, true)
@@ -1027,8 +1006,7 @@ object ContinuousIngest {
     * stage; the stage bought no durability — a crash anywhere in the
     * batch re-delivers the whole batch — so the r20 optimization
     * round replaced the write + re-reads with cache-pinned blocks
-    * that are unpersisted before return. [[compactState]] still
-    * sweeps any legacy stage dirs from crashed pre-r20 appends.)
+    * that are unpersisted before return.)
     * Readers
     * that need floats take them from the packed table
     * ([[Similarity.ivfUnpack]] is exact) — [[annIvfPqMaintained]]'s
@@ -1146,13 +1124,12 @@ object ContinuousIngest {
     * see [[Similarity.ivfPack]]). Pass the loaded quantizers when
     * querying in a loop; otherwise they load here.
     *
-    * GUARDED against the silent-partial-answer trap: a state root
-    * whose ivf table predates the packed table (bootstrapped before
-    * round 14) has assignment partitions with no packed twin — a
-    * bare packed read would answer queries against only the batches
-    * ingested since the upgrade. The batch-directory parity check
-    * (one listing per table, metadata cost) fails loudly instead and
-    * names [[backfillPackedIvf]] as the migration. */
+    * GUARDED against the silent-partial-answer trap: an append that
+    * crashed partway leaves assignment partitions with no packed twin
+    * (or the reverse) — a bare packed read would answer from a
+    * partial index. The batch-directory parity check
+    * ([[requireIndexBatchParity]], one listing per table, metadata
+    * cost) fails loudly instead. */
   def annIvfMaintained(spark: SparkSession, st: IngestState, a: AnnParams,
                        queries: DataFrame, k: Int, nprobe: Int,
                        quantizers: Option[AnnQuantizers] = None,
@@ -1339,8 +1316,6 @@ object ContinuousIngest {
   // lets recovery distinguish a COMPLETE temp (crash between
   // target-delete and rename — finish the install) from a TORN one
   // (crash mid-write — the target, when present, is authoritative).
-  // Unframed files are legacy roots (pre-frame builds wrote raw bloom
-  // bytes): read as-is, rewritten framed on the next merge.
   private[streaming] val BloomMagic = "GRFTBLM1".getBytes("UTF-8")
   private def frameBloom(payload: Array[Byte]): Array[Byte] = {
     val md5 = java.security.MessageDigest.getInstance("MD5").digest(payload)
@@ -1350,8 +1325,7 @@ object ContinuousIngest {
     out.array()
   }
   /** Some(payload) iff `bytes` is a complete well-framed bloom;
-    * None for a torn frame. A file NOT starting with the magic is a
-    * legacy raw bloom — the caller handles that case by path. */
+    * None for a torn or foreign file. */
   private def unframeBloom(bytes: Array[Byte]): Option[Array[Byte]] = {
     if (bytes.length < BloomMagic.length + 4 + 16) return None
     val buf = java.nio.ByteBuffer.wrap(bytes)
@@ -1366,16 +1340,12 @@ object ContinuousIngest {
       Some(payload)
     else None
   }
-  private def isFramedBloom(bytes: Array[Byte]): Boolean =
-    bytes.length >= BloomMagic.length &&
-      java.util.Arrays.equals(
-        java.util.Arrays.copyOf(bytes, BloomMagic.length), BloomMagic)
-  private def bloomTmp(path: String): org.apache.hadoop.fs.Path = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    new org.apache.hadoop.fs.Path(p.getParent, s".${p.getName}.tmp")
+  private def bloomTmp(path: String): HPath = {
+    val p = new HPath(path)
+    new HPath(p.getParent, s".${p.getName}.tmp")
   }
   private[streaming] def readFileBytes(fs: org.apache.hadoop.fs.FileSystem,
-                            p: org.apache.hadoop.fs.Path): Array[Byte] = {
+                            p: HPath): Array[Byte] = {
     val len = fs.getFileStatus(p).getLen
     require(len <= Int.MaxValue,
       s"$p is ${len}B — not a small state file (bloom/manifest)")
@@ -1399,7 +1369,6 @@ object ContinuousIngest {
     * the bloom to the driver's local disk. */
   private def writeBloomAtomic(spark: SparkSession, path: String,
                                bytes: Array[Byte]): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val fs = fsFor(spark, path)
     val target = new HPath(path)
     val tmp = bloomTmp(path)
@@ -1428,23 +1397,19 @@ object ContinuousIngest {
   /** The bloom payload bytes, through the Hadoop FileSystem API, with
     * crash recovery: a missing target + a COMPLETE framed temp is a
     * crash between target-delete and rename — finish the install and
-    * read it; a torn temp is discarded wherever the target exists; an
-    * unframed target is a legacy root's raw bloom (read as-is). */
+    * read it; a torn temp is discarded wherever the target exists. */
   private[graft] def readBloomBytes(spark: SparkSession,
                                     st: IngestState): Array[Byte] = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val fs = fsFor(spark, st.bloomPath)
     val target = new HPath(st.bloomPath)
     val tmp = bloomTmp(st.bloomPath)
-    if (fs.exists(target)) {
-      val bytes = readFileBytes(fs, target)
-      if (!isFramedBloom(bytes)) bytes // legacy raw bloom
-      else unframeBloom(bytes).getOrElse(sys.error(
-        s"readBloomBytes: ${st.bloomPath} is framed but fails its " +
-          "checksum — installs are rename-atomic, so this is storage " +
-          "corruption, not a crash window; rebuild the bloom by " +
-          "re-bootstrapping or re-merging from the digest table"))
-    } else if (fs.exists(tmp)) {
+    if (fs.exists(target))
+      unframeBloom(readFileBytes(fs, target)).getOrElse(sys.error(
+        s"readBloomBytes: ${st.bloomPath} fails its frame or checksum — " +
+          "installs are rename-atomic, so this is storage corruption, " +
+          "not a crash window; rebuild the bloom by re-bootstrapping or " +
+          "re-merging from the digest table"))
+    else if (fs.exists(tmp)) {
       unframeBloom(readFileBytes(fs, tmp)) match {
         case Some(payload) =>
           // mid-install crash: the temp is the only (complete) copy
@@ -1568,7 +1533,7 @@ object ContinuousIngest {
 
   private def opDirNames(spark: SparkSession, path: String): Seq[String] = {
     val fs = fsFor(spark, path)
-    val root = new org.apache.hadoop.fs.Path(path)
+    val root = new HPath(path)
     if (!fs.exists(root)) Seq.empty
     else fs.listStatus(root).filter(_.isDirectory)
       .map(_.getPath.getName).toSeq.sorted
@@ -1666,146 +1631,53 @@ object ContinuousIngest {
 
   /** The five maintained index tables (assignment, packed float
     * segments, codes, packed code segments, semantic assignments)
-    * must cover EXACTLY the same batch set — any asymmetry is either
-    * a pre-packed-era root (assignment + codes + SEM agree, only the
-    * DERIVED packed tables absent: the [[backfillPackedIvf]] /
-    * [[backfillPackedAdc]] migrations) or an append that crashed
-    * partway and was never replayed (any shape missing a
-    * directly-written table — appendIndexes writes float-pack,
-    * assignment, codes, code-pack, sem in a fixed order, so every
-    * crash window leaves a recognizable prefix). The sem table is IN
-    * the universe precisely so a crash between the code-pack and sem
-    * writes cannot masquerade as a migration: a pre-era root has sem
-    * for every batch (sem predates the packed tables), a crashed
-    * append does not — and the only remedy that restores the missing
-    * sem rows is a REPLAY, which backfilling cannot substitute for.
-    * Answering — or CONSOLIDATING ([[compactState]]) — across an
-    * asymmetry would silently serve rows the other tables never saw,
-    * or worse, launder the asymmetry into a merged partition the
-    * parity check can no longer see. One listing per table, metadata
-    * cost. `upTo` restricts the check to dirs at or below a batch id
-    * (compaction's horizon — in-flight batches above it are the
-    * stream's to replay, not an error). */
+    * must cover EXACTLY the same batch set — any asymmetry is an
+    * append that crashed partway and was never replayed, or a
+    * compaction that crashed between tables. Answering — or
+    * CONSOLIDATING ([[compactState]]) — across a crashed append would
+    * silently serve rows the other tables never saw, or worse, launder
+    * the asymmetry into a merged partition the parity check can no
+    * longer see. One listing per table, metadata cost. `upTo`
+    * restricts the check to dirs at or below a batch id (compaction's
+    * horizon — in-flight batches above it are the stream's to replay,
+    * not an error). */
   private def requireIndexBatchParity(spark: SparkSession, st: IngestState,
                                       caller: String,
                                       upTo: Long = Long.MaxValue,
                                       forCompaction: Boolean = false): Unit = {
-    def ids(p: String): Set[Long] = batchDirNames(spark, p)
-      .map(_.stripPrefix("batch=").toLong).filter(_ <= upTo)
-    val ivf = ids(st.ivfPath)
-    val pq = ids(st.pqPath)
-    val packed = ids(st.ivfPackedPath)
-    val pqPacked = ids(st.pqPackedPath)
-    val sem = ids(st.semPath)
-    val sets = Seq(ivf, pq, packed, pqPacked, sem)
+    val paths = Seq(st.ivfPath, st.pqPath, st.ivfPackedPath, st.pqPackedPath,
+      st.semPath)
+    val sets = paths.map(p => batchDirNames(spark, p)
+      .map(_.stripPrefix("batch=").toLong).filter(_ <= upTo))
     val union = sets.reduce(_ union _)
     val unpaired = union -- sets.reduce(_ intersect _)
     if (unpaired.isEmpty) return
-    // CONSOLIDATION SKEW first: a compactState that crashed between
-    // tables leaves some consolidated further than others — under the
-    // consolidation-invariant view (every id at or below the horizon
-    // collapses to the highest such id, exactly what compactTable
-    // does) the five tables still agree. This shape is NOT missing
-    // rows; the remedy is finishing the compaction, and a
-    // forCompaction caller IS that remedy, so it proceeds. The view
-    // is sound under the streaming discipline (a crashed append's
-    // batch is the MAXIMAL id until replayed — foreachBatch retries
-    // it before committing later batches — so a genuine crash always
-    // disturbs the maximum, which consolidation cannot explain away).
-    // Dir names alone are NOT sufficient evidence, though: a
-    // pre-packed-era root with any post-upgrade append (core tables
-    // {-1..N}, packed tables {N}) canons to the SAME set, and
-    // misreading that migration as skew would (a) tell queries the
-    // wrong remedy and (b) let compactState's slim rewrite destroy
-    // the fat assignment batches — backfillPackedIvf's only float
-    // source — while re-packing only batch N, silently dropping every
-    // pre-upgrade vector from the packed tables behind a now-clean
-    // dir layout. So the diagnosis must ALSO pass the row-coverage
-    // check: a genuine interrupted compaction preserves every table's
-    // distinct-id coverage (consolidation is a row union; the packed
-    // re-pack is answer-preserving), while the migration shape has
-    // the packed tables covering strictly fewer ids.
-    val h = if (upTo != Long.MaxValue) upTo else union.max
-    def canon(s: Set[Long]): Set[Long] = {
-      val lo = s.filter(_ <= h)
-      s.filter(_ > h) ++ (if (lo.nonEmpty) Set(lo.max) else Set.empty[Long])
+    // CONSOLIDATION SKEW: a compactState that crashed between tables
+    // leaves some consolidated further than others. Every id a table
+    // lacks must then be absorbed by its next-higher dir, and that dir
+    // must carry the [[ConsolidatedMarker]] compactTable stamps on
+    // every merge — a crashed append leaves an UNMARKED dir above its
+    // gap (or no dir at all). This shape is NOT missing rows; the
+    // remedy is finishing the compaction, and a forCompaction caller
+    // IS that remedy, so it proceeds.
+    val fs = fsFor(spark, st.root)
+    val skew = paths.zip(sets).forall { case (path, s) =>
+      val missing = union -- s
+      missing.isEmpty || s.filter(_ > missing.max).minOption.exists(d =>
+        fs.exists(new HPath(path, s"batch=$d/$ConsolidatedMarker")))
     }
-    if (sets.map(canon).distinct.size == 1 &&
-        consolidationCoverageAgrees(spark, st, h)) {
+    if (skew) {
       if (forCompaction) return
       sys.error(s"$caller: index tables are at different consolidation " +
         s"levels (batches ${unpaired.toSeq.sorted.mkString(", ")}) — an " +
         "interrupted compactState; re-run compactState to finish the " +
         "consolidation, then query")
     }
-    // every unpaired batch still has ALL directly-written tables →
-    // only the derived packed tables are missing → a migration;
-    // anything else (incl. a missing sem) is a crashed append
-    val migratable = unpaired.forall(b =>
-      ivf.contains(b) && pq.contains(b) && sem.contains(b))
-    val hint =
-      if (migratable)
-        "this state root predates the packed table(s); run " +
-          "backfillPackedIvf (float segments; needs FAT assignment " +
-          "batches — a SLIM one is a crashed append, replay it) and/or " +
-          "backfillPackedAdc (code segments, always derivable) to pack " +
-          "the missing batches"
-      else
-        "an append crashed partway and was never replayed; replay the " +
-          "batch (or rebuildIndexes) first"
     sys.error(s"$caller: index batch directories disagree " +
       s"(ivf/pq/packed/sem): " +
-      s"${unpaired.toSeq.sorted.map(b => s"batch=$b").mkString(", ")} — $hint")
-  }
-
-  /** EVIDENCE for the consolidation-skew diagnosis (see the caller in
-    * [[requireIndexBatchParity]]): all five index tables must cover
-    * the same number of distinct ids at or below the horizon. A
-    * compactState that crashed between tables preserves coverage
-    * (consolidation is a row union; the packed re-pack is
-    * answer-preserving by the segmentation-independence law), so a
-    * genuine skew passes; a pre-packed-era root with post-upgrade
-    * appends — the dir shape that MIMICS skew — has the packed
-    * tables covering strictly fewer ids and fails, falling through
-    * to the migration/crashed-append classification. Five
-    * column-pruned integer scans (id columns and the packed tables'
-    * id arrays, never float or code payloads), paid only on the
-    * already-rare skew-shaped root — a diagnosis path, not a
-    * serving path. */
-  private def consolidationCoverageAgrees(spark: SparkSession,
-                                          st: IngestState, h: Long): Boolean = {
-    def cov(path: String, keyCol: String, packedIds: Boolean): Long = {
-      val df = spark.read.option("basePath", path).parquet(path)
-        .where(col("batch") <= lit(h))
-      val ids =
-        if (packedIds) df.select(explode(col("ids")).as("_id"))
-        else df.select(col(keyCol).as("_id"))
-      ids.agg(count_distinct(col("_id"))).head().getLong(0)
-    }
-    Seq(cov(st.ivfPath, "nn_id", packedIds = false),
-      cov(st.pqPath, "vec_id", packedIds = false),
-      cov(st.ivfPackedPath, "", packedIds = true),
-      cov(st.pqPackedPath, "", packedIds = true),
-      cov(st.semPath, "id", packedIds = false)).distinct.size == 1
-  }
-
-  /** MIGRATION twin of [[backfillPackedIvf]] for the packed ADC
-    * table: pack every ivf+pq batch pair that lacks a `pq_packed`
-    * twin. Unlike the float pack this is ALWAYS derivable — the
-    * inputs are the two stored core tables, no floats involved —
-    * so it also repairs the code-pack leg of a crashed append
-    * (idempotent partition overwrite, deterministic pack). */
-  def backfillPackedAdc(spark: SparkSession, st: IngestState, m: Int): Unit = {
-    val missing = (batchDirNames(spark, st.ivfPath) intersect
-      batchDirNames(spark, st.pqPath)) -- batchDirNames(spark, st.pqPackedPath)
-    missing.foreach { b =>
-      Similarity.pqPack(
-          spark.read.parquet(s"${st.ivfPath}/$b").select("nn_id", "list")
-            .join(spark.read.parquet(s"${st.pqPath}/$b")
-              .select(col("vec_id").as("nn_id"), col("codes")), "nn_id"),
-          m = m)
-        .write.mode("overwrite").parquet(s"${st.pqPackedPath}/$b")
-    }
+      s"${unpaired.toSeq.sorted.map(b => s"batch=$b").mkString(", ")} — " +
+      "an append crashed partway and was never replayed; replay the " +
+      "batch (or rebuildIndexes) first")
   }
 
   /** IVFADC query face over the MAINTAINED tables: the reranked
@@ -1964,42 +1836,12 @@ object ContinuousIngest {
       case Some((_, entries)) => entries.map(_._1).toSet
       case None =>
         val fs = fsFor(spark, path)
-        val root = new org.apache.hadoop.fs.Path(path)
+        val root = new HPath(path)
         if (!fs.exists(root)) Set.empty
         else fs.listStatus(root)
           .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
           .map(_.getPath.getName).toSet
     }
-
-  /** MIGRATION: pack every ivf batch partition that lacks a packed
-    * twin — the upgrade path for state roots bootstrapped before the
-    * packed table existed ([[annIvfMaintained]]'s loud guard names
-    * this). Idempotent (partition overwrite, deterministic pack);
-    * safe to re-run; reads the vector dim from the data itself,
-    * PER BATCH (pre-packed-era batches are fat — they carry `vb`;
-    * a global schema inference over a mixed fat/slim table could
-    * drop the column). A SLIM batch with no packed twin is not a
-    * migration case at all — the slim discipline writes packed
-    * first, so it is a crashed append whose only float source is
-    * the docs partition: the remedy is replaying the batch (or
-    * rebuildIndexes), named loudly. */
-  def backfillPackedIvf(spark: SparkSession, st: IngestState): Unit = {
-    val missing = batchDirNames(spark, st.ivfPath) --
-      batchDirNames(spark, st.ivfPackedPath)
-    if (missing.isEmpty) return
-    missing.foreach { b =>
-      val df = spark.read.parquet(s"${st.ivfPath}/$b")
-      require(df.columns.contains("vb"),
-        s"backfillPackedIvf: $b is a slim assignment batch (no vb " +
-          "column) with no packed twin — a crashed append, not a " +
-          "pre-packed-era root; replay the batch (or rebuildIndexes) " +
-          "instead of backfilling")
-      val dim = df.select(size(col("vb")).as("d"))
-        .limit(1).collect().head.getInt(0)
-      Similarity.ivfPack(df, dim)
-        .write.mode("overwrite").parquet(s"${st.ivfPackedPath}/$b")
-    }
-  }
 
   /** One ingest batch against the maintained state; returns the
     * surviving rows. Steps and ORDER are the nightly recipe's:
@@ -2008,20 +1850,29 @@ object ContinuousIngest {
     * maintained-key near-dup scan → idempotent state appends
     * (partition overwrite ×3, bloom OR-merge). Safe to call for the
     * same `batchId` any number of times — see the replay contract in
-    * the object scaladoc. */
+    * the object scaladoc.
+    *
+    * `batch` must be DETERMINISTIC UNDER RECOMPUTE: the derivations
+    * re-read it (the index append's encode and semantic passes read
+    * the batch while its assignment is cache-pinned, and an evicted
+    * cache block is recomputed from lineage), so a frame whose rows
+    * change between evaluations — `rand`/`sample`/
+    * `monotonically_increasing_id` upstream, a live table read — can
+    * write assignment, packed and code partitions that disagree.
+    * Pin such a source first (write it out, or `localCheckpoint`). */
   def ingestBatch(batch: DataFrame, batchId: Long, st: IngestState,
                   p: IngestParams,
                   quantizers: Option[AnnQuantizers] = None): DataFrame = {
     require(batchId >= 0, s"batch ids are >= 0 (got $batchId; -1 is the bootstrap)")
     val spark = batch.sparkSession
-    refuseSnapshotRoot(spark, st, "ingestBatch")
+    requireWriterRoot(spark, st, "ingestBatch")
     // one metadata check per batch: admitting against state a crashed
     // deleteDocs half-purged is loud-refused, not absorbed — the
     // digest-last purge order keeps admission conservative, but an
     // operator interleaving ingest with unfinished maintenance should
     // hear about it, not discover it in the answers ([[start]] runs
     // the recovery automatically at stream startup)
-    require(!fsFor(spark, st.root).exists(new org.apache.hadoop.fs.Path(
+    require(!fsFor(spark, st.root).exists(new HPath(
         st.root, DeletePendingDir)),
       s"a pending deleteDocs tombstone exists under ${st.root} — run " +
         "recoverDeletes(spark, st) (or re-issue the delete) before ingesting")
@@ -2097,14 +1948,8 @@ object ContinuousIngest {
     if (slim)
       group += (() => ptime("docs_slim_write")(survivors.drop(p.ann.get.vecCol)
         .write.mode("overwrite").parquet(s"${st.docsPath}/batch=$batchId")))
-    // a legacy (pre-V2) root keeps its bare-digest schema until
-    // migrateDigests rebuilds it — appending V2 rows into a legacy
-    // table would mix schemas behind one path
-    val v2 = digestsV2(spark, st)
-    group += (() => ptime("digests_write")(
-      (if (v2) digestRows(survivors)
-       else survivors.select(md5(col("text")).as("text")))
-        .write.mode("overwrite").parquet(s"${st.digestsPath}/batch=$batchId")))
+    group += (() => ptime("digests_write")(digestRows(survivors)
+      .write.mode("overwrite").parquet(s"${st.digestsPath}/batch=$batchId")))
     if (p.nearDup)
       group += (() =>
         Dedup.minhashBandKeys(survivors, p.shingleN, p.numHashes, p.bands, p.seed)
@@ -2121,7 +1966,7 @@ object ContinuousIngest {
     }
     ptime("write_group")(inParallel(group.result()))
     if (slim) {
-      fsFor(spark, stage).delete(new org.apache.hadoop.fs.Path(stage), true)
+      fsFor(spark, stage).delete(new HPath(stage), true)
       // the stage is gone — hand back the STORED survivor rows (the
       // slim partition), not a frame over a deleted dir
       spark.read.parquet(s"${st.docsPath}/batch=$batchId")
@@ -2145,8 +1990,8 @@ object ContinuousIngest {
     * metadata-sized scan over #batches 1-row partials instead of a
     * full corpus re-aggregation, PLUS the op-keyed negative partials
     * completed deletes leave under `stats_deltas/` (one 1-row partial
-    * per takedown application — V2 roots adjust accounting without
-    * ever re-scanning corpus text; [[compactState]] folds them into
+    * per takedown application — accounting adjusts without ever
+    * re-scanning corpus text; [[compactState]] folds them into
     * the stats table via [[foldStatsDeltas]] so they never accrete).
     * Same replay contract as every other state table (per-batch /
     * per-op overwrite ⇒ idempotent), and equality with a
@@ -2163,12 +2008,12 @@ object ContinuousIngest {
     // monitoring totals
     val deltaDirs = {
       val fs = fsFor(spark, st.statsDeltasPath)
-      val root = new org.apache.hadoop.fs.Path(st.statsDeltasPath)
+      val root = new HPath(st.statsDeltasPath)
       if (!fs.exists(root)) Array.empty[String]
       else fs.listStatus(root)
         .filter(s => s.isDirectory && s.getPath.getName.startsWith("op="))
         .filter(s => fs.exists(
-          new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
+          new HPath(s.getPath, "_SUCCESS")))
         .map(_.getPath.toString)
     }
     val all =
@@ -2218,17 +2063,15 @@ object ContinuousIngest {
     * never touches the corpus or the floats. */
   def indexDrift(spark: SparkSession, st: IngestState,
                  table: String = "sem"): DataFrame = {
-    recoverIndexSwap(spark, st)
     val (path, cellCol) = driftTable(st, table)
-    // actionable migration error, not a buried AnalysisException: a
-    // root bootstrapped before the snapshot monitor existed has no
-    // reference era to drift against
+    // actionable error, not a buried AnalysisException: without the
+    // reference era there is nothing to drift against
     if (!fsFor(spark, st.driftBasePath)
-        .exists(new org.apache.hadoop.fs.Path(st.driftBasePath)))
+        .exists(new HPath(st.driftBasePath)))
       sys.error("indexDrift: no drift_base snapshot at " +
-        s"${st.driftBasePath} — this state root predates the snapshot " +
-        "monitor; run rebuildIndexes (retrain + fresh baseline) or " +
-        "snapshotDriftBase (baseline the CURRENT occupancy, no retrain)")
+        s"${st.driftBasePath}; run rebuildIndexes (retrain + fresh " +
+        "baseline) or snapshotDriftBase (baseline the CURRENT occupancy, " +
+        "no retrain)")
     val base = spark.read.parquet(st.driftBasePath)
       .where(col("tbl") === lit(table))
       .select(col("cell"), col("cnt").as("cnt_ref"))
@@ -2311,7 +2154,7 @@ object ContinuousIngest {
     * state tables live on (HDFS/S3/local), same as the table I/O. */
   def compactState(spark: SparkSession, st: IngestState, upToBatch: Long,
                    targetRowsPerFile: Long = 1000000L): Unit = {
-    refuseSnapshotRoot(spark, st, "compactState")
+    requireWriterRoot(spark, st, "compactState")
     // a crashed deleteDocs first: its half-swapped partitions would
     // read as dir-set asymmetry to the parity guard below, and
     // consolidating around a pending tombstone would freeze
@@ -2319,9 +2162,7 @@ object ContinuousIngest {
     recoverDeletes(spark, st)
     // consolidating ACROSS an index-table asymmetry would launder a
     // crashed append into a merged partition the parity guards can no
-    // longer see (dir names match afterwards, rows don't) — and on a
-    // pre-packed-era root the slim rewrite below would DISCARD the
-    // only float copy before backfillPackedIvf ever packed it. Check
+    // longer see (dir names match afterwards, rows don't). Check
     // parity below the horizon BEFORE touching ANY table (sem is in
     // the parity universe, so consolidating it first would feed the
     // check its own output); in-flight batches above the horizon are
@@ -2337,36 +2178,12 @@ object ContinuousIngest {
     // rule; content-preserving union, so no horizon applies)
     compactDeletesLog(spark, st, targetRowsPerFile)
     Seq(st.docsPath, st.digestsPath, st.keysPath, st.statsPath,
-        st.semPath)
+        st.semPath, st.ivfPath, st.pqPath)
       .foreach(p => compactTable(spark, p, upToBatch, targetRowsPerFile))
-    // the assignment and code tables consolidate THROUGH their slim
-    // projections: pre-slim fat batches lose the redundant float /
-    // widened-int columns here, so compaction doubles as the storage
-    // migration (floats stay available in the packed table, exactly —
-    // ivfUnpack's law; codes_arr is derivable from codes by widening).
-    // forceRewriteColumns: a SINGLE fat partition (e.g. a bootstrap-
-    // only pre-slim root) must still be rewritten — the one case
-    // where "nothing to consolidate" is not "nothing to migrate"
-    compactTable(spark, st.ivfPath, upToBatch, targetRowsPerFile,
-      rewrite = df => df.select("nn_id", "list"),
-      forceRewriteColumns = Seq("vb"))
-    compactTable(spark, st.pqPath, upToBatch, targetRowsPerFile,
-      rewrite = df => df.select("vec_id", "codes", "rerr"),
-      forceRewriteColumns = Seq("codes_arr"))
-    // sweep staging dirs orphaned by appends that crashed below the
-    // replay horizon (an in-flight batch's staging is left for its
-    // replay to overwrite)
-    val ivfRoot = new org.apache.hadoop.fs.Path(st.ivfPath)
-    val ivfFs = fsFor(spark, st.ivfPath)
-    if (ivfFs.exists(ivfRoot)) ivfFs.listStatus(ivfRoot)
-      .filter(s => s.isDirectory &&
-        s.getPath.getName.startsWith(".assign_tmp_batch="))
-      .filter(_.getPath.getName.stripPrefix(".assign_tmp_batch=")
-        .toLong <= upToBatch)
-      .foreach(s => ivfFs.delete(s.getPath, true))
-    // ...and the float-once layout's survivor stages (same orphan
-    // rule: an in-flight batch's stage is left for its replay)
-    val docsRoot = new org.apache.hadoop.fs.Path(st.docsPath)
+    // sweep the float-once layout's survivor stages orphaned by appends
+    // that crashed below the replay horizon (an in-flight batch's stage
+    // is left for its replay to overwrite)
+    val docsRoot = new HPath(st.docsPath)
     val docsFs = fsFor(spark, st.docsPath)
     if (docsFs.exists(docsRoot)) docsFs.listStatus(docsRoot)
       .filter(s => s.isDirectory &&
@@ -2410,7 +2227,7 @@ object ContinuousIngest {
       .limit(1).collect().headOption.map(_.getInt(0)).getOrElse(1)
 
   private[streaming] def fsFor(spark: SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(path)
+    new HPath(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Resolve leftover `.compact_tmp_batch=` swaps under one table
@@ -2427,7 +2244,6 @@ object ContinuousIngest {
     * intact sources. Installing an unmarked tmp would replace intact
     * data with a partial copy — permanent loss. */
   private def resolveCompactionTmps(spark: SparkSession, path: String): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val fs = fsFor(spark, path)
     val root = new HPath(path)
     if (!fs.exists(root)) return
@@ -2476,9 +2292,7 @@ object ContinuousIngest {
 
   private def compactTable(spark: SparkSession, path: String, upToBatch: Long,
                            targetRowsPerFile: Long,
-                           rewrite: DataFrame => DataFrame = identity,
-                           forceRewriteColumns: Seq[String] = Nil): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
+                           rewrite: DataFrame => DataFrame = identity): Unit = {
     val fs = fsFor(spark, path)
     val root = new HPath(path)
     if (!fs.exists(root) || !fs.getFileStatus(root).isDirectory) return
@@ -2489,16 +2303,7 @@ object ContinuousIngest {
     resolveCompactionTmps(spark, path)
     val parts = partsUpTo(upToBatch)
     if (parts.isEmpty) return
-    // a single partition has nothing to CONSOLIDATE, but may still
-    // need the rewrite MIGRATION: when any forceRewriteColumns are
-    // present in its schema (a metadata-only footer read), the
-    // rewrite runs anyway — otherwise a one-partition pre-slim root
-    // would keep its fat columns forever while the docs claim the
-    // migration happened
-    if (parts.length == 1 && (forceRewriteColumns.isEmpty ||
-        !spark.read.parquet(parts.head.toString).columns
-          .exists(forceRewriteColumns.contains)))
-      return // nothing to consolidate, nothing to migrate
+    if (parts.length == 1) return // nothing to consolidate
     // the consolidated partition takes the HIGHEST COMMITTED id ≤
     // upToBatch — never upToBatch itself, which may exceed the
     // committed horizon: parking state under a FUTURE batch id would
@@ -2523,15 +2328,10 @@ object ContinuousIngest {
       s"compactTable: $tmp committed without a _SUCCESS marker " +
         "(mapreduce.fileoutputcommitter.marksuccessfuljobs must stay " +
         "enabled for crash-safe compaction) — sources left untouched")
-    // stamp the output as a CONSOLIDATION (provenance-destroying)
-    // when it merges several partitions — or when any source was
-    // itself consolidated (a single-part migration rewrite must not
-    // launder a consolidated dir back into an attributable one). The
+    // stamp the output as a CONSOLIDATION (provenance-destroying). The
     // marker lands in the tmp BEFORE any source is deleted, so every
     // crash window either keeps the sources or installs a marked dir.
-    if (parts.length > 1 ||
-        parts.exists(p => fs.exists(new HPath(p, ConsolidatedMarker))))
-      fs.create(new HPath(tmp, ConsolidatedMarker), true).close()
+    fs.create(new HPath(tmp, ConsolidatedMarker), true).close()
     parts.foreach(p => fs.delete(p, true))
     require(fs.rename(tmp, new HPath(root, s"batch=$targetId")),
       s"compactTable: final rename $tmp failed — tmp retained (marked), " +
@@ -2545,8 +2345,8 @@ object ContinuousIngest {
   /** Marker stamped INSIDE a `batch=` dir that [[compactTable]] built
     * by consolidating several source partitions (written into the
     * hidden tmp before any source is deleted, so it rides the same
-    * crash-safe swap as the data; propagated through later
-    * re-consolidations and migration rewrites). Provenance is
+    * crash-safe swap as the data; carried through takedown rewrites
+    * by [[rewritePartition]]). Provenance is
     * partition-level in this engine — a consolidated dir's rows span
     * every batch below the compaction horizon, so per-batch faces
     * ([[rollbackBatch]]) must refuse it rather than attribute its
@@ -2591,7 +2391,6 @@ object ContinuousIngest {
     * [[compactState]] — rewrites; they are left alone here. */
   private def foldStatsDeltas(spark: SparkSession, st: IngestState,
                               upToBatch: Long): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val fs = fsFor(spark, st.statsPath)
     val statsRoot = new HPath(st.statsPath)
     val deltaRoot = new HPath(st.statsDeltasPath)
@@ -2687,7 +2486,6 @@ object ContinuousIngest {
   }
 
   private val DeletePendingDir = ".delete_pending"
-  private val DeleteCaptureDir = ".delete_capture"
   private val DeleteDiscardedDir = ".delete_discarded"
   private val PurgeTmpPrefix = ".purge_tmp_batch="
 
@@ -2723,8 +2521,8 @@ object ContinuousIngest {
     *    and [[indexDrift]] should see them.
     *
     * CRASH-SAFE, idempotent, retry-to-complete: the tombstone set
-    * (doc_id, digest, carry flag, op identity [, per-doc stats
-    * factors on V2]) is captured and committed to a hidden
+    * (doc_id, op identity, per-doc stats factors) is captured and
+    * committed to a hidden
     * pending dir FIRST (gated on Spark's `_SUCCESS`, like
     * compaction's tmp); each partition rewrite goes through a marked
     * `.purge_tmp_batch=` swap with the same recovery rules as
@@ -2751,11 +2549,9 @@ object ContinuousIngest {
     * (takedown-scale, not corpus-scale — removing a large fraction of
     * the corpus is a [[rebuildIndexes]]-class operation).
     *
-    * Cost, on a V2-digests root (any root bootstrapped at or after
-    * the per-doc digest schema — [[migrateDigests]] upgrades older
-    * ones): NO corpus text reads at all. The capture and the
-    * survivor digest-carry check are joins against the slim per-doc
-    * digest table (~50 bytes/row, column-pruned), the stats
+    * Cost: NO corpus text reads at all. The capture is a join against
+    * the slim per-doc digest table (~50 bytes/row, column-pruned), the
+    * stats
     * adjustment is a 1-row NEGATIVE partial summed from the captured
     * per-doc factors (keyed by the capture-stamped application id —
     * overwrite-idempotent under recovery, additive across
@@ -2765,8 +2561,7 @@ object ContinuousIngest {
     * that partition holds — text is touched only inside affected docs
     * partitions, never corpus-wide; ContinuousIngestSpec pins this by
     * deleting from a root whose docs table has NO text column at
-    * all). A legacy root keeps the pre-V2 shape (two corpus text
-    * passes + wholesale stats re-anchor) until migrated.
+    * all).
     *
     * Returns the number of distinct docs actually deleted (requested
     * ids absent from the corpus are ignored). */
@@ -2776,7 +2571,7 @@ object ContinuousIngest {
     // context, the rebuildIndexes contract); compaction swaps BEFORE
     // the tombstone work, or the capture reads tables whose rows are
     // hidden in a crashed compaction's tmp (see recoverCompactionSwaps)
-    refuseSnapshotRoot(spark, st, "deleteDocs")
+    requireWriterRoot(spark, st, "deleteDocs")
     recoverIndexSwap(spark, st, asWriter = true)
     recoverCompactionSwaps(spark, st)
     recoverDeletes(spark, st)
@@ -2792,16 +2587,6 @@ object ContinuousIngest {
     applyPendingDelete(spark, st)
   }
 
-  /** Capture + commit the tombstone intent for `reqs` — `(doc_id,
-    * op_id, requested_at)` rows, possibly spanning several takedown
-    * requests ([[processDeleteQueue]] passes a union of queued ops; a
-    * doc named by two requests purges once but is attributed to BOTH
-    * ops in the audit log). Ids absent from the corpus drop out here.
-    * On a V2 root both passes join the slim per-doc digest table
-    * (metadata cost, no text reads); on a legacy root they hash
-    * corpus text (the pre-V2 shape). The capture dir is hidden
-    * staging with no authority; the pending dir's `_SUCCESS` is the
-    * commit point. */
   /** Rows-per-file bound for the takedown artifacts (the tombstone
     * capture, the pending intent, the audit-log merges) — sized so a
     * typical takedown still writes one file, while a BULK purge (a
@@ -2825,63 +2610,35 @@ object ContinuousIngest {
   private[graft] def takedownFilesFor(nRows: Long): Int =
     filesFor(nRows, takedownRowsPerFile)
 
+  /** Capture + commit the tombstone intent for `reqs` — `(doc_id,
+    * op_id, requested_at)` rows, possibly spanning several takedown
+    * requests ([[processDeleteQueue]] passes a union of queued ops; a
+    * doc named by two requests purges once but is attributed to BOTH
+    * ops in the audit log). Ids absent from the corpus drop out here.
+    * One join against the slim per-doc digest table (metadata cost,
+    * no text reads) picks up each matched doc's stats factors; the
+    * pending dir's `_SUCCESS` is the commit point. */
   private def captureTombstone(spark: SparkSession, st: IngestState,
                                reqs: DataFrame,
                                excludeBatch: Long = Long.MinValue): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val fs = fsFor(spark, st.root)
-    val capture = new HPath(st.root, DeleteCaptureDir)
-    val pending = new HPath(st.root, DeletePendingDir)
-    fs.delete(capture, true)
-    // pin the distinct requested ids ONCE: the set is used three
-    // times (the file-count bound below, the broadcast capture join,
-    // the carry check's anti-join), and a deleteDocs caller may pass
-    // a COMPUTED frame (a corpus scan selecting ids) whose
-    // re-evaluation per use would triple the takedown's detection
-    // cost. Request-sized blocks, dropped with the frame.
+    // pin the distinct requested ids ONCE: the set is used twice (the
+    // file-count bound below, the broadcast capture join), and a
+    // deleteDocs caller may pass a COMPUTED frame (a corpus scan
+    // selecting ids) whose re-evaluation per use would double the
+    // takedown's detection cost. Request-sized blocks, dropped with
+    // the frame.
     val del = reqs.select("doc_id").distinct().localCheckpoint()
-    // bounds the artifact files: capture and pending rows are each ≤
-    // the distinct requested ids (matched docs; multi-op attribution
-    // joins back against `reqs`)
+    // bounds the artifact files: pending rows are ≤ the distinct
+    // requested ids (matched docs; multi-op attribution joins back
+    // against `reqs`)
     val nFiles = takedownFilesFor(del.count())
-    val v2 = digestsV2(spark, st)
-    // pass 1 — capture the matched docs' (doc_id, digest [, per-doc
-    // stats factors]); materialized (hidden dir, no authority) so the
-    // carry check and the tombstone write don't recompute the join.
     // `excludeBatch` keeps an IN-FLIGHT ingest batch's rows out of
     // the capture (the stream-boundary drain): purging a doc the
     // replay window still re-delivers would be resurrected by the
     // replay's partition overwrite — such docs are "not yet
     // committed" at process time and are judged then, like any id
-    // that hasn't arrived
-    (if (v2)
-       readTable(spark, st.digestsPath, excludeBatch = excludeBatch)
-         .join(broadcast(del), Seq("doc_id"))
-         .select(col("doc_id"), col("text").as("digest"),
-           col("n_chars"), col("n_ws_tokens"))
-     else
-       readTable(spark, st.docsPath, excludeBatch = excludeBatch)
-         .join(broadcast(del), Seq("doc_id"))
-         .select(col("doc_id"), md5(col("text")).as("digest")))
-      .repartition(nFiles).write.mode("overwrite").parquet(capture.toString)
-    val hit = spark.read.parquet(capture.toString)
-    // pass 2 — a digest leaves the admit table only when NO surviving
-    // doc still carries it (non-deduplicated bootstrap corpora can
-    // hold several doc_ids with one text); a slim digest-table
-    // self-check on V2, a column-pruned content-hash pass over
-    // survivors on legacy — both pre-filtered by the broadcast tomb
-    // digests
-    val carried =
-      (if (v2)
-         readTable(spark, st.digestsPath, excludeBatch = excludeBatch)
-           .join(broadcast(del), Seq("doc_id"), "left_anti")
-           .select(col("text").as("digest"))
-       else
-         readTable(spark, st.docsPath, excludeBatch = excludeBatch)
-           .join(broadcast(del), Seq("doc_id"), "left_anti")
-           .select(md5(col("text")).as("digest")))
-        .join(broadcast(hit.select("digest").distinct()), Seq("digest"), "left_semi")
-        .distinct()
+    // that hasn't arrived.
+    //
     // `app_id` is stamped per CAPTURE, not per request: it is the
     // application identity the stats-delta key needs. Two
     // applications of the SAME op ids are a real possibility — a
@@ -2893,18 +2650,16 @@ object ContinuousIngest {
     // delta and permanently overcount). Recovery re-runs replay the
     // COMMITTED tombstone, so they see the same app_id and stay
     // overwrite-idempotent.
-    hit.join(broadcast(carried.withColumn("_carried", lit(true))),
-        Seq("digest"), "left")
+    readTable(spark, st.digestsPath, excludeBatch = excludeBatch)
+      .join(broadcast(del), Seq("doc_id"))
+      .select(col("doc_id"), col("n_chars"), col("n_ws_tokens"))
       .join(broadcast(reqs.select("doc_id", "op_id", "requested_at")),
         Seq("doc_id"))
       .withColumn("app_id", lit(java.util.UUID.randomUUID().toString))
-      .select(Seq(col("doc_id"), col("digest"),
-          col("_carried").isNull.as("purge_digest"),
-          col("op_id"), col("requested_at"), col("app_id")) ++
-        (if (v2) Seq(col("n_chars"), col("n_ws_tokens")) else Nil): _*)
-      .repartition(nFiles).write.mode("overwrite").parquet(pending.toString)
-    fs.delete(capture, true)
-    ()
+      .select("doc_id", "op_id", "requested_at", "app_id", "n_chars",
+        "n_ws_tokens")
+      .repartition(nFiles).write.mode("overwrite")
+      .parquet(s"${st.root}/$DeletePendingDir")
   }
 
   /** Complete a [[deleteDocs]] interrupted by a crash. Idempotent and
@@ -2924,9 +2679,7 @@ object ContinuousIngest {
     * replaces it. Returns the number of docs whose completed delete
     * this call finished (0 when there was nothing pending). */
   def recoverDeletes(spark: SparkSession, st: IngestState): Long = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val fs = fsFor(spark, st.root)
-    fs.delete(new HPath(st.root, DeleteCaptureDir), true)
     val pending = new HPath(st.root, DeletePendingDir)
     if (!fs.exists(pending)) return 0L
     if (!fs.exists(new HPath(pending, "_SUCCESS"))) {
@@ -2975,19 +2728,14 @@ object ContinuousIngest {
     *    incident-response window; past it, issue [[deleteDocs]] with
     *    the delivery's doc ids from source lineage.
     *  - the dir carries [[ConsolidatedMarker]] (stamped by every
-    *    consolidation since the marker discipline), or — legacy
-    *    defense for roots consolidated by pre-marker code — its
-    *    stats partition holds more than the single 1-row partial an
-    *    original append writes ([[foldStatsDeltas]] only ever touches
-    *    a partition compaction then merges, so >1 rows ⇔ merged).
+    *    consolidation, carried through takedown rewrites).
     *
     * Single-writer maintenance context, like every writer face.
     * Returns the number of docs purged (0 for an admitted-empty
     * batch — every row was a duplicate). */
   def rollbackBatch(spark: SparkSession, st: IngestState,
                     batchId: Long): Long = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    refuseSnapshotRoot(spark, st, "rollbackBatch")
+    requireWriterRoot(spark, st, "rollbackBatch")
     require(batchId >= 0L,
       s"rollbackBatch: batch=$batchId is the bootstrap — the root's " +
         "founding population, not a delivery; rolling it back is a " +
@@ -3011,34 +2759,6 @@ object ContinuousIngest {
         "horizon, not one delivery; rolling it back would purge them " +
         "all. Issue deleteDocs with the delivery's doc ids from " +
         "source lineage instead.")
-    // legacy roots: consolidations made before the marker discipline
-    // carry no marker — but an ORIGINAL append's stats partition holds
-    // exactly one NON-NEGATIVE 1-row partial, while a merged one holds
-    // one per absorbed batch. Count only the non-negative rows:
-    // foldStatsDeltas can land strictly-negative takedown partials in
-    // the max committed stats partition even when the docs-side
-    // compaction was a single-partition no-op (a fully-purged earlier
-    // dir leaves one docs partition, unmarked) — counting those rows
-    // misdiagnosed a genuine single-delivery batch as a pre-marker
-    // consolidation and spuriously refused its rollback.
-    val statsDir = new HPath(st.statsPath, s"batch=$batchId")
-    val statsFs = fsFor(spark, st.statsPath)
-    // skip when the partition is absent or holds no data files (a
-    // crashed batch's half-written stats — the docs partition passed
-    // the marker check, and a consolidation cannot leave stats
-    // half-written: compaction completes stats before it returns)
-    if (statsFs.exists(statsDir) && statsFs.listStatus(statsDir)
-        .exists(f => f.isFile && !f.getPath.getName.startsWith(".") &&
-          !f.getPath.getName.startsWith("_"))) {
-      val nPartials = spark.read.parquet(statsDir.toString)
-        .where(col("n_docs") >= 0).count()
-      require(nPartials == 1L,
-        s"rollbackBatch: stats/batch=$batchId holds $nPartials " +
-          "original (non-negative) partial rows — this partition is a " +
-          "consolidation from before the marker discipline, spanning " +
-          "several deliveries. Issue deleteDocs with the delivery's " +
-          "doc ids from source lineage instead.")
-    }
     deleteDocs(spark, st,
       spark.read.parquet(dir.toString).select("doc_id"))
   }
@@ -3060,12 +2780,8 @@ object ContinuousIngest {
     * Read-only by design: it does NOT resolve crashed compaction
     * swaps (that is a writer's entry step — [[rollbackBatch]] itself
     * does it), so a dir hidden by a mid-crash swap shows up only
-    * after the next writer face runs recovery. Pre-marker legacy
-    * consolidations are invisible to the marker check here;
-    * [[rollbackBatch]]'s stats-cardinality defense still refuses them
-    * individually. */
+    * after the next writer face runs recovery. */
   def rollbackWindow(spark: SparkSession, st: IngestState): DataFrame = {
-    import org.apache.hadoop.fs.{Path => HPath}
     import spark.implicits._
     val fs = fsFor(spark, st.docsPath)
     val root = new HPath(st.docsPath)
@@ -3115,42 +2831,31 @@ object ContinuousIngest {
     * tiering collapses ~#affected-partitions sequential jobs to four
     * tier critical paths.
     *
-    * Stats: a V2 tombstone carries the per-doc length/token factors
+    * Stats: the tombstone carries the per-doc length/token factors
     * captured from the digest table, so the adjustment is ONE 1-row
     * NEGATIVE partial (count/char/token sums over the distinct
-    * tombstoned docs) written op-keyed under `stats_deltas/` —
+    * tombstoned docs) written app-keyed under `stats_deltas/` —
     * overwrite-idempotent across recovery re-runs (the tombstone is
     * the deterministic input), summed by [[readStats]] beside the
-    * per-batch positives, and never touching corpus text. A legacy
-    * tombstone (no factors) falls back to the WHOLESALE re-anchor:
-    * all partials replaced by one consolidated partial over the
-    * purged docs table, installed under the highest existing stats id
-    * through the marked-tmp swap — per-partition recompute would need
-    * a docs↔stats dir correspondence that diverged layouts don't
-    * guarantee. A crash anywhere between the stats adjustment and the
-    * pending retire replays idempotently — the pending dir retires
-    * strictly last. */
+    * per-batch positives, and never touching corpus text. A crash
+    * anywhere between the stats adjustment and the pending retire
+    * replays idempotently — the pending dir retires strictly last. */
   private def applyPendingDelete(spark: SparkSession, st: IngestState): Long = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val fs = fsFor(spark, st.root)
     val pending = new HPath(st.root, DeletePendingDir)
     val tomb = spark.read.parquet(pending.toString)
     val tombIds = tomb.select("doc_id").distinct()
-    val digs = tomb.where(col("purge_digest")).select("digest").distinct()
-    def anti(keyCol: String, keys: DataFrame = tombIds,
-             keysCol: String = "doc_id"): DataFrame => DataFrame =
-      df => df.join(broadcast(keys.select(col(keysCol).as(keyCol))),
+    def anti(keyCol: String): DataFrame => DataFrame =
+      df => df.join(broadcast(tombIds.select(col("doc_id").as(keyCol))),
         Seq(keyCol), "left_anti")
     // affected dirs for ONE table, against its own layout: pruned
     // key-column scan semi-joined with the broadcast tombstones
-    def affected(path: String, keyCol: String, packedIds: Boolean,
-                 keys: DataFrame = tombIds,
-                 keysCol: String = "doc_id"): Seq[Long] = {
+    def affected(path: String, keyCol: String, packedIds: Boolean): Seq[Long] = {
       val withB = spark.read.option("basePath", path).parquet(path)
       val keyed =
         if (packedIds) withB.select(col("batch"), explode(col("ids")).as(keyCol))
         else withB.select(col("batch"), col(keyCol))
-      keyed.join(broadcast(keys.select(col(keysCol).as(keyCol))),
+      keyed.join(broadcast(tombIds.select(col("doc_id").as(keyCol))),
           Seq(keyCol), "left_semi")
         .select(col("batch").cast("long")).distinct()
         .collect().map(_.getLong(0)).sorted.toSeq
@@ -3191,74 +2896,34 @@ object ContinuousIngest {
       })
     // TIER 2 — docs
     purgeTable(st.docsPath, "doc_id", packedIds = false, anti("doc_id"))
-    // stats. V2 tombstones (per-doc factors captured from the digest
-    // table) subtract a 1-row NEGATIVE partial — app-keyed overwrite
+    // stats: subtract a 1-row NEGATIVE partial — app-keyed overwrite
     // under stats_deltas/, deterministic from the committed tombstone,
     // so recovery re-runs rewrite identical rows; corpus text is never
-    // read. Legacy tombstones re-anchor WHOLESALE (see scaladoc) —
-    // UNCONDITIONAL while a pending delete is being applied, because
-    // no cheap signal distinguishes "already re-anchored by the
-    // crashed attempt" from "still stale" across every layout.
+    // read. One delta per APPLICATION, keyed by the capture-stamped
+    // app_id: unique across applications — a queued-takedown retry
+    // whose re-capture is non-empty (ids re-ingested after the first
+    // application purged them) is a SECOND application of the same op
+    // ids, and both purged real rows, so both deltas must count (an
+    // op-keyed overwrite here would destroy the first and permanently
+    // overcount stats).
     val n = tombIds.count()
-    val v2Pending = tomb.columns.contains("n_chars")
-    if (v2Pending) {
-      if (n > 0 && fs.exists(new HPath(st.statsPath))) {
-        // one delta per APPLICATION, keyed by the capture-stamped
-        // app_id: deterministic across recovery re-runs (it rides the
-        // committed tombstone) and unique across applications — a
-        // queued-takedown retry whose re-capture is non-empty (ids
-        // re-ingested after the first application purged them) is a
-        // SECOND application of the same op ids, and both purged real
-        // rows, so both deltas must count (an op-keyed overwrite here
-        // would destroy the first and permanently overcount stats).
-        // Pre-app_id pendings (one legacy crash window) fall back to
-        // the old min-op key.
-        val deltaOp =
-          if (tomb.columns.contains("app_id"))
-            tomb.agg(min(col("app_id"))).head().getString(0)
-          else tomb.agg(min(col("op_id"))).head().getString(0)
-        tomb.select("doc_id", "n_chars", "n_ws_tokens").distinct()
-          .agg((-count(lit(1))).cast("long").as("n_docs"),
-            (-coalesce(sum(col("n_chars")), lit(0L))).cast("long").as("n_chars"),
-            (-coalesce(sum(col("n_ws_tokens")), lit(0L))).cast("long")
-              .as("n_ws_tokens"))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"${st.statsDeltasPath}/op=$deltaOp")
-      }
-    } else if (fs.exists(new HPath(st.statsPath)) &&
-        fs.exists(new HPath(st.docsPath))) {
-      resolvePurgeTmps(spark, st.statsPath)
-      val statDirs = fs.listStatus(new HPath(st.statsPath))
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-        .map(_.getPath.getName.stripPrefix("batch=").toLong).sorted
-      if (statDirs.nonEmpty) {
-        val target = statDirs.max
-        rewritePartition(spark, st.statsPath, target,
-          _ => partialStats(readTable(spark, st.docsPath)))
-        statDirs.filter(_ != target).foreach { b =>
-          fs.delete(new HPath(s"${st.statsPath}/batch=$b"), true)
-        }
-      }
+    if (n > 0 && fs.exists(new HPath(st.statsPath))) {
+      val appId = tomb.agg(min(col("app_id"))).head().getString(0)
+      tomb.select("doc_id", "n_chars", "n_ws_tokens").distinct()
+        .agg((-count(lit(1))).cast("long").as("n_docs"),
+          (-coalesce(sum(col("n_chars")), lit(0L))).cast("long").as("n_chars"),
+          (-coalesce(sum(col("n_ws_tokens")), lit(0L))).cast("long")
+            .as("n_ws_tokens"))
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"${st.statsDeltasPath}/op=$appId")
     }
     // the admit key goes last — a digest is never gone while its doc
     // remains, so every crash window keeps exact-dup admission
     // conservative (identical re-ingest stays dropped until the
-    // delete fully completes). On a V2 root the rows are per-doc, so
-    // the purge is the same doc_id anti-join as every other table —
-    // carried digests survive automatically because their surviving
-    // docs' rows stay; legacy purges by digest under the carry flag.
-    if (fs.exists(new HPath(st.digestsPath))) {
-      resolvePurgeTmps(spark, st.digestsPath)
-      if (digestsV2(spark, st))
-        inParallel(affected(st.digestsPath, "doc_id", packedIds = false)
-          .map(b => () => rewritePartition(spark, st.digestsPath, b,
-            anti("doc_id"))))
-      else
-        inParallel(affected(st.digestsPath, "text", packedIds = false,
-            keys = digs, keysCol = "digest")
-          .map(b => () => rewritePartition(spark, st.digestsPath, b,
-            anti("text", digs, "digest"))))
-    }
+    // delete fully completes). The rows are per-doc, so the purge is
+    // the same doc_id anti-join as every other table — a digest
+    // another surviving doc carries stays with that doc's row.
+    purgeTable(st.digestsPath, "doc_id", packedIds = false, anti("doc_id"))
     // audit trail BEFORE the intent retires: a takedown must stay
     // provable after its tombstone is destroyed. (doc_id, op_id,
     // requested_at) only — deliberately NO digest and NO text, so the
@@ -3341,7 +3006,7 @@ object ContinuousIngest {
     * ALL in ONE purge pass, so N queued requests cost one set of
     * detection scans + partition rewrites instead of N (the per-op
     * fixed job overhead is the dominant cost of small takedowns —
-    * ServeProbe at 200k docs measures a single 1000-id op at ~10 s
+    * SCALING.md measures a single 1000-id op at ~10 s on 200k docs
     * even with the tiered-concurrent rewrites, and a 3-op drain at
     * ~9 s vs ~22 s sequential). Queued
     * requests don't block ingest (only an in-flight tombstone intent
@@ -3351,8 +3016,7 @@ object ContinuousIngest {
     * request's op id. */
   def enqueueDelete(spark: SparkSession, st: IngestState,
                     ids: DataFrame): String = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    refuseSnapshotRoot(spark, st, "enqueueDelete")
+    requireWriterRoot(spark, st, "enqueueDelete")
     val opId = java.util.UUID.randomUUID().toString
     val fs = fsFor(spark, st.root)
     // ATOMIC PUBLISH — write to a hidden temp, then rename into the
@@ -3398,9 +3062,7 @@ object ContinuousIngest {
     * capture-keyed stats delta (never overwriting the first
     * application's), and the audit log MERGES (union + distinct)
     * into the op dir instead of overwriting, so the first
-    * application's rows stay provable. A request dir WITHOUT `_SUCCESS` is a
-    * crashed [[enqueueDelete]] whose caller never received an op id —
-    * discarded with a warning. Same contract as [[deleteDocs]]
+    * application's rows stay provable. Same contract as [[deleteDocs]]
     * otherwise (single-writer maintenance context, between batches,
     * committed ids only — judged at PROCESS time). Returns the number
     * of distinct docs purged by this drain.
@@ -3412,8 +3074,7 @@ object ContinuousIngest {
     * Such docs are simply not committed yet at process time. */
   def processDeleteQueue(spark: SparkSession, st: IngestState,
                          excludeBatch: Long = Long.MinValue): Long = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    refuseSnapshotRoot(spark, st, "processDeleteQueue")
+    requireWriterRoot(spark, st, "processDeleteQueue")
     recoverIndexSwap(spark, st, asWriter = true)
     // BEFORE the capture: a crashed compaction's hidden tmp would
     // otherwise make this drain judge queued ids against tables whose
@@ -3432,7 +3093,7 @@ object ContinuousIngest {
     // grace window; a swept temp's caller never received an op id,
     // exactly like the torn-dir case below
     val nowMs = System.currentTimeMillis()
-    def newestMtime(p: org.apache.hadoop.fs.Path): Long = {
+    def newestMtime(p: HPath): Long = {
       val ss = fs.listStatus(p)
       (fs.getFileStatus(p).getModificationTime +:
         ss.map(s => if (s.isDirectory) newestMtime(s.getPath)
@@ -3456,24 +3117,14 @@ object ContinuousIngest {
           "received an op id); re-issue the request if it was real.")
         fs.delete(d.getPath, true)
       }
-    // only published `op=` dirs: an in-flight enqueue's hidden temp
+    // only published `op=` dirs — committed by construction (enqueue
+    // publishes by rename): an in-flight enqueue's hidden temp
     // (concurrent with this drain by design under the stream-boundary
     // face) is dot-prefixed and must not be touched — its rename will
     // publish it for a LATER drain
-    val dirs = fs.listStatus(qRoot)
+    val committed = fs.listStatus(qRoot)
       .filter(d => d.isDirectory && d.getPath.getName.startsWith("op="))
       .map(_.getPath)
-    val (committed, torn) =
-      dirs.partition(d => fs.exists(new HPath(d, "_SUCCESS")))
-    torn.foreach { d =>
-      // can only be a pre-atomic-publish legacy dir (enqueueDelete now
-      // renames complete dirs in): a crashed in-place write whose
-      // caller never received an op id
-      Console.err.println(s"[graft] WARNING: discarding an uncommitted " +
-        s"takedown request at $d (a crashed enqueueDelete — its caller " +
-        "never received an op id); re-issue the request if it was real.")
-      fs.delete(d, true)
-    }
     if (committed.isEmpty) return 0L
     val reqs = spark.read.parquet(committed.map(_.toString).toSeq: _*)
       .select("doc_id", "op_id", "requested_at")
@@ -3486,39 +3137,6 @@ object ContinuousIngest {
     n
   }
 
-  /** MIGRATION: rebuild the digests table from docs in the V2 per-doc
-    * schema — `(doc_id, text = md5, n_chars, n_ws_tokens)` — and
-    * stamp the marker that switches [[deleteDocs]] onto the
-    * no-text-scan paths. One text-column pass over the corpus, ONCE;
-    * after it every takedown is metadata-cost (see [[deleteDocs]]).
-    * The digest table's content is derivable from docs alone (it is
-    * exactly md5 over the corpus), so the rebuild writes one digests
-    * partition per DOCS batch dir and deletes digests dirs docs
-    * doesn't have (layouts can diverge through crashed compactions;
-    * content equality is what matters, and readers take the union).
-    * Idempotent and crash-tolerant: a crash mid-migration leaves a
-    * mixed-schema table WITHOUT the marker — every digest reader
-    * selects the shared `text` column, so admission stays correct,
-    * deletes keep the legacy path, and a re-run completes the
-    * migration. No-op on a root that is already V2. */
-  def migrateDigests(spark: SparkSession, st: IngestState): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    // a pending tombstone belongs to the OLD schema's delete path —
-    // complete it against the state it captured first
-    recoverDeletes(spark, st)
-    if (digestsV2(spark, st)) return
-    val fs = fsFor(spark, st.root)
-    val docDirs = batchDirNames(spark, st.docsPath)
-    docDirs.foreach { b =>
-      digestRows(spark.read.parquet(s"${st.docsPath}/$b"))
-        .write.mode("overwrite").parquet(s"${st.digestsPath}/$b")
-    }
-    (batchDirNames(spark, st.digestsPath) -- docDirs).foreach { b =>
-      fs.delete(new HPath(s"${st.digestsPath}/$b"), true)
-    }
-    writeDigestsV2Marker(spark, st)
-  }
-
   /** The takedown audit log: one row per deleted doc per completed
     * [[deleteDocs]] operation — `(doc_id, op_id, requested_at)`,
     * append-only across operations (each op owns its `op=` partition),
@@ -3526,7 +3144,7 @@ object ContinuousIngest {
     * content. Empty (with this schema) before any delete completes. */
   def deletesLog(spark: SparkSession, st: IngestState): DataFrame = {
     val path = s"${st.root}/deletes_log"
-    if (fsFor(spark, path).exists(new org.apache.hadoop.fs.Path(path)))
+    if (fsFor(spark, path).exists(new HPath(path)))
       // distinct IS the contract (one row per deleted doc per op): a
       // row can legitimately appear in two dirs — compaction absorbed
       // the op dir and a later second application of the same op
@@ -3545,8 +3163,6 @@ object ContinuousIngest {
             org.apache.spark.sql.types.TimestampType))))
   }
 
-  private val LogCompactTmp = ".log_compact_tmp"
-  private val CompactedOpDir = "op=_compacted"
   private val LogCompactTmpPrefix = ".log_compact_tmp_"
   private val CompactedEpochPrefix = "op=_compacted_"
   /** Epoch-dir budget before a compaction CONSOLIDATES (re-absorbs
@@ -3555,10 +3171,6 @@ object ContinuousIngest {
     * consolidation amortizes the full-history rewrite to once per
     * `MaxLogEpochs` passes instead of every pass. */
   private[graft] val MaxLogEpochs = 16
-  /** Legacy marker from the manifest-carrying first cut of the log
-    * compaction — swept on sight (see the merge-safety note below:
-    * retiring manifest-named sources is UNSOUND for the audit log). */
-  private val LegacyLogManifest = "_GRAFT_COMPACTED_OPS"
 
   /** Consolidate the takedown audit log's per-op dirs into PER-EPOCH
     * `op=_compacted_<N>` partitions — [[compactState]]'s maintenance
@@ -3581,9 +3193,7 @@ object ContinuousIngest {
     * amortizing the full rewrite to once per `MaxLogEpochs` passes.
     * Output files are bounded by `targetRowsPerFile`, never
     * `coalesce(1)` — compacting years of takedowns through one task
-    * and into one file was the accretion problem moved up a level. A
-    * surviving legacy `op=_compacted` dir is absorbed as a source
-    * (one-time migration).
+    * and into one file was the accretion problem moved up a level.
     *
     * CRASH-SAFE by SET SEMANTICS, deliberately NOT by the
     * [[foldStatsDeltas]] manifest discipline: log rows are a set
@@ -3607,28 +3217,10 @@ object ContinuousIngest {
     * re-absorb next time. */
   private[graft] def compactDeletesLog(spark: SparkSession, st: IngestState,
                                 targetRowsPerFile: Long = 1000000L): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val fs = fsFor(spark, st.root)
     val logRoot = new HPath(s"${st.root}/deletes_log")
     if (!fs.exists(logRoot)) return
-    val legacyCompacted = new HPath(logRoot, CompactedOpDir)
-    // sweep the legacy manifest wherever it survived — its retire
-    // semantics are the unsound path this discipline replaces, and
-    // leaving it could only confuse a rolled-back binary
-    fs.delete(new HPath(legacyCompacted, LegacyLogManifest), false)
-    // recovery 1: a leftover LEGACY tmp (pre-epoch builds targeted
-    // `op=_compacted` directly) — same windows as before
-    val legacyTmp = new HPath(logRoot, LogCompactTmp)
-    if (fs.exists(legacyTmp)) {
-      fs.delete(new HPath(legacyTmp, LegacyLogManifest), false)
-      if (fs.exists(new HPath(legacyTmp, "_SUCCESS")) &&
-          !fs.exists(legacyCompacted)) {
-        require(fs.rename(legacyTmp, legacyCompacted),
-          s"compactDeletesLog: recovery rename $legacyTmp failed — " +
-            "tmp retained, re-run compaction")
-      } else fs.delete(legacyTmp, true)
-    }
-    // recovery 2: leftover epoch tmps — marked + epoch dir absent is
+    // recovery: leftover epoch tmps — marked + epoch dir absent is
     // mid-install (finish it; the tmp is complete, epoch names are
     // never reused), anything else is a reproducible mid-write crash
     fs.listStatus(logRoot)
@@ -3650,11 +3242,8 @@ object ContinuousIngest {
       .map(_.getPath)
     val (epochDirs, plainOps) =
       listOps().partition(_.getName.startsWith(CompactedEpochPrefix))
-    // new sources: real op dirs + a surviving legacy `op=_compacted`
-    // (absorbed once, like any source — set semantics make that free)
     val sources = plainOps
-      .filter(p => fs.exists(new HPath(p, "_SUCCESS")) ||
-        p.getName == CompactedOpDir)
+      .filter(p => fs.exists(new HPath(p, "_SUCCESS")))
       .sortBy(_.getName)
     val epochs = epochDirs.flatMap(p =>
       p.getName.stripPrefix(CompactedEpochPrefix).toLongOption).sorted
@@ -3690,7 +3279,6 @@ object ContinuousIngest {
     * source if still present, rename the tmp in); a tmp WITHOUT it is
     * a mid-write crash whose source is intact (discard). */
   private def resolvePurgeTmps(spark: SparkSession, path: String): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val fs = fsFor(spark, path)
     val root = new HPath(path)
     if (!fs.exists(root)) return
@@ -3701,6 +3289,9 @@ object ContinuousIngest {
         val b = tmp.getName.stripPrefix(PurgeTmpPrefix).toLong
         if (fs.exists(new HPath(tmp, "_SUCCESS"))) {
           val dst = new HPath(root, s"batch=$b")
+          // a crash before rewritePartition carried the marker over
+          if (fs.exists(new HPath(dst, ConsolidatedMarker)))
+            fs.create(new HPath(tmp, ConsolidatedMarker), true).close()
           fs.delete(dst, true)
           require(fs.rename(tmp, dst),
             s"resolvePurgeTmps: rename $tmp -> $dst failed — tmp retained " +
@@ -3714,12 +3305,14 @@ object ContinuousIngest {
 
   /** Crash-safe copy-on-write rewrite of one `batch=` partition:
     * purged rows land in a marked hidden tmp first (`_SUCCESS` gates
-    * authority, exactly like compaction), then the swap. A missing
-    * source partition is a no-op (this table never had that batch, or
-    * an earlier pass already swapped it). */
+    * authority, exactly like compaction), then the swap. The
+    * [[ConsolidatedMarker]] rides into the tmp before the swap, so a
+    * takedown never turns a consolidated dir back into an
+    * attributable one. A missing source partition is a no-op (this
+    * table never had that batch, or an earlier pass already swapped
+    * it). */
   private def rewritePartition(spark: SparkSession, path: String, b: Long,
                                f: DataFrame => DataFrame): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val fs = fsFor(spark, path)
     val src = new HPath(path, s"batch=$b")
     if (!fs.exists(src)) return
@@ -3731,6 +3324,8 @@ object ContinuousIngest {
       s"rewritePartition: $tmp committed without a _SUCCESS marker " +
         "(mapreduce.fileoutputcommitter.marksuccessfuljobs must stay " +
         "enabled for crash-safe deletes) — source left untouched")
+    if (fs.exists(new HPath(src, ConsolidatedMarker)))
+      fs.create(new HPath(tmp, ConsolidatedMarker), true).close()
     fs.delete(src, true)
     require(fs.rename(tmp, src),
       s"rewritePartition: final rename $tmp failed — tmp retained " +
@@ -3771,7 +3366,7 @@ object ContinuousIngest {
     // the deleteDocs ordering), then crashed COMPACTION swaps (their
     // hidden tmps blind the delete recovery's and the first drain's
     // table reads), then the tombstone.
-    refuseSnapshotRoot(stream.sparkSession, st, "start")
+    requireWriterRoot(stream.sparkSession, st, "start")
     recoverIndexSwap(stream.sparkSession, st, asWriter = true)
     recoverCompactionSwaps(stream.sparkSession, st)
     recoverDeletes(stream.sparkSession, st)

@@ -172,7 +172,7 @@ object Snapshot {
     * out of the vacuum — while everything else prunes on schedule, so
     * N replicas syncing on a cadence can never suspend takedown
     * propagation root-wide. A pin WITHOUT a scope (just-acquired,
-    * manual, or legacy) defers everything. [[restore]], [[sync]]'s
+    * or manual) defers everything. [[restore]], [[sync]]'s
     * source side and [[verifyVersion]] hold one for the duration of
     * their read, so a scheduled export can never delete the version
     * tree or pool dirs a multi-hour read is streaming. Serving faces
@@ -295,8 +295,9 @@ object Snapshot {
     ContinuousIngest.refuseNonAtomicRename(exportRoot,
       "Snapshot.export exportRoot")
     val srcFs = ContinuousIngest.fsFor(spark, st.root)
-    require(!srcFs.exists(new HPath(st.root,
-        ContinuousIngest.SnapshotMarkerFile)),
+    // the source must carry this build's state format (the version
+    // tree below is stamped with it) and be a primary
+    require(!ContinuousIngest.requireFormat(spark, st.root, "Snapshot.export"),
       s"Snapshot.export: ${st.root} is itself a snapshot tree — " +
         "export from the PRIMARY state root (snapshot-of-snapshot " +
         "fan-out is not supported; ship the same export root instead)")
@@ -435,7 +436,7 @@ object Snapshot {
       }
     }
     // exported batch tables: manifest + root-level marker files
-    // (docs-slim, digests-v2 — generically, any `_` file at the
+    // (docs-slim — generically, any `_` file at the
     // table root except Spark's own bookkeeping)
     manifests.foreach { case (t, lines) =>
       val dst = new HPath(vtmp, t)
@@ -460,6 +461,10 @@ object Snapshot {
     }
     bloomRel.foreach(rel =>
       writeText(fs, new HPath(vtmp, BloomPointerFile), rel))
+    // the source's format, stamped as a snapshot: readers accept the
+    // tree, every writer face refuses it
+    writeText(fs, new HPath(vtmp, ContinuousIngest.FormatFile),
+      ContinuousIngest.stampText(snapshot = true))
 
     // ---- the copy itself: one Spark job, one task per file. Every
     // task verifies ITS file (length + content md5, re-read from the
@@ -562,23 +567,28 @@ object Snapshot {
   /** Pool rel paths referenced by the COMPLETE versions at `exRoot`
     * (manifest lines + bloom pointers). */
   private def referencedPoolDirs(fs: FileSystem, exRoot: HPath): Set[String] =
-    listVersionDirs(fs, exRoot).map(versionOf).flatMap { v =>
-      val vRoot = new HPath(exRoot, s"v=$v")
-      val fromManifests =
-        fs.listStatus(vRoot).toSeq.filter(_.isDirectory).flatMap { td =>
-          val mf = new HPath(td.getPath, ContinuousIngest.SnapshotDirsFile)
-          if (!fs.exists(mf)) Nil
-          else new String(ContinuousIngest.readFileBytes(fs, mf), "UTF-8")
-            .split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-            .map(_.split("\t", 2)(1))
-        }
-      val bloomPtr = new HPath(vRoot, BloomPointerFile)
-      val fromBloom =
-        if (!fs.exists(bloomPtr)) Nil
-        else Seq(new String(ContinuousIngest.readFileBytes(fs, bloomPtr),
-          "UTF-8").trim).map(p => p.substring(0, p.lastIndexOf('/')))
-      fromManifests ++ fromBloom
-    }.toSet
+    listVersionDirs(fs, exRoot).map(versionOf)
+      .flatMap(referencedBy(fs, exRoot, _)).toSet
+
+  /** Pool rel paths ONE version references (manifest lines + bloom
+    * pointer). */
+  private def referencedBy(fs: FileSystem, exRoot: HPath, v: Long): Seq[String] = {
+    val vRoot = new HPath(exRoot, s"v=$v")
+    val fromManifests =
+      fs.listStatus(vRoot).toSeq.filter(_.isDirectory).flatMap { td =>
+        val mf = new HPath(td.getPath, ContinuousIngest.SnapshotDirsFile)
+        if (!fs.exists(mf)) Nil
+        else new String(ContinuousIngest.readFileBytes(fs, mf), "UTF-8")
+          .split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
+          .map(_.split("\t", 2)(1))
+      }
+    val bloomPtr = new HPath(vRoot, BloomPointerFile)
+    val fromBloom =
+      if (!fs.exists(bloomPtr)) Nil
+      else Seq(new String(ContinuousIngest.readFileBytes(fs, bloomPtr),
+        "UTF-8").trim).map(p => p.substring(0, p.lastIndexOf('/')))
+    fromManifests ++ fromBloom
+  }
 
   /** Delete pool dirs no surviving version references; returns the
     * count (the GC half of retention — runs under the export lock).
@@ -623,12 +633,9 @@ object Snapshot {
     val fs = ContinuousIngest.fsFor(spark, exportRoot)
     val exRoot = fs.makeQualified(new HPath(exportRoot))
     listVersionDirs(fs, exRoot).map(versionOf).sorted.map { v =>
-      val fields = new String(ContinuousIngest.readFileBytes(fs,
-          new HPath(exRoot, s"v=$v/${ContinuousIngest.SnapshotMarkerFile}")),
-          "UTF-8")
-        .split("\n").map(_.trim).filter(_.contains("="))
-        .map { l => val Array(k, rest) = l.split("=", 2); k -> rest }
-        .toMap
+      val fields = parseKv(new String(ContinuousIngest.readFileBytes(fs,
+        new HPath(exRoot, s"v=$v/${ContinuousIngest.SnapshotMarkerFile}")),
+        "UTF-8"))
       (v,
         fields.get("created_ms").map(_.toLong).getOrElse(-1L),
         fields.getOrElse("source", ""),
@@ -648,16 +655,7 @@ object Snapshot {
             version: Long = -1L): IngestState = {
     val fs = ContinuousIngest.fsFor(spark, exportRoot)
     val exRoot = fs.makeQualified(new HPath(exportRoot))
-    val vs = listVersionDirs(fs, exRoot).map(versionOf).sorted
-    val v =
-      if (version >= 0L) {
-        require(vs.contains(version),
-          s"Snapshot.state: no complete version $version at " +
-            s"$exportRoot (have: ${vs.mkString(", ")})")
-        version
-      } else vs.lastOption.getOrElse(sys.error(
-        s"Snapshot.state: no complete snapshot at $exportRoot — " +
-          "run Snapshot.export first"))
+    val v = resolveVersion(fs, exRoot, version, "state")
     IngestState(new HPath(exRoot, s"v=$v").toString)
   }
 
@@ -735,13 +733,8 @@ object Snapshot {
     // and pool dirs this sync is streaming (it defers only what the
     // pin covers and ships on); acquired broad, narrowed to the
     // missing-version set once planned, released in the finally;
-    // crashed holders cleared with [[breakReadPins]]. The holder is a
-    // mutable ref because narrowing replaces the pin file (create-new-
-    // then-delete-old — no unpinned window) and the finally must
-    // release whichever pin is CURRENT.
-    val srcPin = new java.util.concurrent.atomic.AtomicReference[HPath](
-      if (pin) acquireReadPin(srcFs, srcEx, s"sync->$dstRoot") else null)
-    if (!pin) refuseMidExportUnpinned(srcFs, srcEx, "sync")
+    // crashed holders cleared with [[breakReadPins]]
+    val srcPin = new ReadPin(srcFs, srcEx, "sync", s"sync->$dstRoot", pin)
     try {
       val lock = acquireExportLock(fs, dstEx)
       try syncLocked(spark, srcFs, srcEx, fs, dstEx, srcPin)
@@ -749,16 +742,12 @@ object Snapshot {
         fs.delete(lock, false)
         ()
       }
-    } finally {
-      Option(srcPin.get).foreach(p => srcFs.delete(p, false))
-      ()
-    }
+    } finally srcPin.release()
   }
 
   private def syncLocked(spark: SparkSession, srcFs: FileSystem,
                          srcEx: HPath, fs: FileSystem, dstEx: HPath,
-                         srcPin: java.util.concurrent.atomic.AtomicReference[HPath])
-    : SyncResult = {
+                         srcPin: ReadPin): SyncResult = {
     sweepTmps(fs, dstEx)
     fs.mkdirs(new HPath(dstEx, "pool"))
     // lineage identity FIRST — the one check that holds even when the
@@ -767,9 +756,9 @@ object Snapshot {
     // different source) refuses by id before any marker comparison,
     // closing the hole where a mistyped dstRoot whose versions all
     // sat below the source's max passed every common-version and
-    // AHEAD check and was then silently pruned. A destination with NO
-    // id (empty dir, or a replica synced before ids existed) adopts
-    // the source's id below, after every divergence check passes.
+    // AHEAD check and was then silently pruned. An empty destination
+    // adopts the source's id below, after every divergence check
+    // passes.
     val srcId = readRootId(srcFs, srcEx)
     val dstId = readRootId(fs, dstEx)
     for (a <- srcId; b <- dstId)
@@ -807,48 +796,25 @@ object Snapshot {
         s"replica holds ${dstVs.mkString(", ")} — refusing to prune a " +
         "non-empty replica from an empty source (finish an export " +
         "there first, or pick the right source root)")
-    // an ID-LESS destination must PROVE replica-ness before anything
-    // can be pruned or adopted: either it is empty (a fresh replica
-    // root) or it shares a marker-verified common version with the
-    // source (the byte-equal markers above are the proof). Without
-    // this, a pre-identity export root mistyped as dstRoot — no id,
-    // no common versions, everything below the source's max — passed
-    // every check, was pruned, AND then adopted the wrong source's
-    // id, laundering the destruction the id exists to prevent.
-    require(dstId.nonEmpty || dstVs.isEmpty ||
-        dstVs.toSet.intersect(srcVs.toSet).nonEmpty,
-      s"Snapshot.sync: $dstEx carries no lineage id and shares no " +
-        s"version with the source (replica: ${dstVs.mkString(", ")}; " +
-        s"source: ${srcVs.mkString(", ")}) — cannot prove it is a " +
-        "replica of this source; syncing would prune its versions. If " +
-        "it IS a legacy replica that lagged past the source's " +
-        "retention, delete its versions deliberately (or re-seed an " +
-        "empty root); otherwise fix dstRoot.")
-    // the MIRROR case: an ID-LESS SOURCE (a legacy root never
-    // re-exported by id-stamping code) against an id-carrying
-    // destination. The id equality check above is vacuous with no
-    // source id, so the same proof is required of the destination —
-    // empty, or a marker-verified common version — before anything
-    // prunes. Without it, syncing a legacy source onto a mistyped
-    // id-carrying replica OF A DIFFERENT ROOT whose versions all sat
-    // below the source's max and shared nothing passed every check
-    // and silently pruned it: exactly the destruction the id was
-    // introduced to close, reopened through the legacy side.
-    require(srcId.nonEmpty || dstId.isEmpty || dstVs.isEmpty ||
-        dstVs.toSet.intersect(srcVs.toSet).nonEmpty,
-      s"Snapshot.sync: the source $srcEx carries no lineage id but " +
-        s"the destination $dstEx does (id ${dstId.getOrElse("")}), and " +
-        s"they share no version (replica: ${dstVs.mkString(", ")}; " +
-        s"source: ${srcVs.mkString(", ")}) — cannot prove the " +
-        "destination is this source's replica; syncing would prune its " +
-        "versions. Re-export the source once (stamping its id) and " +
-        "sync from that, or fix dstRoot.")
+    // an ID-LESS destination must be EMPTY (a fresh replica root):
+    // every export and sync stamps the id before its first version, so
+    // id-less versions were made by something else — pruning them, or
+    // adopting this source's id over them, could destroy someone
+    // else's exports
+    require(dstId.nonEmpty || dstVs.isEmpty,
+      s"Snapshot.sync: $dstEx carries no lineage id ($RootIdFile) but " +
+        s"holds versions ${dstVs.mkString(", ")} — it was not made by " +
+        "Snapshot.export or sync; pick an empty replica root, or the " +
+        "replica that was synced from this source")
+    // every export stamps its root's id before its first version
+    val id = srcId.getOrElse(sys.error(
+      s"Snapshot.sync: the source $srcEx carries no lineage id " +
+        s"($RootIdFile) — it was not made by Snapshot.export or sync"))
     // every divergence check passed — adopt the source's lineage
     // identity NOW, before any install: a sync that crashes mid-copy
     // must not leave a replica holding this source's versions but no
     // id (the unprotected window the id exists to close)
-    srcId.filter(_ => dstId.isEmpty)
-      .foreach(id => writeRootId(fs, dstEx, id))
+    if (dstId.isEmpty) writeRootId(fs, dstEx, id)
     // ---- plan: missing pool dirs for the missing versions ----------
     val missingVs = srcVs.filterNot(dstVs.contains)
     // the read set is now known — narrow the source pin to exactly the
@@ -856,9 +822,7 @@ object Snapshot {
     // manifests reference, which survive with them), so a concurrent
     // source export prunes/vacuums everything else on schedule. The
     // common-version marker reads above ran under the broad pin.
-    Option(srcPin.get).foreach(old =>
-      srcPin.set(narrowReadPin(srcFs, srcEx, old,
-        s"sync->$dstEx", missingVs)))
+    srcPin.narrow(missingVs)
     val copies = scala.collection.mutable.ArrayBuffer.empty[CopyEntry]
     val poolInstalls = scala.collection.mutable.ArrayBuffer
       .empty[(HPath, HPath)]
@@ -884,28 +848,13 @@ object Snapshot {
       }
       poolInstalls += ((tmp, target))
     }
-    def referencedBy(v: Long): Seq[String] = {
-      val vRoot = new HPath(srcEx, s"v=$v")
-      val fromManifests =
-        srcFs.listStatus(vRoot).toSeq.filter(_.isDirectory).flatMap { td =>
-          val mf = new HPath(td.getPath, ContinuousIngest.SnapshotDirsFile)
-          if (!srcFs.exists(mf)) Nil
-          else new String(ContinuousIngest.readFileBytes(srcFs, mf), "UTF-8")
-            .split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-            .map(_.split("\t", 2)(1))
-        }
-      val bloomPtr = new HPath(vRoot, BloomPointerFile)
-      val fromBloom =
-        if (!srcFs.exists(bloomPtr)) Nil
-        else Seq(new String(ContinuousIngest.readFileBytes(srcFs, bloomPtr),
-          "UTF-8").trim).map(p => p.substring(0, p.lastIndexOf('/')))
-      fromManifests ++ fromBloom
-    }
-    missingVs.foreach(v => referencedBy(v).foreach(planPoolDir))
+    missingVs.foreach(v => referencedBy(srcFs, srcEx, v).foreach(planPoolDir))
     // ---- plan: the missing version trees (hidden tmps, renamed in
     // ascending order AFTER the pool lands) ---------------------------
     val vtreeInstalls = missingVs.map { v =>
       val vRoot = new HPath(srcEx, s"v=$v")
+      // the stamp rides the verbatim tree copy below
+      ContinuousIngest.requireFormat(spark, vRoot.toString, "Snapshot.sync")
       val vtmp = new HPath(dstEx,
         s"$VTreeTmpPrefix${v}_${java.util.UUID.randomUUID().toString.take(8)}")
       fs.mkdirs(vtmp)
@@ -976,30 +925,23 @@ object Snapshot {
     md.digest().map("%02x".format(_)).mkString
   }
 
-  /** Content stamp of the bloom file. A framed bloom (every bloom
-    * this engine writes) carries md5(payload) as its trailing 16
-    * bytes — read those, never the payload (the bloom is sized for
-    * the corpus's growth horizon and can be GBs). A legacy unframed
-    * file is hashed wholesale (one-time: the next merge rewrites it
-    * framed). */
+  /** Content stamp of the bloom file: the framed format carries
+    * md5(payload) as its trailing 16 bytes — read those, never the
+    * payload (the bloom is sized for the corpus's growth horizon and
+    * can be GBs). */
   private def bloomStamp(fs: FileSystem, p: HPath): String = {
     val len = fs.getFileStatus(p).getLen
     val magic = ContinuousIngest.BloomMagic
-    if (len >= magic.length + 4 + 16) {
-      val in = fs.open(p)
-      try {
-        val head = new Array[Byte](magic.length)
-        in.readFully(0, head)
-        if (java.util.Arrays.equals(head, magic)) {
-          val tail = new Array[Byte](16)
-          in.readFully(len - 16, tail)
-          return tail.map("%02x".format(_)).mkString
-        }
-      } finally in.close()
-    }
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.update(ContinuousIngest.readFileBytes(fs, p))
-    md.digest().map("%02x".format(_)).mkString
+    val in = fs.open(p)
+    try {
+      val head = new Array[Byte](magic.length)
+      require(len >= magic.length + 4 + 16 && {
+          in.readFully(0, head); java.util.Arrays.equals(head, magic) },
+        s"Snapshot.export: $p is not a framed bloom — storage corruption")
+      val tail = new Array[Byte](16)
+      in.readFully(len - 16, tail)
+      tail.map("%02x".format(_)).mkString
+    } finally in.close()
   }
 
   /** Materialize a PRIMARY state root from a `full = true` backup
@@ -1054,27 +996,16 @@ object Snapshot {
     // multi-hour restore is streaming (it defers exactly the pinned
     // version instead, once narrowed below); released in the finally,
     // crashed holders cleared with [[breakReadPins]]
-    val pinRef = new java.util.concurrent.atomic.AtomicReference[HPath](
-      if (pin) acquireReadPin(fs, exRoot, s"restore->$newRoot") else null)
-    if (!pin) refuseMidExportUnpinned(fs, exRoot, "restore")
+    val readPin = new ReadPin(fs, exRoot, "restore", s"restore->$newRoot", pin)
     try {
-    val vs = listVersionDirs(fs, exRoot).map(versionOf).sorted
-    val v =
-      if (version >= 0L) {
-        require(vs.contains(version),
-          s"Snapshot.restore: no complete version $version at " +
-            s"$exportRoot (have: ${vs.mkString(", ")})")
-        version
-      } else vs.lastOption.getOrElse(sys.error(
-        s"Snapshot.restore: no complete snapshot at $exportRoot"))
+    val v = resolveVersion(fs, exRoot, version, "restore")
     // the read set is known — narrow the pin to exactly this version
     // (its tree + the pool dirs its manifests reference, which survive
     // with it): a concurrent export prunes and vacuums everything else
     // on schedule while this restore streams
-    Option(pinRef.get).foreach(old =>
-      pinRef.set(narrowReadPin(fs, exRoot, old,
-        s"restore->$newRoot", Seq(v))))
+    readPin.narrow(Seq(v))
     val vRoot = new HPath(exRoot, s"v=$v")
+    ContinuousIngest.requireFormat(spark, vRoot.toString, "Snapshot.restore")
     val marker = new String(ContinuousIngest.readFileBytes(fs,
       new HPath(vRoot, ContinuousIngest.SnapshotMarkerFile)), "UTF-8")
     require(marker.split("\n").map(_.trim).contains(s"$FullKey=true"),
@@ -1167,7 +1098,7 @@ object Snapshot {
               name => new HPath(outTable, s"$sub/$name"))
           }
           // table-root markers beside the manifest (docs-slim,
-          // digests-v2, ann-config) ride back verbatim
+          // ann-config) ride back verbatim
           planBack(td.getPath, name => new HPath(outTable, name),
             keep = _ != ContinuousIngest.SnapshotDirsFile)
         case None =>
@@ -1192,8 +1123,11 @@ object Snapshot {
     // ride the install rename and read as a phantom partition to the
     // dir-name-based parity guards (copyFiles recreates any parent a
     // planned file needs)
+    // the restored root is a primary of the backup's format
+    val stamp = new HPath(tmp, ContinuousIngest.FormatFile)
+    val stampText = ContinuousIngest.stampText(snapshot = false)
     adopted.foreach { t =>
-      val planned = copies.map(_.dst).toSet
+      val planned = copies.map(_.dst).toSet + stamp.toString
       def sweepUnplanned(p: HPath): Boolean = { // returns "now empty"
         val children = dstFs.listStatus(p)
         var remaining = children.length
@@ -1224,14 +1158,15 @@ object Snapshot {
     // materializing a corrupt primary (an adopted attempt's completed
     // files re-verify by the same hash and are reused in place)
     copyFiles(spark, copies.toSeq)
+    // (an adopted attempt's intact stamp is reused in place too)
+    if (!dstFs.exists(stamp) || new String(
+        ContinuousIngest.readFileBytes(dstFs, stamp), "UTF-8") != stampText)
+      writeText(dstFs, stamp, stampText)
     require(dstFs.rename(tmp, dst),
       s"Snapshot.restore: install rename $tmp -> $dst failed — tmp " +
         "retained, re-run")
     IngestState(dst.toString)
-    } finally {
-      Option(pinRef.get).foreach(p => fs.delete(p, false))
-      ()
-    }
+    } finally readPin.release()
   }
 
   /** Names this exporter CAN write driver-side into version trees
@@ -1269,9 +1204,8 @@ object Snapshot {
     *    references, so this is external damage);
     *  - `unlisted=<path>` — a data file no sums line accounts for, in
     *    a dir that is immutable by contract;
-    *  - `sums_missing=<dir>` — shipped before the checksum
-    *    discipline; unverifiable (the next content change re-ships
-    *    the dir stamped, or re-export with a bumped stamp).
+    *  - `sums_missing=<dir>` — data files with no sums manifest at
+    *    all; unverifiable.
     * The walk holds a READ PIN scoped to the audited version, like
     * every other whole-tree read: an export starting mid-audit defers
     * pruning THIS version (everything else prunes on schedule), so a
@@ -1288,21 +1222,10 @@ object Snapshot {
     require(fs.exists(exRoot),
       s"Snapshot.verifyVersion: $exportRoot does not exist — not an " +
         "export root (check the path)")
-    val pinRef = new java.util.concurrent.atomic.AtomicReference[HPath](
-      if (pin) acquireReadPin(fs, exRoot, s"verifyVersion") else null)
-    if (!pin) refuseMidExportUnpinned(fs, exRoot, "verifyVersion")
+    val readPin = new ReadPin(fs, exRoot, "verifyVersion", "verifyVersion", pin)
     try {
-    val vs = listVersionDirs(fs, exRoot).map(versionOf).sorted
-    val v =
-      if (version >= 0L) {
-        require(vs.contains(version),
-          s"Snapshot.verifyVersion: no complete version $version at " +
-            s"$exportRoot (have: ${vs.mkString(", ")})")
-        version
-      } else vs.lastOption.getOrElse(sys.error(
-        s"Snapshot.verifyVersion: no complete snapshot at $exportRoot"))
-    Option(pinRef.get).foreach(old =>
-      pinRef.set(narrowReadPin(fs, exRoot, old, "verifyVersion", Seq(v))))
+    val v = resolveVersion(fs, exRoot, version, "verifyVersion")
+    readPin.narrow(Seq(v))
     val vRoot = new HPath(exRoot, s"v=$v")
     // every dir whose files rode copyFiles: manifest-referenced pool
     // dirs, the version tree's physical dirs (quantizers, markers),
@@ -1359,13 +1282,7 @@ object Snapshot {
     val hashed: Seq[String] =
       if (toHash.isEmpty) Nil
       else {
-        val entries = {
-          val it = spark.sparkContext.hadoopConfiguration.iterator()
-          val buf = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-          while (it.hasNext) { val e = it.next(); buf += ((e.getKey, e.getValue)) }
-          buf.toArray
-        }
-        val bc = spark.sparkContext.broadcast(entries)
+        val bc = broadcastConf(spark)
         val bcId = bc.id
         val slices = math.max(1, math.min(toHash.size,
           spark.sparkContext.defaultParallelism * 2))
@@ -1396,10 +1313,7 @@ object Snapshot {
           .collect().toSeq
       }
     (viol.toSeq ++ hashed).toDF("violation")
-    } finally {
-      Option(pinRef.get).foreach(p => fs.delete(p, false))
-      ()
-    }
+    } finally readPin.release()
   }
 
   /** Per-executor cache of the rebuilt Hadoop Configuration, keyed by
@@ -1435,6 +1349,16 @@ object Snapshot {
         c
       }
     }
+  }
+
+  /** The Hadoop conf as plain pairs in a broadcast (Configuration is
+    * not serializable) — rebuilt per executor by [[ConfCache]]. */
+  private def broadcastConf(spark: SparkSession)
+      : org.apache.spark.broadcast.Broadcast[Array[(String, String)]] = {
+    val pairs = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    spark.sparkContext.hadoopConfiguration.iterator()
+      .forEachRemaining(e => pairs += ((e.getKey, e.getValue)))
+    spark.sparkContext.broadcast(pairs.toArray)
   }
 
   /** One planned file copy: `expectMd5` is the STORED content hash
@@ -1475,13 +1399,7 @@ object Snapshot {
   private def copyFiles(spark: SparkSession,
                         copies: Seq[CopyEntry]): Seq[(String, Long, String)] = {
     if (copies.isEmpty) return Nil
-    val entries = {
-      val it = spark.sparkContext.hadoopConfiguration.iterator()
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      while (it.hasNext) { val e = it.next(); buf += ((e.getKey, e.getValue)) }
-      buf.toArray
-    }
-    val bc = spark.sparkContext.broadcast(entries)
+    val bc = broadcastConf(spark)
     val bcId = bc.id
     val slices = math.max(1, math.min(copies.size,
       spark.sparkContext.defaultParallelism * 2))
@@ -1563,7 +1481,7 @@ object Snapshot {
       }
 
   /** Parse one dir's [[SumsFile]]: name -> (length, md5). Empty when
-    * absent (a dir written before the checksum discipline). */
+    * absent (a dir holding only driver-written files). */
   private def readSums(fs: FileSystem,
                        dir: HPath): Map[String, (Long, String)] = {
     val p = new HPath(dir, SumsFile)
@@ -1590,6 +1508,21 @@ object Snapshot {
   private def versionOf(p: HPath): Long =
     p.getName.stripPrefix("v=").toLong
 
+  /** `version` when it is complete at `exRoot`, the newest complete
+    * one for a negative `version` — or refuse, by face. */
+  private def resolveVersion(fs: FileSystem, exRoot: HPath, version: Long,
+                             face: String): Long = {
+    val vs = listVersionDirs(fs, exRoot).map(versionOf).sorted
+    if (version >= 0L) {
+      require(vs.contains(version),
+        s"Snapshot.$face: no complete version $version at $exRoot " +
+          s"(have: ${vs.mkString(", ")})")
+      version
+    } else vs.lastOption.getOrElse(sys.error(
+      s"Snapshot.$face: no complete snapshot at $exRoot — run " +
+        "Snapshot.export first"))
+  }
+
   /** The completed-takedown op count recorded in version `v`'s
     * marker; 0 for a field-less marker (never written by this code —
     * defensive default that errs toward PRUNING: a version that
@@ -1599,11 +1532,8 @@ object Snapshot {
     * content). */
   private def markerOpsCount(fs: FileSystem, exRoot: HPath, v: Long): Long = {
     val mk = new HPath(exRoot, s"v=$v/${ContinuousIngest.SnapshotMarkerFile}")
-    new String(ContinuousIngest.readFileBytes(fs, mk), "UTF-8")
-      .split("\n").map(_.trim)
-      .collectFirst { case l if l.startsWith(s"$OpsCountKey=") =>
-        l.stripPrefix(s"$OpsCountKey=").toLong }
-      .getOrElse(0L)
+    parseKv(new String(ContinuousIngest.readFileBytes(fs, mk), "UTF-8"))
+      .get(OpsCountKey).map(_.toLong).getOrElse(0L)
   }
 
   /** Distinct completed-takedown ops on the primary — the version
@@ -1705,6 +1635,21 @@ object Snapshot {
     pin
   }
 
+  /** One whole-tree read's pin ([[acquireReadPin]]): BROAD on
+    * creation, narrowed to the read's versions once they are known
+    * (create-new-then-delete-old — no unpinned instant), released by
+    * the caller's finally. `enabled = false` is the read-only-mount
+    * opt-out: no pin, but the mid-export refusal still applies. */
+  private final class ReadPin(fs: FileSystem, exRoot: HPath, face: String,
+                              purpose: String, enabled: Boolean) {
+    private var current: Option[HPath] =
+      if (enabled) Some(acquireReadPin(fs, exRoot, purpose))
+      else { refuseMidExportUnpinned(fs, exRoot, face); None }
+    def narrow(versions: Seq[Long]): Unit =
+      current = current.map(narrowReadPin(fs, exRoot, _, purpose, versions))
+    def release(): Unit = current.foreach(fs.delete(_, false))
+  }
+
   /** The `pin = false` variant of the mid-export refusal the pin
     * protocol performs at acquire time: an unpinned whole-tree read
     * starting now cannot know whether the running exporter's
@@ -1737,9 +1682,9 @@ object Snapshot {
     pin
   }
 
-  /** Parse one marker/pin/deferral file's `key=value` lines — the ONE
-    * parser every small-file face shares (pins, the deferral log). */
-  private def parseKv(text: String): Map[String, String] =
+  /** Parse one marker/pin/deferral/stamp file's `key=value` lines —
+    * the ONE parser every small-file face shares. */
+  private[streaming] def parseKv(text: String): Map[String, String] =
     text.split("\n").toSeq.map(_.trim).filter(_.contains("="))
       .map { l => val Array(k, rest) = l.split("=", 2); k -> rest }
       .toMap
@@ -1756,7 +1701,7 @@ object Snapshot {
     * cover. Scope `None` = at least one pin is BROAD (no parseable
     * `versions=` line: a just-acquired pin its holder hasn't narrowed
     * yet, a manual pin an operator dropped to protect an out-of-band
-    * whole-tree copy, or a pre-scoping legacy pin) — retention must
+    * whole-tree copy) — retention must
     * defer everything, the conservative contract. `Some(set)` = the
     * union of every pin's scope (empty set when nothing is pinned).
     *
@@ -2001,7 +1946,7 @@ object Snapshot {
       }
   }
 
-  private def writeText(fs: FileSystem, p: HPath, text: String): Unit = {
+  private[streaming] def writeText(fs: FileSystem, p: HPath, text: String): Unit = {
     val out = fs.create(p, true)
     try out.write(text.getBytes("UTF-8")) finally out.close()
   }

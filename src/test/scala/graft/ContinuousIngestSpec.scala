@@ -62,6 +62,17 @@ class ContinuousIngestSpec extends SparkSpec {
     root
   }
 
+  /** A crashed rebuild's swap manifest: every index subdir its build
+    * produced (all present under the root or still in the tmp). */
+  private def writeSwapManifest(st: IngestState, tmpRoot: java.io.File): Unit =
+    java.nio.file.Files.write(
+      new java.io.File(tmpRoot, "_GRAFT_ACTIVE_SUBDIRS").toPath,
+      Seq("centroids", "sem_centroids", "sem_tree", "books", "ivf",
+        "ivf_packed", "pq", "pq_packed", "sem", "drift_base")
+        .filter(sub => new java.io.File(s"${st.root}/$sub").exists() ||
+          new java.io.File(tmpRoot, sub).exists())
+        .mkString("\n").getBytes("UTF-8"))
+
   private def bootstrapped(root: String): IngestState = {
     val st = IngestState(root)
     ContinuousIngest.bootstrap(Seq.empty[(Long, String)].toDF("doc_id", "text"), st, P)
@@ -421,12 +432,11 @@ class ContinuousIngestSpec extends SparkSpec {
     * with the persisted stamp (appending under them would mix
     * assignment conventions in one state root), while a differently
     * SPELLED but identical-by-effect set is accepted; (2) the
-    * packed-table migration guard — an ivf batch with no packed twin
-    * (a pre-packed-era root, or a crash between the two writes that
-    * never replayed) makes annIvfMaintained fail LOUDLY instead of
-    * silently answering from a partial corpus, and backfillPackedIvf
-    * is the named, idempotent migration. */
-  test("ann config fingerprint refuses drifted params; packed guard + backfill close the partial-answer trap") {
+    * packed-table parity guard — an ivf batch with no packed twin (a
+    * crash between the two writes that never replayed) makes
+    * annIvfMaintained fail LOUDLY instead of silently answering from
+    * a partial corpus, and replaying the batch heals it. */
+  test("ann config fingerprint refuses drifted params; the packed parity guard closes the partial-answer trap") {
     import graft.ops.Similarity
     import graft.streaming.ContinuousIngest.AnnParams
     val root = freshRoot()
@@ -438,9 +448,9 @@ class ContinuousIngestSpec extends SparkSpec {
     val Pa = P.copy(ann = Some(ann))
     val boot = (1L to 30L).map(i => (1000L + i, text(1000L + i), emb(1000L + i)))
     ContinuousIngest.bootstrap(boot.toDF("doc_id", "text", "embedding"), st, Pa)
-    ContinuousIngest.ingestBatch(
-      (1L to 10L).map(i => (2000L + i, text(2000L + i), emb(2000L + i)))
-        .toDF("doc_id", "text", "embedding"), 0L, st, Pa)
+    val batch0 = (1L to 10L).map(i => (2000L + i, text(2000L + i), emb(2000L + i)))
+      .toDF("doc_id", "text", "embedding")
+    ContinuousIngest.ingestBatch(batch0, 0L, st, Pa)
     // drifted identity fields are refused with the rebuild remedy
     val eDrift = intercept[Throwable] {
       ContinuousIngest.loadQuantizers(spark, st, ann.copy(nAssign = 3))
@@ -451,8 +461,8 @@ class ContinuousIngestSpec extends SparkSpec {
     // fingerprints identically and is accepted
     ContinuousIngest.loadQuantizers(spark, st,
       ann.copy(semSpill = Similarity.spillFor(ann.semMinCosine)))
-    // packed-table parity guard: drop one packed batch dir (what a
-    // pre-packed-era root looks like for every batch)
+    // packed-table parity guard: drop one packed batch dir (a crash
+    // between the assignment and pack writes that never replayed)
     import java.nio.file.{Files => JF, Path => JP}
     import java.util.Comparator
     JF.walk(JP.of(s"${st.ivfPackedPath}/batch=0"))
@@ -463,34 +473,18 @@ class ContinuousIngestSpec extends SparkSpec {
       ContinuousIngest.annIvfMaintained(spark, st, ann, corpus,
         k = 1, nprobe = 2).count()
     }
-    assert(msgs(eGap).exists(_.contains("backfillPackedIvf")),
-      s"missing packed twin should fail loudly naming the migration: ${msgs(eGap)}")
-    // a SLIM root cannot backfill — the assignment table has no
-    // floats; the migration face refuses with the replay remedy
-    // instead of writing an empty/broken pack
-    val eSlim = intercept[Throwable] {
-      ContinuousIngest.backfillPackedIvf(spark, st)
-    }
-    assert(msgs(eSlim).exists(_.contains("replay the batch")),
-      s"slim backfill should refuse with the replay remedy: ${msgs(eSlim)}")
-    // a PRE-PACKED-ERA root carries FAT assignment rows; rewrite
-    // batch 0 fat (ivfAssign is deterministic — these are exactly the
-    // stored slim rows plus their vb) and the migration packs it
-    val q0 = ContinuousIngest.loadQuantizers(spark, st, ann)
-    Similarity.ivfAssign(
-        spark.read.parquet(s"${st.docsPath}/batch=0"), q0.cents,
-        idCol = "doc_id")
-      .write.mode("overwrite").parquet(s"${st.ivfPath}/batch=0")
-    // the migration restores parity and the maintained answers equal
-    // the one-shot operator again
-    ContinuousIngest.backfillPackedIvf(spark, st)
+    assert(msgs(eGap).exists(_.contains("replay the batch")),
+      s"missing packed twin should fail loudly naming the replay: ${msgs(eGap)}")
+    // the named remedy: replaying the batch rewrites every partition of
+    // it, and the maintained answers equal the one-shot operator again
+    ContinuousIngest.ingestBatch(batch0, 0L, st, Pa)
     val q = ContinuousIngest.loadQuantizers(spark, st, ann)
     val got = ContinuousIngest.annIvfMaintained(spark, st, ann, corpus,
       k = 1, nprobe = 2, Some(q))
     val want = Similarity.annIvf(corpus, 1, nlist = 4, nprobe = 2,
       centroids = Some(q.cents), idCol = "doc_id")
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
-      "backfilled packed table answers differ from the one-shot operator")
+      "replayed packed table answers differ from the one-shot operator")
     // id-namespace contract: an external query colliding with corpus
     // id 1001 (whose vector also appears as 1022 — the fixture
     // repeats with period 21) answers its OWN row under
@@ -512,13 +506,12 @@ class ContinuousIngestSpec extends SparkSpec {
       k = 1, nprobe = 4, rerank = 4, Some(q), excludeSelf = false).collect()
     assert(collPq.map(_.getLong(1)).toSeq === Seq(1001L),
       s"IVFADC excludeSelf=false must allow the colliding row: ${collPq.mkString(",")}")
-    // compaction consolidates THROUGH the slim projection: the fat
-    // legacy batch loses its redundant float column (the storage
-    // migration), answers unchanged
+    // compaction consolidates the slim assignment table, answers
+    // unchanged
     ContinuousIngest.compactState(spark, st, upToBatch = 0L)
     assert(ContinuousIngest.readTable(spark, st.ivfPath).columns.toSeq ===
       Seq("nn_id", "list"),
-      "compaction should slim the legacy fat assignment batch")
+      "the assignment table must stay slim through compaction")
     val gotC = ContinuousIngest.annIvfMaintained(spark, st, ann, corpus,
       k = 1, nprobe = 2, Some(q))
     assert(gotC.exceptAll(want).isEmpty && want.exceptAll(gotC).isEmpty,
@@ -545,27 +538,18 @@ class ContinuousIngestSpec extends SparkSpec {
     assert(msgs(eCompact).exists(_.contains("index batch directories disagree")),
       s"compaction across an index asymmetry must refuse: ${msgs(eCompact)}")
     // restore the code partition (pqEncode is deterministic over the
-    // same corpus + books) and re-fatten the SINGLE consolidated ivf
-    // partition: the migration rewrite must run even when there is
-    // nothing to consolidate (the one-partition pre-slim root case)
+    // same corpus + books): parity is back and compaction proceeds
     Similarity.pqEncode(corpus, q.books, idCol = "doc_id")
       .drop("codes_arr")
       .write.mode("overwrite").parquet(s"${st.pqPath}/batch=0")
-    Similarity.ivfAssign(corpus, q.cents, idCol = "doc_id")
-      .write.mode("overwrite").parquet(s"${st.ivfPath}/batch=0")
     ContinuousIngest.compactState(spark, st, upToBatch = 0L)
-    assert(ContinuousIngest.readTable(spark, st.ivfPath).columns.toSeq ===
-      Seq("nn_id", "list"),
-      "single-partition fat root must still migrate to the slim schema")
     val gotM = ContinuousIngest.annIvfMaintained(spark, st, ann, corpus,
       k = 1, nprobe = 2, Some(q))
     assert(gotM.exceptAll(want).isEmpty && want.exceptAll(gotM).isEmpty,
-      "post-migration maintained answers differ from the one-shot operator")
-    // a crash between the code-pack and sem writes must NOT be
-    // offered the backfill remedy — backfillPackedAdc would restore
-    // dir parity while the batch's sem rows stay missing forever;
-    // only a replay heals this shape (sem is in the parity universe
-    // precisely for this)
+      "restored maintained answers differ from the one-shot operator")
+    // a crash between the code-pack and sem writes is a replay case
+    // too (sem is in the parity universe precisely so the missing sem
+    // rows cannot go unnoticed)
     Seq(s"${st.pqPackedPath}/batch=0", s"${st.semPath}/batch=0").foreach {
       dir =>
         JF.walk(JP.of(dir)).sorted(Comparator.reverseOrder[JP]())
@@ -575,9 +559,8 @@ class ContinuousIngestSpec extends SparkSpec {
       ContinuousIngest.annIvfPqMaintained(spark, st, ann, corpus,
         k = 1, nprobe = 2, rerank = 8, Some(q)).count()
     }
-    assert(msgs(eSem).exists(_.contains("crashed partway")) &&
-      !msgs(eSem).exists(_.contains("backfillPackedAdc")),
-      s"missing sem must be a replay case, not a migration: ${msgs(eSem)}")
+    assert(msgs(eSem).exists(_.contains("crashed partway")),
+      s"missing sem must be a replay case: ${msgs(eSem)}")
   }
 
   /** The query-side streaming twin of start(): a file-chunk QUERY
@@ -853,6 +836,7 @@ class ContinuousIngestSpec extends SparkSpec {
     java.nio.file.Files.write(
       new java.io.File(tmpRoot, "_GRAFT_SWAP_READY.deadbeef").toPath,
       Array.emptyByteArray)
+    writeSwapManifest(st, tmpRoot)
     val qOld = ContinuousIngest.loadQuantizers(spark, st, ann)
     assert(tmpRoot.exists() &&
       new java.io.File(tmpRoot, "_GRAFT_SWAP_READY.deadbeef").exists(),
@@ -1025,6 +1009,7 @@ class ContinuousIngestSpec extends SparkSpec {
     java.nio.file.Files.write(
       new java.io.File(tmpRoot, "_GRAFT_SWAP_READY").toPath,
       Array.emptyByteArray)
+    writeSwapManifest(st, tmpRoot)
     // a reader-side recovery must not touch even a PRISTINE-marked
     // tmp — the mover set is the single writer, full stop
     ContinuousIngest.recoverIndexSwap(spark, st)
@@ -1381,10 +1366,10 @@ class ContinuousIngestSpec extends SparkSpec {
     // _SUCCESS. Nothing was purged; the set is incomplete; discarded.
     val pending = JPath.of(s"$root/b/.delete_pending")
     delIds.toDF("doc_id")
-      .select(col("doc_id"),
-        md5(lit("x")).as("digest"), lit(true).as("purge_digest"),
-        lit("op-crash-w1").as("op_id"),
-        current_timestamp().as("requested_at"))
+      .select(col("doc_id"), lit("op-crash-w1").as("op_id"),
+        current_timestamp().as("requested_at"),
+        lit("app-crash-w1").as("app_id"),
+        lit(0L).as("n_chars"), lit(0L).as("n_ws_tokens"))
       .coalesce(1).write.parquet(pending.toString)
     JFiles.delete(pending.resolve("_SUCCESS"))
     assert(ContinuousIngest.recoverDeletes(spark, stB) === 0L)
@@ -1403,13 +1388,14 @@ class ContinuousIngestSpec extends SparkSpec {
     // everything to exactly the reference outcome.
     val delTexts = Map(1001L -> text(1001L), 1005L -> text(1005L),
       102L -> text(2), 103L -> text(3), 303L -> text(9))
-    // the V2 tombstone shape deleteDocs captures on this root: digest
-    // + the per-doc stats factors (the negative-partial input), so the
-    // recovery drives the same no-text-scan paths as the direct twin
+    // the tombstone shape deleteDocs captures on this root: op and
+    // application identity + the per-doc stats factors (the
+    // negative-partial input), so the recovery drives the same
+    // no-text-scan paths as the direct twin
     delIds.map(i => (i, delTexts(i))).toDF("doc_id", "t")
-      .select(col("doc_id"), md5(col("t")).as("digest"),
-        lit(true).as("purge_digest"), lit("op-crash-w2").as("op_id"),
+      .select(col("doc_id"), lit("op-crash-w2").as("op_id"),
         current_timestamp().as("requested_at"),
+        lit("app-crash-w2").as("app_id"),
         length(col("t")).cast("long").as("n_chars"),
         size(split(col("t"), "\\s+")).cast("long").as("n_ws_tokens"))
       .coalesce(1).write.parquet(pending.toString)
@@ -1562,15 +1548,12 @@ class ContinuousIngestSpec extends SparkSpec {
     * reader's distinct is the contract), so re-absorbing is free while
     * a stale retire could destroy rows a queued-takedown retry MERGED
     * into an op dir between the crash and its recovery — the exact
-    * "takedown stays provable" invariant. Windows, for BOTH the
-    * legacy single-`op=_compacted` discipline (pre-epoch roots: an
-    * unmarked tmp is a mid-write crash, discarded; a marked tmp
-    * beside a live `_compacted` is pre-install, discarded; a marked
-    * tmp with NO `_compacted` is mid-install — the only copy, renamed
-    * in and then migrated) and the epoch discipline (a marked epoch
-    * tmp whose epoch dir is absent is mid-install — renamed in; an
-    * unretired source re-absorbs, INCLUDING rows merged into it after
-    * the crash). */
+    * "takedown stays provable" invariant. Windows: an unmarked epoch
+    * tmp is a mid-write crash, discarded; a marked epoch tmp beside its
+    * live epoch dir is stale, discarded; a marked epoch tmp whose
+    * epoch dir is absent is mid-install — renamed in; an unretired
+    * source re-absorbs, INCLUDING rows merged into it after the
+    * crash. */
   test("deletes_log compaction crash windows: set-semantics recovery loses nothing, including post-crash merges") {
     import java.nio.file.{Files => JFiles, Path => JPath}
     import java.util.Comparator
@@ -1588,42 +1571,28 @@ class ContinuousIngestSpec extends SparkSpec {
     def rmrf(p: String): Unit =
       JFiles.walk(JPath.of(p)).sorted(Comparator.reverseOrder[JPath]())
         .forEach(f => JFiles.deleteIfExists(f))
-    // window 1: a LEGACY tmp WITHOUT _SUCCESS is a mid-write crash —
+    // window 1: an epoch tmp WITHOUT _SUCCESS is a mid-write crash —
     // its poison rows must never surface; the real op dirs compact
     // into the first epoch
     Seq((666L, "op-poison", new java.sql.Timestamp(0L)))
       .toDF("doc_id", "op_id", "requested_at").coalesce(1)
-      .write.parquet(s"$logDir/.log_compact_tmp")
-    JFiles.delete(JPath.of(s"$logDir/.log_compact_tmp/_SUCCESS"))
+      .write.parquet(s"$logDir/.log_compact_tmp_0")
+    JFiles.delete(JPath.of(s"$logDir/.log_compact_tmp_0/_SUCCESS"))
     ContinuousIngest.compactState(spark, st, 2L)
     assert(logged() === want, s"window-1 lost/gained rows: ${logged()}")
     assert(opDirs() === Set("op=_compacted_0"), s"window-1 dirs: ${opDirs()}")
-    // window 2: a MARKED legacy tmp beside a live legacy `op=_compacted`
-    // is a pre-install crash — discarded, sources intact (poison
-    // visible if it were trusted). Manufacture the legacy layout an
-    // old-binary root would hand over: its compacted dir under the
-    // legacy name, the crashed tmp beside it.
-    assert(new java.io.File(s"$logDir/op=_compacted_0")
-      .renameTo(new java.io.File(s"$logDir/op=_compacted")))
+    // window 2: a MARKED epoch tmp beside its live epoch dir is stale —
+    // discarded, never trusted (poison visible if it were)
     Seq((667L, "op-poison2", new java.sql.Timestamp(0L)))
       .toDF("doc_id", "op_id", "requested_at").coalesce(1)
-      .write.parquet(s"$logDir/.log_compact_tmp")
+      .write.parquet(s"$logDir/.log_compact_tmp_0")
     // another real takedown so the compaction proper has work to do
     ContinuousIngest.deleteDocs(spark, st, Seq(303L).toDF("doc_id"))
     val want2 = want + 303L
     ContinuousIngest.compactState(spark, st, 2L)
     assert(logged() === want2, s"window-2 lost/gained rows: ${logged()}")
-    // the legacy dir migrated into the fresh epoch alongside the new op
-    assert(opDirs() === Set("op=_compacted_0"), s"window-2 dirs: ${opDirs()}")
-    // window 3: LEGACY mid-install crash — `op=_compacted` deleted,
-    // the marked legacy tmp is the ONLY copy; recovery renames it in,
-    // the migration then absorbs it, losing nothing
-    spark.read.parquet(s"$logDir/op=_compacted_0").coalesce(1)
-      .write.parquet(s"$logDir/.log_compact_tmp")
-    rmrf(s"$logDir/op=_compacted_0")
-    ContinuousIngest.compactState(spark, st, 2L)
-    assert(logged() === want2, s"window-3 lost rows: ${logged()}")
-    assert(opDirs() === Set("op=_compacted_0"), s"window-3 dirs: ${opDirs()}")
+    assert(opDirs() === Set("op=_compacted_0", "op=_compacted_1"),
+      s"window-2 dirs: ${opDirs()}")
     // window 4: crashed retirement + POST-CRASH MERGE — an absorbed op
     // dir survives the crash and a retry merges a NEW row into it
     // before the next compaction; recovery must re-absorb (set
@@ -1640,18 +1609,17 @@ class ContinuousIngestSpec extends SparkSpec {
     assert(got4.contains(4242L),
       s"window-4: the post-crash merged row was destroyed: $got4")
     assert((want2 -- got4).isEmpty, s"window-4 lost rows: $got4")
-    assert(opDirs() === Set("op=_compacted_0", "op=_compacted_1"),
-      s"window-4 dirs: ${opDirs()}")
+    val epochs = Set("op=_compacted_0", "op=_compacted_1", "op=_compacted_2")
+    assert(opDirs() === epochs, s"window-4 dirs: ${opDirs()}")
     // window 5: EPOCH mid-install crash — a marked epoch tmp whose
     // epoch dir is absent is the only copy of its absorbed set;
     // recovery finishes the rename (epoch names are never reused)
-    spark.read.parquet(s"$logDir/op=_compacted_1").coalesce(1)
-      .write.parquet(s"$logDir/.log_compact_tmp_1")
-    rmrf(s"$logDir/op=_compacted_1")
+    spark.read.parquet(s"$logDir/op=_compacted_2").coalesce(1)
+      .write.parquet(s"$logDir/.log_compact_tmp_2")
+    rmrf(s"$logDir/op=_compacted_2")
     ContinuousIngest.compactState(spark, st, 2L)
     assert(logged() === got4, s"window-5 lost rows: ${logged()}")
-    assert(opDirs() === Set("op=_compacted_0", "op=_compacted_1"),
-      s"window-5 dirs: ${opDirs()}")
+    assert(opDirs() === epochs, s"window-5 dirs: ${opDirs()}")
   }
 
   /** The epoch shape of the audit-log compaction: cost scales with
@@ -1753,10 +1721,10 @@ class ContinuousIngestSpec extends SparkSpec {
     assert(gotStats === wantStats, s"stats $gotStats != $wantStats")
   }
 
-  /** THE no-text-scan pin for V2 deletes: strip the text column from
+  /** THE no-text-scan pin for deletes: strip the text column from
     * every docs partition, then delete — if ANY delete-path job read
-    * docs.text (the pre-V2 capture, carry check, or wholesale stats
-    * re-anchor), analysis would fail loudly. Affected docs partitions
+    * docs.text (a text-hashing capture, or a stats re-aggregation),
+    * analysis would fail loudly. Affected docs partitions
     * still rewrite (whatever columns they hold); the stats adjustment
     * comes from the captured per-doc factors. */
   test("V2 delete never reads corpus text: a docs table with NO text column purges fine") {
@@ -1796,74 +1764,6 @@ class ContinuousIngestSpec extends SparkSpec {
     assert(post === (preStats._1 - delFactors._1, preStats._2 - delFactors._2,
       preStats._3 - delFactors._3),
       s"textless-delete stats: $post vs pre=$preStats minus del=$delFactors")
-  }
-
-  /** Legacy (pre-V2) roots: the bare-digest schema keeps working on
-    * the old delete path, and `migrateDigests` upgrades it in place —
-    * one text pass, after which the root behaves exactly like a
-    * natively-V2 twin. */
-  test("legacy digest roots: old delete path still correct; migrateDigests upgrades to the V2 twin") {
-    import java.nio.file.{Files => JFiles, Path => JPath}
-    import java.util.Comparator
-    val root = freshRoot()
-    // build two identical V2 roots, then DOWNGRADE both to the
-    // faithful legacy layout (bare digest column, no marker)
-    def downgrade(st: IngestState): Unit = {
-      val digDir = new java.io.File(st.digestsPath)
-      digDir.listFiles().filter(f => f.isDirectory &&
-          f.getName.startsWith("batch=")).foreach { d =>
-        val legacy = spark.read.parquet(d.toString)
-          .select("text").localCheckpoint()
-        JFiles.walk(d.toPath).sorted(Comparator.reverseOrder[JPath]())
-          .forEach(f => JFiles.deleteIfExists(f))
-        legacy.write.parquet(d.toString)
-      }
-      JFiles.deleteIfExists(JPath.of(st.digestsPath, "_GRAFT_DIGESTS_V2"))
-      ()
-    }
-    val (stL, pl) = builtAnnRoot(s"$root/legacy")
-    val (stM, _) = builtAnnRoot(s"$root/migrated")
-    downgrade(stL); downgrade(stM)
-    // legacy path: the delete works via the text-scan shape
-    assert(ContinuousIngest.deleteDocs(spark, stL,
-      delIds.toDF("doc_id")) === delIds.size.toLong)
-    // ...with correct containment, stats, and re-admission
-    assert(ContinuousIngest.readTable(spark, stL.docsPath)
-      .where(col("doc_id").isin(delIds: _*)).count() === 0L)
-    val gotL = ContinuousIngest.readStats(spark, stL)
-      .as[(Long, Long, Long)].head()
-    val wantL = ContinuousIngest.readTable(spark, stL.docsPath)
-      .agg(count(lit(1)), sum(length(col("text")).cast("long")),
-        sum(size(split(col("text"), "\\s+")).cast("long")))
-      .as[(Long, Long, Long)].head()
-    assert(gotL === wantL, s"legacy-path stats $gotL != $wantL")
-    val readmitL = ContinuousIngest.ingestBatch(
-      Seq((801L, text(1005L), annEmb(801L))).toDF("doc_id", "text", "embedding"),
-      3L, stL, pl).count()
-    assert(readmitL === 1L, "legacy-path delete must re-admit the deleted text")
-    // migration: one pass, marker stamped, digests == the V2 recompute
-    ContinuousIngest.migrateDigests(spark, stM)
-    assert(JFiles.exists(JPath.of(stM.digestsPath, "_GRAFT_DIGESTS_V2")),
-      "migration must stamp the V2 marker")
-    val mig = ContinuousIngest.readTable(spark, stM.digestsPath)
-    val want = ContinuousIngest.readTable(spark, stM.docsPath)
-      .select(col("doc_id"), md5(col("text")).as("text"),
-        length(col("text")).cast("long").as("n_chars"),
-        size(split(col("text"), "\\s+")).cast("long").as("n_ws_tokens"))
-    assertSameTable("migrated digests", mig, want)
-    // and the migrated root deletes down the V2 path to the same
-    // outcome as the legacy-path twin
-    assert(ContinuousIngest.deleteDocs(spark, stM,
-      delIds.toDF("doc_id")) === delIds.size.toLong)
-    assertSameTable("migrated-vs-legacy docs",
-      ContinuousIngest.readTable(spark, stM.docsPath),
-      ContinuousIngest.readTable(spark, stL.docsPath)
-        .where(col("doc_id") =!= 801L))
-    // wantL was captured BEFORE stL's 801 re-admission, so it is
-    // exactly the purged-corpus accounting the migrated root must show
-    assert(ContinuousIngest.readStats(spark, stM)
-        .as[(Long, Long, Long)].head()._1 === wantL._1,
-      "migrated-root stats must match the purged corpus")
   }
 
   /** The batched-takedown face: N queued requests drain in ONE purge
@@ -2333,10 +2233,9 @@ class ContinuousIngestSpec extends SparkSpec {
     * on a corpus-scale root; this spec pins the CLASSIFICATION
     * mechanics the law can't cheaply: the dedup interplay (a batch's
     * partition holds only its FIRST-SEEN docs), the missing-dir and
-    * consolidated-dir refusals, the consolidation marker surviving a
-    * crashed-swap recovery, and the legacy defense for consolidations
-    * stamped by pre-marker code (stats partial cardinality). */
-  test("rollbackBatch purges exactly the named batch; refuses bootstrap, merged-away, consolidated and legacy-consolidated partitions") {
+    * consolidated-dir refusals, and the consolidation marker surviving
+    * a crashed-swap recovery and a takedown's partition rewrite. */
+  test("rollbackBatch purges exactly the named batch; refuses bootstrap, merged-away and consolidated partitions") {
     val root = freshRoot()
     val st = bootstrapped(s"$root/s")
     chunks.zipWithIndex.foreach { case (rows, i) =>
@@ -2385,17 +2284,18 @@ class ContinuousIngestSpec extends SparkSpec {
     val mergedErr = intercept[Throwable](
       ContinuousIngest.rollbackBatch(spark, st, 0L))
     assert(mergedErr.getMessage.contains("consolidated"), mergedErr.getMessage)
-    // legacy defense: a consolidation stamped by pre-marker code has
-    // no marker — the stats partition's partial cardinality (one row
-    // per absorbed batch) still refuses it
-    assert(new java.io.File(docsDir, "batch=2/_GRAFT_CONSOLIDATED").delete())
-    val legacyErr = intercept[Throwable](
+    // ...and survives a takedown that rewrites the consolidated dir:
+    // the purge swap carries it, so rollback still refuses
+    assert(ContinuousIngest.deleteDocs(spark, st,
+      Seq(101L).toDF("doc_id")) === 1L)
+    assert(new java.io.File(docsDir, "batch=2/_GRAFT_CONSOLIDATED").exists(),
+      "a takedown rewrite dropped the consolidation marker")
+    val purgedErr = intercept[Throwable](
       ContinuousIngest.rollbackBatch(spark, st, 2L))
-    assert(legacyErr.getMessage.contains("marker discipline"),
-      legacyErr.getMessage)
+    assert(purgedErr.getMessage.contains("CONSOLIDATED"), purgedErr.getMessage)
   }
 
-  test("rollbackBatch's legacy defense counts only ORIGINAL (non-negative) stats partials; rollbackWindow reports the window at metadata cost") {
+  test("rollbackBatch proceeds on a delivery whose stats took a folded takedown partial; rollbackWindow reports the window at metadata cost") {
     val root = freshRoot()
     val st = bootstrapped(s"$root/s")
     chunks.zipWithIndex.foreach { case (rows, i) =>
@@ -2412,13 +2312,11 @@ class ContinuousIngestSpec extends SparkSpec {
     // (writer faces assume their own layout — clear the debris before
     // exercising them below)
     assert(new java.io.File(s"${st.docsPath}/batch=debris").delete())
-    // manufacture the fold outcome the r18 ADVICE flagged: a
-    // strictly-negative takedown partial folded into an ORIGINAL
-    // batch's stats partition (foldStatsDeltas targets the max
-    // committed stats partition even when the docs-side compaction is
-    // a single-partition no-op, so the docs dir stays unmarked) —
-    // counting ALL rows misdiagnosed this genuine single delivery as
-    // a pre-marker consolidation and refused its rollback
+    // manufacture a fold outcome: a strictly-negative takedown
+    // partial folded into an ORIGINAL batch's stats partition
+    // (foldStatsDeltas targets the max committed stats partition even
+    // when the docs-side compaction is a single-partition no-op, so
+    // the docs dir stays unmarked) — a genuine single delivery
     Seq((-1L, -40L, -8L)).toDF("n_docs", "n_chars", "n_ws_tokens")
       .coalesce(1).write.mode("append").parquet(s"${st.statsPath}/batch=2")
     // batch 2 delivered {301 (dropped near dup), 302, 303}: its
@@ -2427,14 +2325,6 @@ class ContinuousIngestSpec extends SparkSpec {
     val ids = ContinuousIngest.readTable(spark, st.docsPath)
       .select("doc_id").as[Long].collect().toSet
     assert(!ids.contains(302L) && !ids.contains(303L), ids.toString)
-    // ...while a GENUINE pre-marker consolidation (>1 non-negative
-    // originals) still refuses: append a second positive partial
-    Seq((1L, 40L, 8L)).toDF("n_docs", "n_chars", "n_ws_tokens")
-      .coalesce(1).write.mode("append").parquet(s"${st.statsPath}/batch=1")
-    val legacyErr = intercept[Throwable](
-      ContinuousIngest.rollbackBatch(spark, st, 1L))
-    assert(legacyErr.getMessage.contains("marker discipline"),
-      legacyErr.getMessage)
     // consolidate everything -> the window is closed, horizon visible
     ContinuousIngest.compactState(spark, st, upToBatch = 2L,
       targetRowsPerFile = 1000000L)

@@ -3,21 +3,20 @@ package graft
 import graft.pipelines.Hw3
 import org.apache.spark.sql.functions._
 
-/** Byte-level STRUCTURE parity with the reference's committed HW3
-  * outputs (`HWK_3/output_examples/Output1M_007_003_01_888{6,8}.txt`).
-  * The item VALUES are unreproducible (the university stream host is
+/** Byte-level STRUCTURE parity with the reference's HW3 outputs
+  * (`HWK_3/output_examples/Output1M_007_003_01_888{6,8}.txt`). The
+  * item VALUES are unreproducible (the university stream host is
   * unreachable), but the line skeleton — section headers, `m = …` line,
   * `item +/-` layout, ordering — is fully specified by the goldens and
-  * must match verbatim.
+  * must match verbatim. The skeleton below was read off both goldens;
+  * the report is checked against it on a small skewed stream and on
+  * seeded streams shaped like the goldens' two regimes.
   *
   * Skeleton = each line with numbers replaced by `#`, the +/- truth
   * annotation by `?`, then consecutive identical lines collapsed (item
   * blocks have data-dependent length).
   */
 class GoldenFormatSpec extends SparkSpec {
-
-  private val goldenDir = "/root/reference/HWK_3/output_examples"
-  private val goldens = Seq("Output1M_007_003_01_8886.txt", "Output1M_007_003_01_8888.txt")
 
   private val expectedSkeleton = Seq(
     "INPUT PROPERTIES",
@@ -49,15 +48,6 @@ class GoldenFormatSpec extends SparkSpec {
     }.reverse
   }
 
-  private def readGolden(name: String): Seq[String] =
-    scala.io.Source.fromFile(s"$goldenDir/$name").getLines().toSeq
-      .reverse.dropWhile(_.trim.isEmpty).reverse
-
-  test("both committed goldens parse under the report grammar") {
-    for (g <- goldens)
-      assert(skeleton(readGolden(g)) == expectedSkeleton, s"golden $g")
-  }
-
   test("Hw3 report emits the exact golden line skeleton") {
     import spark.implicits._
     // skewed synthetic stream: item 1 holds half the mass, so every
@@ -72,5 +62,22 @@ class GoldenFormatSpec extends SparkSpec {
     val headers = Set("INPUT PROPERTIES", "EXACT ALGORITHM", "True frequent items:",
       "RESERVOIR SAMPLING", "STICKY SAMPLING", "Estimated frequent items:")
     assert(headers.forall(lines.contains), "missing verbatim section header")
+    // one more input per golden: its parameters (n = 10⁶, φ = 0.07,
+    // ε = 0.03, δ = 0.1, the port) over a seeded stream of its shape —
+    // 10 heavy hitters of 7.5 % each over a long tail of 199 444
+    // (port 8886) or 39 886 (port 8888) distinct items
+    val n = 1000000L
+    for ((port, tail) <- Seq(("8886", 199444L), ("8888", 39886L))) {
+      val h = pmod(xxhash64(col("id"), lit(port.toLong)), lit(1000000L))
+      val stream = spark.range(n).select(col("id").as("ord"),
+        when(h < 750000L, pmod(h, lit(10L)) + 1000000000L)
+          .otherwise(pmod(h, lit(tail)) + 1L).as("item"))
+      val got = Hw3.run(stream, n, 0.07, 0.03, 0.1, port = port)
+      assert(got.head == "INPUT PROPERTIES" &&
+        got(1) == s"n = $n phi = 0.07 epsilon = 0.03 delta = 0.1 port = $port",
+        got.take(2).mkString("\n"))
+      assert(skeleton(got) == expectedSkeleton,
+        s"port $port skeleton diverged:\n${skeleton(got).mkString("\n")}")
+    }
   }
 }

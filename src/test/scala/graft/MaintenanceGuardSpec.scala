@@ -7,18 +7,16 @@ import org.apache.spark.sql.functions._
 /** Round-15 maintenance-path guards, pinned:
   *
   *  - the consolidation-skew diagnosis in the index-table parity
-  *    guard demands ROW-COVERAGE EVIDENCE, not just agreeing dir
-  *    names: a pre-packed-era root with any post-upgrade append
-  *    (core tables `{-1..N}`, packed tables `{N}`) canons to the
-  *    same set as a genuinely interrupted compaction, but its packed
-  *    tables cover strictly fewer ids — misreading it as skew would
-  *    let `compactState` slim-rewrite away the fat assignment floats
-  *    (destroying `backfillPackedIvf`'s only input) and re-pack only
-  *    the tail batch, silently dropping every pre-upgrade vector
-  *    behind a clean-looking layout;
-  *  - a GENUINE interrupted compaction (coverage preserved) still
-  *    reads as skew, queries get the "re-run compactState" remedy,
-  *    and compactState completes it;
+  *    guard demands CONSOLIDATION EVIDENCE, not just a gap below a
+  *    higher dir: a crashed append below the maximum batch (core
+  *    tables `{-1, 0}`, packed tables `{0}`) leaves the same dir
+  *    shape as an interrupted compaction, but the dir above its gap
+  *    carries no consolidation marker — misreading it as skew would
+  *    let `compactState` consolidate the packed tables without the
+  *    missing batch, laundering the gap into a clean-looking layout;
+  *  - a GENUINE interrupted compaction (marked consolidated dir)
+  *    still reads as skew, queries get the "re-run compactState"
+  *    remedy, and compactState completes it;
   *  - `annIvfFilteredMaintained` honors `excludeSelf` (the
   *    id-namespace-collision contract every sibling face already
   *    exposes);
@@ -77,12 +75,11 @@ class MaintenanceGuardSpec extends SparkSpec {
     st
   }
 
-  test("skew diagnosis needs coverage evidence: pre-packed-era root with appends is a migration, not skew") {
+  test("skew diagnosis needs consolidation evidence: a crashed append below the maximum batch is not skew") {
     val st = twoBatchRoot(s"${freshRoot()}/trap")
-    // the ADVICE-shaped trap: drop the packed tables' BOOTSTRAP dirs
-    // only — core tables keep {-1,0}, packed keep {0}; both canon to
-    // {0} under the consolidation view, so dir names alone would
-    // misdiagnose this migration as an interrupted compaction
+    // the packed tables' BOOTSTRAP dirs are lost (a crashed append
+    // below the maximum): core tables keep {-1,0}, packed keep {0} —
+    // the dir shape of an interrupted compaction, minus its marker
     rmDir(s"${st.ivfPackedPath}/batch=-1")
     rmDir(s"${st.pqPackedPath}/batch=-1")
     val corpus = ContinuousIngest.readTable(spark, st.docsPath)
@@ -91,23 +88,20 @@ class MaintenanceGuardSpec extends SparkSpec {
       ContinuousIngest.annIvfMaintained(spark, st, ann, corpus,
         k = 1, nprobe = 2).count()
     }
-    assert(msgs(eQ).exists(_.contains("backfillPacked")),
-      s"queries must get the MIGRATION remedy, not the compaction one: ${msgs(eQ)}")
+    assert(msgs(eQ).exists(_.contains("crashed partway")),
+      s"queries must get the REPLAY remedy, not the compaction one: ${msgs(eQ)}")
     assert(!msgs(eQ).exists(_.contains("re-run compactState")),
       s"the wrong (compaction) remedy was named: ${msgs(eQ)}")
-    // and compactState must REFUSE — proceeding would slim-rewrite
-    // the assignment batches and re-pack only batch 0, laundering the
-    // gap into a layout the parity check can no longer see
+    // and compactState must REFUSE — proceeding would re-pack only
+    // batch 0, laundering the gap into a layout the parity check can
+    // no longer see
     val eC = intercept[Throwable] {
       ContinuousIngest.compactState(spark, st, upToBatch = 0L)
     }
-    assert(msgs(eC).exists(_.contains("backfillPacked")),
-      s"compactState proceeded (or misdiagnosed) across a packed-coverage gap: ${msgs(eC)}")
-    // the named migration heals the root (these batches are slim —
-    // post-slim-era — so the ADC backfill applies; the float pack is
-    // restored by re-packing from the assignment twin of this spec's
-    // construction: batch=-1 still has its packed twin ABSENT, so
-    // derive it the supported way — replay via rebuildIndexes)
+    assert(msgs(eC).exists(_.contains("crashed partway")),
+      s"compactState proceeded (or misdiagnosed) across a packed gap: ${msgs(eC)}")
+    // the bootstrap partition cannot be replayed — rebuildIndexes
+    // re-derives the whole index set and heals the root
     ContinuousIngest.rebuildIndexes(spark, st, ann)
     val got = ContinuousIngest.annIvfMaintained(spark, st, ann, corpus,
       k = 1, nprobe = 2)
@@ -121,15 +115,16 @@ class MaintenanceGuardSpec extends SparkSpec {
     val want = ContinuousIngest.annIvfMaintained(spark, st, ann, corpus,
       k = 1, nprobe = 2).localCheckpoint()
     // simulate a compactState that consolidated ONLY the sem table
-    // before crashing: union its {-1,0} rows under batch=0 — row
-    // coverage is preserved (consolidation is a row union), only the
-    // dir layout skews
+    // before crashing: union its {-1,0} rows under a MARKED batch=0,
+    // as compactTable installs it — only the dir layout skews
     val semRows = spark.read.option("basePath", st.semPath)
       .parquet(st.semPath).drop("batch").localCheckpoint()
     rmDir(s"${st.semPath}/batch=-1")
     rmDir(s"${st.semPath}/batch=0")
     semRows.write.mode("overwrite").parquet(s"${st.semPath}/batch=0")
-    // queries get the COMPACTION remedy (coverage evidence passes)
+    java.nio.file.Files.createFile(
+      java.nio.file.Path.of(s"${st.semPath}/batch=0/_GRAFT_CONSOLIDATED"))
+    // queries get the COMPACTION remedy (consolidation evidence passes)
     val eQ = intercept[Throwable] {
       ContinuousIngest.annIvfMaintained(spark, st, ann, corpus,
         k = 1, nprobe = 2).count()
@@ -201,6 +196,15 @@ class MaintenanceGuardSpec extends SparkSpec {
     java.nio.file.Files.write(
       new java.io.File(tmpRoot, "_GRAFT_SWAP_READY").toPath,
       Array.emptyByteArray)
+    // ...and the swap manifest the rebuild wrote before its marker:
+    // every index subdir it produced
+    java.nio.file.Files.write(
+      new java.io.File(tmpRoot, "_GRAFT_ACTIVE_SUBDIRS").toPath,
+      Seq("centroids", "sem_centroids", "sem_tree", "books", "ivf",
+        "ivf_packed", "pq", "pq_packed", "sem", "drift_base")
+        .filter(sub => new java.io.File(s"${st.root}/$sub").exists() ||
+          new java.io.File(tmpRoot, sub).exists())
+        .mkString("\n").getBytes("UTF-8"))
     // one new chunk through the REAL streaming face: start() must
     // complete the swap (deployment startup IS the writer context)
     // and then ingest against the healed index set

@@ -25,9 +25,33 @@ class NativeFunctionsSpec extends SparkSpec {
   }
 
   test("GraftExtensions injects both functions (builder smoke)") {
-    // applying the extensions object must not throw; full-session
-    // injection is exercised via spark.sql.extensions in deployment
+    // applying the extensions object must not throw
     new GraftExtensions().apply(new SparkSessionExtensions)
+    // one more input: a session BUILT with the extension resolves every
+    // name Native.register installs (one table drives both)
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    Native.register(spark)
+    val installed = spark.sessionState.functionRegistry.listFunction()
+      .map(_.funcName).filter(_.startsWith("graft_")).toSet
+    assert(installed.size == 11 && installed.contains("graft_zorder"),
+      installed.toSeq.sorted.mkString(","))
+    // a fresh session over the running context: clear the shared
+    // session for the build, then restore it for every later suite
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val ext =
+      try SparkSession.builder().withExtensions(new GraftExtensions)
+        .getOrCreate()
+      finally {
+        SparkSession.setDefaultSession(spark)
+        SparkSession.setActiveSession(spark)
+      }
+    assert(ext ne spark, "the builder reused the shared session")
+    val missing = installed.filterNot(n =>
+      ext.sessionState.functionRegistry.functionExists(FunctionIdentifier(n)))
+    assert(missing.isEmpty,
+      s"extension-built session misses ${missing.toSeq.sorted.mkString(",")}")
   }
 
   test("WordNgrams matches the interpreted HOF formulation, including edges") {

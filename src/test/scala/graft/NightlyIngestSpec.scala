@@ -121,8 +121,8 @@ class NightlyIngestSpec extends SparkSpec {
     val finalDocs = ContinuousIngest.readTable(spark, st.docsPath)
     assert(finalDocs.exceptAll(corpus).isEmpty && corpus.exceptAll(finalDocs).isEmpty,
       "final corpus differs from the stateless twin's")
-    // V2 digest rows are per-doc: the admit key under the legacy
-    // column name plus the per-doc stats factors the delete path
+    // digest rows are per-doc: the admit key (`text` = md5) plus the
+    // per-doc stats factors the delete path
     // subtracts — the whole table must equal a recompute over docs
     val digests = ContinuousIngest.readTable(spark, st.digestsPath)
     val digestsWant = finalDocs.select(col("doc_id"),

@@ -837,22 +837,16 @@ class SnapshotSpec extends SparkSpec {
     val ter = s"$root/ter"
     Snapshot.sync(spark, rep, ter)
     assert(idOf(ter) === idOf(exA))
-    // an ID-LESS destination (a pre-identity replica) must PROVE
-    // replica-ness: with no common version the sync refuses rather
-    // than prune-and-adopt (the laundering path the review flagged) —
-    // while a shared marker-verified version readmits it and restores
-    // the id
+    // an ID-LESS destination that holds versions was not made by
+    // export or sync: it refuses rather than prune-and-adopt
     java.nio.file.Files.delete(
       java.nio.file.Path.of(s"$rep/_GRAFT_ROOT_ID"))
-    // out-of-band delete: drop the local-FS crc sidecar too, so the
-    // re-adopted id below reads through Hadoop's checksum layer
+    // out-of-band delete: drop the local-FS crc sidecar too
     new java.io.File(s"$rep/._GRAFT_ROOT_ID.crc").delete()
-    val noProof = intercept[Throwable](Snapshot.sync(spark, exB, rep))
-    assert(msgs(noProof).exists(_.contains("cannot prove")),
-      msgs(noProof).mkString(";"))
+    val noId = intercept[Throwable](Snapshot.sync(spark, exA, rep))
+    assert(msgs(noId).exists(_.contains("carries no lineage id")),
+      msgs(noId).mkString(";"))
     assert(Snapshot.versions(spark, rep) === Seq(0L))
-    Snapshot.sync(spark, exA, rep) // common v0, markers byte-equal
-    assert(idOf(rep) === idOf(exA))
   }
 
   test("restore-tmp adoption matches the FULL target name (strict uuid suffix): a sibling target's crashed tmp is never adopted or destroyed") {
@@ -1108,39 +1102,5 @@ class SnapshotSpec extends SparkSpec {
     assert(msgs(lockErr).exists(_.contains("mid-export")),
       msgs(lockErr).mkString(";"))
     assert(Snapshot.breakExportLock(spark, bk))
-  }
-
-  test("sync refuses an ID-LESS legacy source against an id-carrying destination without common-version proof (the lineage guard's mirror case)") {
-    val root = freshDir("graft_snap_legacy_src")
-    val st = IngestState(s"$root/state")
-    ContinuousIngest.bootstrap(docs.where(!isNew), st, P)
-    val quant = ContinuousIngest.loadQuantizers(spark, st, P.ann.get)
-    ContinuousIngest.ingestBatch(docs.where(isNew), 0L, st, P, Some(quant))
-    val exA = s"$root/exA"
-    val exB = s"$root/exB"
-    Snapshot.export(spark, st, exA) // A: v0
-    val rep = s"$root/rep"
-    Snapshot.sync(spark, exA, rep) // rep: v0 + A's id
-    // B: a LEGACY root (no id) holding only v2 — rep's v0 sits below
-    // B's max and they share nothing, so every pre-identity check
-    // passes and the source-id equality check is vacuous: the exact
-    // mirror of the mistyped-dstRoot destruction the id closed
-    (1 to 3).foreach(_ => Snapshot.export(spark, st, exB, keepVersions = 1))
-    assert(Snapshot.versions(spark, exB) === Seq(2L))
-    java.nio.file.Files.delete(
-      java.nio.file.Path.of(s"$exB/_GRAFT_ROOT_ID"))
-    new java.io.File(s"$exB/._GRAFT_ROOT_ID.crc").delete()
-    val err = intercept[Throwable](Snapshot.sync(spark, exB, rep))
-    assert(msgs(err).exists(m => m.contains("carries no lineage id") &&
-      m.contains("cannot prove")), msgs(err).mkString(";"))
-    assert(Snapshot.versions(spark, rep) === Seq(0L), "replica pruned")
-    assert(poolDirCount(rep) > 0)
-    // a marker-verified common version IS the proof: the same legacy
-    // treatment of A (strip its id) syncs into its own replica fine
-    java.nio.file.Files.delete(
-      java.nio.file.Path.of(s"$exA/_GRAFT_ROOT_ID"))
-    new java.io.File(s"$exA/._GRAFT_ROOT_ID.crc").delete()
-    Snapshot.sync(spark, exA, rep)
-    assert(Snapshot.versions(spark, rep) === Seq(0L))
   }
 }

@@ -5,22 +5,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM per `sbt test` fork). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+  lazy val spark: SparkSession = Sessions.local("8", logLevel = "WARN",
+    extra = Map("spark.app.name" -> "graft-test",
       // saveAsTable targets (bucketed-layout tests) go to a temp dir,
       // not ./spark-warehouse in the repo
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_test").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+      "spark.sql.warehouse.dir" ->
+        java.nio.file.Files.createTempDirectory("graft_wh_test").toString))
 }
 
 abstract class SparkSpec extends AnyFunSuite {
