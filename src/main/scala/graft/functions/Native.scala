@@ -161,7 +161,7 @@ object Native {
     * segment's ascending id array, so a segment row costs
     * O(|wanted|·log segSize) regardless of segment size, and only the
     * matched vectors' doubles are ever copied out. The rerank float
-    * store of the index-only serving face: candidates' unit vectors
+    * store of the maintained serving faces: candidates' unit vectors
     * come straight out of the persisted packed segments instead of a
     * per-batch scan of the corpus float table. See [[GatherVecs]]. */
   def gatherVecsNative(spark: SparkSession, packed: Column, ids: Column,

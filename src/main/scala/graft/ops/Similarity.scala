@@ -412,7 +412,7 @@ object Similarity {
     * a replay writes identical rows) and the same ≤ 4 MiB auto-sized
     * segments as the hot-cell guard — at m bytes/code that is
     * ~(4 MiB / m) entries per segment. Persisted per ingest batch as
-    * the `pq_packed` table so [[annIvfPqFromPacked]] queries never
+    * the `pq_packed` table so [[pqPackedShortlist]] scans never
     * re-join or re-pack the corpus-sized code table (pack-once, the
     * `ivf_packed` lesson applied to the ADC face). */
   def pqPack(index: DataFrame, m: Int, segSize: Int = 0,
@@ -540,8 +540,8 @@ object Similarity {
     * semi-join, the 100 TB shape sketched below). Recall compensation:
     * with only a `sel = |eligible|/N` fraction of vectors eligible,
     * `nprobe` lists hold ~sel·nprobe·N/nlist candidates, so
-    * `adaptProbe` (default) widens probing to `ceil(nprobe/sel)`
-    * lists, capped at nlist — restoring the expected candidate count
+    * probing widens to `ceil(nprobe/sel)` lists, capped at nlist
+    * ([[widenedNprobe]]) — restoring the expected candidate count
     * at probe cost ∝ the SAME candidate total the unfiltered search
     * pays (selectivity is one cheap counting aggregate, no floats).
     * `corpusPred = lit(true)` degenerates EXACTLY to [[annIvf]]
@@ -561,20 +561,10 @@ object Similarity {
                      idCol: String = "vec_id", vecCol: String = "embedding",
                      queryPred: Column = lit(true),
                      centroids: Option[Array[Array[Double]]] = None,
-                     adaptProbe: Boolean = true,
                      excludeSelf: Boolean = true): DataFrame = {
     val cents = centroids
       .getOrElse(ivfCentroids(embs, nlist, sampleSize, idCol, vecCol))
-    val nprobeEff =
-      if (!adaptProbe) nprobe
-      else {
-        val row = embs.agg(count(lit(1)).as("n"),
-          count(when(corpusPred, lit(1))).as("e")).head()
-        val (n, e) = (row.getLong(0), row.getLong(1))
-        if (e <= 0 || e >= n) nprobe
-        else math.min(cents.length,
-          math.ceil(nprobe.toDouble * n / e).toInt)
-      }
+    val nprobeEff = filteredNprobe(embs, corpusPred, nprobe, cents.length)
     annIvfFromIndex(ivfAssign(embs.where(corpusPred), cents, idCol, vecCol),
       embs.where(queryPred), k, nprobeEff, cents, idCol, vecCol,
       excludeSelf = excludeSelf)
@@ -605,26 +595,34 @@ object Similarity {
                        idCol: String = "vec_id", vecCol: String = "embedding",
                        queryPred: Column = lit(true),
                        centroids: Option[Array[Array[Double]]] = None,
-                       books: Option[Array[Array[Array[Double]]]] = None,
-                       adaptProbe: Boolean = true): DataFrame = {
+                       books: Option[Array[Array[Array[Double]]]] = None): DataFrame = {
     val (cents, bks) = trainIvfPq(embs, nlist, m, ksub, sampleSize,
       idCol, vecCol, centroids, books)
-    val nprobeEff =
-      if (!adaptProbe) nprobe
-      else {
-        val row = embs.agg(count(lit(1)).as("n"),
-          count(when(corpusPred, lit(1))).as("e")).head()
-        val (n, e) = (row.getLong(0), row.getLong(1))
-        if (e <= 0 || e >= n) nprobe
-        else math.min(cents.length,
-          math.ceil(nprobe.toDouble * n / e).toInt)
-      }
+    val nprobeEff = filteredNprobe(embs, corpusPred, nprobe, cents.length)
     val elig = embs.where(corpusPred)
     val index = ivfAssign(elig, cents, idCol, vecCol).select("nn_id", "list")
       .join(pqEncode(elig, bks, idCol, vecCol)
         .select(col("vec_id").as("nn_id"), col("codes")), "nn_id")
     annIvfPqFromIndex(index, embs, k, nprobeEff, cents, bks, rerank,
       idCol, vecCol, queryPred)
+  }
+
+  /** The filtered faces' recall compensation: with `e` of `n` vectors
+    * eligible, probe `ceil(nprobe·n/e)` lists, capped at the trained
+    * cell count (no widening when nothing or everything is eligible).
+    * The one-shot faces and the maintained ones
+    * ([[graft.streaming.ContinuousIngest.annIvfFilteredMaintained]])
+    * share it, so their equality laws hold by construction. */
+  private[graft] def widenedNprobe(nprobe: Int, n: Long, e: Long,
+                                   nCells: Int): Int =
+    if (e <= 0 || e >= n) nprobe
+    else math.min(nCells, math.ceil(nprobe.toDouble * n / e).toInt)
+
+  private def filteredNprobe(embs: DataFrame, corpusPred: Column,
+                             nprobe: Int, nCells: Int): Int = {
+    val row = embs.agg(count(lit(1)).as("n"),
+      count(when(corpusPred, lit(1))).as("e")).head()
+    widenedNprobe(nprobe, row.getLong(0), row.getLong(1), nCells)
   }
 
   /** Embedding k-center clustering: FFT centroids over a sample, every
@@ -1872,60 +1870,29 @@ object Similarity {
       .agg(topk(col("nn_id"), col("cos")).as("tk"))
       .select(col("vec_id"), explode(col("tk")).as("e"))
       .select(col("vec_id"), col("e.nn_id").as("nn_id"))
-    exactScoreShortlist(shortlist, embs, k, idCol, vecCol, queryPred, None)
+    exactScoreShortlist(shortlist, embs, k, idCol, vecCol, queryPred)
   }
 
   /** Exact scoring of a `vec_id, nn_id` shortlist: join the nq·R rows
     * back to the float corpus, one codegen'd dot each, true top-k —
-    * shared by every rerank face. `corpus` distinguishes the two
-    * deployment shapes, which want OPPOSITE join plans:
-    *
-    *  - `corpus = Some(store)` — the SERVING shape (the maintained
-    *    faces): an external, bounded query batch against a stored
-    *    100 TB corpus. The corpus float table joins first against the
-    *    BROADCAST id-only shortlist (nq·R two-long rows, KiBs), so
-    *    the corpus is scanned once and never shuffled regardless of
-    *    what the planner's size estimates say about a computed
-    *    shortlist; the query floats (nq rows) broadcast onto the
-    *    surviving nq·R rows afterwards. PlanSpec pins this face at
-    *    ZERO shuffled joins over a stored index.
-    *  - `corpus = None` — the SELF-QUERY shape (one-shot faces,
-    *    `queryPred` slicing `embs`): queries ARE corpus rows, so nq
-    *    is corpus-sized and broadcasting the nq·R shortlist would
-    *    ship O(N·R) rows to every executor — measured +29% on
-    *    `ann_pq` at the sf0.1 fixture, unboundedly worse at scale.
-    *    Here the shortlist stays the stream side: join the query
-    *    floats (the side the upstream ADC scan already bounded —
-    *    every ADC face broadcasts per-query LUTs, so nq is capped by
-    *    the same memory argument), then the corpus floats unhinted,
-    *    letting size estimates pick broadcast at fixture scale and
-    *    shuffle at corpus scale.
-    *
-    * Inner joins commute — the two shapes are byte-identical. */
+    * the SELF-QUERY rerank of the one-shot faces (`queryPred` slicing
+    * `embs`, so queries ARE corpus rows). nq is corpus-sized there, and
+    * broadcasting the nq·R shortlist would ship O(N·R) rows to every
+    * executor — measured +29% on `ann_pq` at the sf0.1 fixture,
+    * unboundedly worse at scale. The shortlist stays the stream side:
+    * join the query floats (the side the upstream ADC scan already
+    * bounded — every ADC face broadcasts per-query LUTs, so nq is
+    * capped by the same memory argument), then the corpus floats
+    * unhinted, letting size estimates pick broadcast at fixture scale
+    * and shuffle at corpus scale. A stored index reranks from its
+    * packed float segments instead ([[annIvfPqGatherRerank]]). */
   private def exactScoreShortlist(shortlist: DataFrame, embs: DataFrame,
                                   k: Int, idCol: String, vecCol: String,
-                                  queryPred: Column,
-                                  corpus: Option[DataFrame]): DataFrame = {
+                                  queryPred: Column): DataFrame = {
     val spark = embs.sparkSession
     val q = normalized(embs.where(queryPred), idCol, vecCol, "vec_id", "va")
-    val exact = corpus match {
-      case Some(store) =>
-        // filter the corpus scan to the nq·R survivors BEFORE paying
-        // per-row normalization (O(dim) arithmetic + a NaN guard):
-        // the semi-join probe is a hash lookup per corpus row, fused
-        // into the scan stage, so non-candidates cost nothing more
-        // the candidate ids under a collision-proof name (the corpus
-        // idCol may itself be "vec_id"/"nn_id")
-        val surv = store.join(
-          broadcast(shortlist.select(col("nn_id").as("_cand_id"))),
-          col(idCol) === col("_cand_id"), "left_semi")
-        val c = normalized(surv, idCol, vecCol, "nn_id", "vb")
-        c.join(broadcast(shortlist), "nn_id").join(broadcast(q), "vec_id")
-      case None =>
-        val c = normalized(embs, idCol, vecCol, "nn_id", "vb")
-        shortlist.join(broadcast(q), "vec_id").join(c, "nn_id")
-    }
-    topKByCos(exact
+    val c = normalized(embs, idCol, vecCol, "nn_id", "vb")
+    topKByCos(shortlist.join(broadcast(q), "vec_id").join(c, "nn_id")
       .select(col("vec_id"), col("nn_id"),
         graft.functions.Native.dotNative(spark, col("va"), col("vb")).as("cos")), k)
   }
@@ -1961,20 +1928,19 @@ object Similarity {
       idCol, vecCol, queryPred)
   }
 
-  /** IVFADC search against MAINTAINED tables: `index` is the join of
-    * the stored list assignments and PQ codes (`nn_id, list, codes` —
-    * e.g. `readTable(ivfPath) ⋈ readTable(pqPath)` from the
+  /** IVFADC search against an ASSIGNED index: `index` is the join of
+    * the list assignments and PQ codes (`nn_id, list, codes` — e.g.
+    * `readTable(ivfPath) ⋈ readTable(pqPath)` from the
     * [[graft.streaming.ContinuousIngest]] lifecycle, under the
-    * persisted quantizers), so a nightly deployment searches without
-    * re-assigning or re-encoding the corpus. `embs` supplies the
-    * query vectors; the rerank float store is `corpus` when given
-    * (the maintained docs table — external queries are usually NOT
-    * corpus members, so reranking against `embs` alone would drop
-    * every candidate at the float join) and `embs` itself otherwise
-    * (the one-shot shape, where queries are corpus rows selected by
-    * `queryPred`). [[annIvfPq]] is exactly this over a freshly-built
-    * index, so the faces cannot drift (the ContinuousIngestSpec law
-    * compares them through real parquet round trips).
+    * persisted quantizers), so a search need not re-assign or
+    * re-encode the corpus. `embs` supplies the query vectors (rows
+    * selected by `queryPred`) and is the rerank float store, so
+    * queries are corpus rows here; the maintained serving faces
+    * rerank external queries from the packed float segments instead
+    * ([[annIvfPqGatherRerank]]). [[annIvfPq]] is exactly this over a
+    * freshly-built index, so the faces cannot drift (the
+    * ContinuousIngestSpec law compares them through real parquet
+    * round trips).
     *
     * `excludeSelf` is the ID-NAMESPACE contract: id equality means
     * SAME DOCUMENT. The default drops a candidate whose id equals
@@ -1988,7 +1954,6 @@ object Similarity {
                         bks: Array[Array[Array[Double]]], rerank: Int = 0,
                         idCol: String = "vec_id", vecCol: String = "embedding",
                         queryPred: Column = lit(true),
-                        corpus: Option[DataFrame] = None,
                         excludeSelf: Boolean = true): DataFrame = {
     val spark = embs.sparkSession
     if (rerank <= 0) {
@@ -2035,46 +2000,18 @@ object Similarity {
           transform(col("ent"), e => e.getField("nn_id")).as("ids"),
           aggregate(col("ent"), lit(Array.emptyByteArray),
             (acc, e) => concat(acc, e.getField("codes"))).as("packed"))
-      annIvfPqFromPacked(packed, embs, k, nprobe, cents, bks, rerank,
-        idCol, vecCol, queryPred, corpus, excludeSelf)
+      exactScoreShortlist(pqPackedShortlist(packed, embs, nprobe, cents, bks,
+        rerank, idCol, vecCol, queryPred, excludeSelf),
+        embs, k, idCol, vecCol, queryPred)
     }
   }
 
-  /** The reranked IVFADC scan against an ALREADY-PACKED code-segment
-    * table ([[pqPack]]'s layout, or the inline window pack
-    * [[annIvfPqFromIndex]] builds for a computed index): queries
-    * probe their `nprobe` nearest lists, one
-    * [[graft.functions.PqAdcTopK]] call per (query, segment) row
-    * keeps the segment's ADC-best R+1 in a bounded loop, the
-    * shared-order [[graft.functions.MergeTopKAgg]] merges per query,
-    * and the exact rerank resolves the answer. Answers are
-    * segmentation-independent (each candidate lives in exactly one
-    * segment and the total order is shared), so the maintained
-    * per-batch-packed face ([[graft.streaming.ContinuousIngest]]'s
-    * `pq_packed` table) and the one-shot inline pack are
-    * byte-identical — and the maintained face never re-joins or
-    * re-packs the corpus-sized code table per query call (the
-    * `ivf_packed` pack-once lesson; before it, every serving batch
-    * paid a full index shuffle + window — measured 3.0 s per
-    * 100-query batch at a 200k corpus, dominated by the pack).
-    *
-    * The broadcast is explicit: the packed table is (m + 8)
-    * bytes/vector (the ids array costs 8 beside the m-byte code —
-    * ~16 GB at 10⁹ vectors and m = 8, past Spark's 8 GB broadcast
-    * cap, so the hard wall sits near ~4×10⁸ vectors). Past it the
-    * remedy is a NON-broadcast list equi-join or sharding the PACKED
-    * table by list range — sharding the query batch does nothing,
-    * the index side's size is independent of nq. A stored table's
-    * size estimate would let the planner pick broadcast correctly on
-    * its own, but the inline-pack caller's estimate is corpus-sized
-    * through the join+groupBy lineage, and one shared hint keeps
-    * both plans identical. */
   /** LUT-carrying probe rows `(vec_id, lut, list)` — one row per
     * (query, probed list), HASH-PARTITIONED BY QUERY ID so the
     * packed-list join (broadcast build side) preserves the
     * partitioning and the per-query merge aggregation runs with NO
-    * shuffle. One definition shared by the FromIndex and FromPacked
-    * faces so the partitioning trick cannot drift between them. */
+    * shuffle. One definition shared by the flat and packed scans so
+    * the partitioning trick cannot drift between them. */
   private def adcProbe(embs: DataFrame, bks: Array[Array[Array[Double]]],
                        cents: Array[Array[Double]], nprobe: Int,
                        idCol: String, vecCol: String,
@@ -2088,26 +2025,34 @@ object Similarity {
           .getField("list")).as("list"))
   }
 
-  def annIvfPqFromPacked(packed: DataFrame, embs: DataFrame, k: Int,
-                         nprobe: Int, cents: Array[Array[Double]],
-                         bks: Array[Array[Array[Double]]], rerank: Int,
-                         idCol: String = "vec_id",
-                         vecCol: String = "embedding",
-                         queryPred: Column = lit(true),
-                         corpus: Option[DataFrame] = None,
-                         excludeSelf: Boolean = true): DataFrame = {
-    require(rerank >= k, s"rerank=$rerank must be ≥ k=$k")
-    val merged = pqPackedShortlist(packed, embs, nprobe, cents, bks, rerank,
-      idCol, vecCol, queryPred, excludeSelf)
-    exactScoreShortlist(merged, embs, k, idCol, vecCol, queryPred, corpus)
-  }
-
-  /** The ADC candidate stage of [[annIvfPqFromPacked]], stopped at the
-    * `(vec_id, nn_id)` shortlist (per-query approximate top-`rerank`,
-    * self-hit dropped when `excludeSelf`): the piece the index-only
-    * serving face executes EAGERLY so it can collect the bounded
-    * nq·rerank candidate ids and gather their floats from the packed
-    * index segments instead of scanning a corpus float table. */
+  /** The ADC candidate stage against a packed code-segment table
+    * ([[pqPack]]'s layout, or the inline window pack
+    * [[annIvfPqFromIndex]] builds for a computed index), stopped at
+    * the `(vec_id, nn_id)` shortlist: queries probe their `nprobe`
+    * nearest lists, one [[graft.functions.PqAdcTopK]] call per
+    * (query, segment) row keeps the segment's ADC-best R+1 in a
+    * bounded loop, the shared-order [[graft.functions.MergeTopKAgg]]
+    * merges per query, and the self-hit is dropped when
+    * `excludeSelf`. Answers are segmentation-independent (each
+    * candidate lives in exactly one segment and the total order is
+    * shared), so the maintained per-batch `pq_packed` table and the
+    * one-shot inline pack shortlist identically — and the maintained
+    * face never re-joins or re-packs the corpus-sized code table per
+    * query call (before pack-once, every serving batch paid a full
+    * index shuffle + window — measured 3.0 s per 100-query batch at a
+    * 200k corpus, dominated by the pack).
+    *
+    * The broadcast is explicit: the packed table is (m + 8)
+    * bytes/vector (the ids array costs 8 beside the m-byte code —
+    * ~16 GB at 10⁹ vectors and m = 8, past Spark's 8 GB broadcast
+    * cap, so the hard wall sits near ~4×10⁸ vectors). Past it the
+    * remedy is a NON-broadcast list equi-join or sharding the PACKED
+    * table by list range — sharding the query batch does nothing,
+    * the index side's size is independent of nq. A stored table's
+    * size estimate would let the planner pick broadcast correctly on
+    * its own, but the inline-pack caller's estimate is corpus-sized
+    * through the join+groupBy lineage, and one shared hint keeps
+    * both plans identical. */
   private[graft] def pqPackedShortlist(packed: DataFrame, embs: DataFrame,
                                        nprobe: Int, cents: Array[Array[Double]],
                                        bks: Array[Array[Array[Double]]],
@@ -2136,10 +2081,10 @@ object Similarity {
   }
 
   /** The union of every query's `nprobe` nearest centroid lists — the
-    * only lists an ADC candidate can come from, so the index-only
-    * serving face prunes its packed-segment gather to exactly these.
-    * An ACTION over the nq query rows (no corpus scan): bounded by
-    * the same serving contract that caps nq. */
+    * only lists a candidate can come from, so a stored-index search
+    * prunes its packed-segment reads to exactly these. An ACTION over
+    * the nq query rows (no corpus scan): bounded by the same serving
+    * contract that caps nq. */
   private[graft] def probedLists(queries: DataFrame,
                                  cents: Array[Array[Double]], nprobe: Int,
                                  idCol: String, vecCol: String): Array[Int] = {
@@ -2152,23 +2097,56 @@ object Similarity {
       .collect().map(_.getInt(0)).sorted
   }
 
-  /** Exact scoring of a shortlist against an ALREADY-UNIT float store
-    * (`nn_id, vb` — gathered from the packed exact-IVF segments, which
-    * persist [[ivfAssign]]'s normalized vectors verbatim): the
-    * index-only twin of [[exactScoreShortlist]]'s serving shape. The
-    * store is candidate-sized by construction (the gather emits only
-    * shortlist ids), so both the shortlist and the query floats
-    * broadcast onto it and nothing shuffles. Skipping re-normalization
-    * is what keeps the face BYTE-identical to the corpus-store shape:
-    * a unit vector re-normalized in floating point moves by an ulp
-    * (‖v‖ evaluates to 1.0±ε), which could flip a cosine tie. */
-  private[graft] def scoreShortlistUnitStore(shortlist: DataFrame,
-                                             store: DataFrame,
-                                             embs: DataFrame, k: Int,
-                                             idCol: String, vecCol: String,
-                                             queryPred: Column): DataFrame = {
-    val spark = embs.sparkSession
-    val q = normalized(embs.where(queryPred), idCol, vecCol, "vec_id", "va")
+  /** The reranked IVFADC search of a STORED index, served from the
+    * index alone: the ADC shortlist over the packed code segments
+    * `codes` ([[pqPackedShortlist]]), rerank floats GATHERED from the
+    * packed float segments `floats` ([[ivfPack]]'s layout, which
+    * persists [[ivfAssign]]'s unit vectors verbatim —
+    * [[graft.functions.Native.gatherVecsNative]], one binary search
+    * per candidate id per surviving segment). Queries are EXTERNAL
+    * rows (`idCol`, `vecCol`), so no corpus float table is scanned:
+    * float reads are candidate-proportional up to scan granularity.
+    *
+    * EAGER: the shortlist must be known before the gather filter can
+    * be built, so this runs the candidate stage at CALL time (one
+    * action — nq·rerank id pairs, bounded by the serving contract that
+    * already caps nq through the broadcast per-query LUTs) and returns
+    * the lazy rerank plan. `probed` is [[probedLists]] at `nprobe`; the
+    * gather's `list IN (probed)` filter reaches the parquet scan, and
+    * with `spark.sql.parquet.pushdown.inFilterThreshold` raised to ≥
+    * the probed-list count (default 10 — serving sessions should set
+    * it, as the specs do) parquet's row-group dictionary filter skips
+    * segments of unprobed lists.
+    *
+    * The gathered store is candidate-sized, so both the shortlist and
+    * the query floats broadcast onto it and nothing shuffles (PlanSpec
+    * pins zero shuffled joins). Skipping re-normalization of the
+    * stored unit vectors keeps the answers BYTE-identical to the
+    * one-shot self-query rerank: a unit vector re-normalized in
+    * floating point moves by an ulp (‖v‖ evaluates to 1.0±ε), which
+    * could flip a cosine tie. */
+  private[graft] def annIvfPqGatherRerank(codes: DataFrame, floats: DataFrame,
+                                          queries: DataFrame, k: Int,
+                                          nprobe: Int, probed: Array[Int],
+                                          cents: Array[Array[Double]],
+                                          bks: Array[Array[Array[Double]]],
+                                          rerank: Int, idCol: String,
+                                          vecCol: String,
+                                          excludeSelf: Boolean): DataFrame = {
+    require(rerank >= k, s"rerank=$rerank must be ≥ k=$k")
+    val spark = queries.sparkSession
+    import spark.implicits._
+    val pairs = pqPackedShortlist(codes, queries, nprobe, cents, bks,
+        rerank, idCol, vecCol, lit(true), excludeSelf)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val wanted = pairs.map(_._2).distinct.sorted
+    val shortlist = spark.createDataset(pairs.toSeq).toDF("vec_id", "nn_id")
+    val store = floats
+      .where(col("list").isin(probed.toSeq: _*))
+      .select(explode(graft.functions.Native.gatherVecsNative(spark,
+        col("packed"), col("ids"), wanted)).as("e"))
+      .select(col("e.nn_id").as("nn_id"), col("e.vb").as("vb"))
+    val q = normalized(queries, idCol, vecCol, "vec_id", "va")
     topKByCos(store
       .join(broadcast(shortlist), "nn_id")
       .join(broadcast(q), "vec_id")

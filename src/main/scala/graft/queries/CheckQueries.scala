@@ -1474,9 +1474,10 @@ object CheckQueries extends QueryPack {
             .drop("codes_arr"),
           "ingest_pq_extra", "ingest_pq_missing")
         val slice = pmod(col("doc_id"), lit(5)) === 0
-        // the product face: maintained ivf ⋈ pq under the persisted
-        // quantizers, docs table as the rerank float store (and the
-        // ivf/pq batch-parity guard on the way in)
+        // the product face: the persisted pq_packed code segments under
+        // the persisted quantizers, rerank floats gathered from the
+        // packed float segments — docs untouched (and the batch-parity
+        // guard on the way in)
         val fromIdx = ContinuousIngest.annIvfPqMaintained(s, st, p.ann.get,
           docs.where(slice), k = 3, nprobe = 4, rerank = 8, Some(quant))
         val oneShot = Similarity.annIvfPq(docs, 3, nlist = nlist, nprobe = 4,
@@ -1484,14 +1485,15 @@ object CheckQueries extends QueryPack {
           idCol = "doc_id", queryPred = slice)
         val searchViol = multisetDiffViolations(fromIdx, oneShot,
           "ingest_search_extra", "ingest_search_missing")
-        // the INDEX-ONLY rerank face (floats gathered from the packed
-        // segments, docs table untouched) must answer byte-identically
-        // to both the docs-store face and the one-shot operator
-        val fromIdxIx = ContinuousIngest.annIvfPqMaintained(s, st, p.ann.get,
-          docs.where(slice), k = 3, nprobe = 4, rerank = 8, Some(quant),
-          rerankFromIndex = true)
-        val ixViol = multisetDiffViolations(fromIdxIx, oneShot,
-          "ingest_ixrerank_extra", "ingest_ixrerank_missing")
+        // pure ADC (rerank = 0) reads the same pq_packed segments,
+        // unpacked: it must equal the one-shot ivf ⋈ pq scoring
+        val adcViol = multisetDiffViolations(
+          ContinuousIngest.annIvfPqMaintained(s, st, p.ann.get,
+            docs.where(slice), k = 3, nprobe = 4, rerank = 0, Some(quant)),
+          Similarity.annIvfPq(docs, 3, nlist = nlist, nprobe = 4,
+            centroids = Some(quant.cents), books = Some(quant.books),
+            idCol = "doc_id", queryPred = slice),
+          "ingest_adc_extra", "ingest_adc_missing")
         // the FILTERED maintained face (eligible-id semi-join on the
         // packed index + selectivity-widened probing, docs never
         // read) must equal the one-shot filtered operator under the
@@ -1507,7 +1509,8 @@ object CheckQueries extends QueryPack {
           "ingest_filtered_extra", "ingest_filtered_missing")
         // …and its product-quantized twin: the maintained filtered
         // IVFADC face (probed-list-pruned code segments, eligible
-        // semi-join, docs rerank store) vs the one-shot
+        // semi-join and re-pack, rerank floats gathered from the packed
+        // segments) vs the one-shot
         // annIvfPqFiltered under the same persisted quantizers
         val fltAdcViol = multisetDiffViolations(
           ContinuousIngest.annIvfPqFilteredMaintained(s, st, p.ann.get,
@@ -1519,25 +1522,11 @@ object CheckQueries extends QueryPack {
             rerank = 8, idCol = "doc_id", queryPred = slice,
             centroids = Some(quant.cents), books = Some(quant.books)),
           "ingest_fltadc_extra", "ingest_fltadc_missing")
-        // the INDEX-ONLY filtered ADC face (eligible-only code
-        // re-pack, rerank floats gathered from the packed segments,
-        // docs never read) must also equal the one-shot operator
-        val fltAdcIxViol = multisetDiffViolations(
-          ContinuousIngest.annIvfPqFilteredMaintained(s, st, p.ann.get,
-            docs.where(slice), k = 3, nprobe = 2,
-            eligible = docs.where(fltPred).select("doc_id"), rerank = 8,
-            quantizers = Some(quant), rerankFromIndex = true),
-          Similarity.annIvfPqFiltered(docs, 3, nlist = nlist, nprobe = 2,
-            corpusPred = fltPred, m = p.ann.get.m, ksub = p.ann.get.ksub,
-            rerank = 8, idCol = "doc_id", queryPred = slice,
-            centroids = Some(quant.cents), books = Some(quant.books)),
-          "ingest_fltadcix_extra", "ingest_fltadcix_missing")
         // collect BEFORE the finally deletes the parquet the frames
         // scan (the check_ivf_append lesson)
         val out = ivfViol.unionByName(packViol).unionByName(adcPackViol)
-          .unionByName(pqViol).unionByName(searchViol).unionByName(ixViol)
+          .unionByName(pqViol).unionByName(searchViol).unionByName(adcViol)
           .unionByName(fltViol).unionByName(fltAdcViol)
-          .unionByName(fltAdcIxViol)
           .collect().map(_.getString(0)).toSeq
         import s.implicits._
         out.toDF("violation")
@@ -1987,8 +1976,7 @@ object CheckQueries extends QueryPack {
     // Snapshot-shipping laws (Snapshot.export / .state — the serving
     // distribution tier):
     //  1. SERVE PARITY: the maintained exact-IVF, IVFADC-with-rerank
-    //     (auto-switched to the index-only gather by the snapshot's
-    //     slim marker), and filtered faces answer from an exported
+    //     and filtered faces answer from an exported (docs-free)
     //     snapshot multiset-identically to the primary root;
     //  2. INCREMENTALITY: an unchanged re-export copies ZERO pool
     //     dirs (content stamps recognize every dir);

@@ -678,16 +678,15 @@ object ContinuousIngest {
     val spark = corpus.sparkSession
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = stateWriteEc
     // the (up to) three quantizer trains are independent — separate
-    // driver samples, separate output tables — so they overlap on the
-    // state-write pool (a crashed (re)train re-runs wholesale; no
+    // driver samples, separate output tables — so they overlap on
+    // forked threads (a crashed (re)train re-runs wholesale; no
     // cross-ordering to preserve). MEMORY: each train collects its
     // own ~sampleSize-vector driver sample, so peak driver memory is
     // up to 3x the old sequential pipeline's — size the driver for
     // three concurrent samples (or cap AnnParams.sampleSize; the
     // auto-scaled default keeps samples metadata-sized)
-    val centsF = Future {
+    val centsF = fork {
       val cents = Similarity.ivfCentroids(corpus, a.nlist, a.sampleSize,
         idCol = "doc_id", vecCol = a.vecCol)
       Similarity.centroidsToDF(spark, cents)
@@ -700,7 +699,7 @@ object ContinuousIngest {
       writeAnnConfig(spark, st, a)
       cents
     }
-    val treeF = Future {
+    val treeF = fork {
       a.semClusters match {
         case Some(nc) if semRouted(a) =>
           val t = Similarity.hierarchicalCentroids(corpus, nc, a.sampleSize,
@@ -711,7 +710,7 @@ object ContinuousIngest {
         case _ => None
       }
     }
-    val semF = Future {
+    val semF = fork {
       a.semClusters match {
         case Some(nc) if !semRouted(a) =>
           val sc = Similarity.ivfCentroids(corpus, nc, a.sampleSize,
@@ -722,7 +721,7 @@ object ContinuousIngest {
         case _ => None
       }
     }
-    val booksF = Future {
+    val booksF = fork {
       val books = Similarity.pqTrain(corpus, a.m, a.ksub, a.sampleSize,
         idCol = "doc_id", vecCol = a.vecCol)
       Similarity.booksToDF(spark, books)
@@ -1115,32 +1114,22 @@ object ContinuousIngest {
     } finally assigned.unpersist()
   }
 
-  /** ANN query face over the MAINTAINED index: probe + scan the
+  /** Exact-IVF search over the MAINTAINED index: probe + scan the
     * persisted packed segments ([[Similarity.annIvfFromPacked]]) —
     * never re-packs, never touches the corpus floats beyond the
     * stored segments. Answers are byte-identical to
     * `annIvfFromIndex` over the assignment table and to the one-shot
     * `annIvf` under the same centroids (segmentation-independence —
     * see [[Similarity.ivfPack]]). Pass the loaded quantizers when
-    * querying in a loop; otherwise they load here.
-    *
-    * GUARDED against the silent-partial-answer trap: an append that
-    * crashed partway leaves assignment partitions with no packed twin
-    * (or the reverse) — a bare packed read would answer from a
-    * partial index. The batch-directory parity check
-    * ([[requireIndexBatchParity]], one listing per table, metadata
-    * cost) fails loudly instead. */
+    * querying in a loop; otherwise they load here. Conventions and
+    * guards as on every maintained face ([[search]]). */
   def annIvfMaintained(spark: SparkSession, st: IngestState, a: AnnParams,
                        queries: DataFrame, k: Int, nprobe: Int,
                        quantizers: Option[AnnQuantizers] = None,
                        idCol: String = "doc_id",
-                       excludeSelf: Boolean = true): DataFrame = {
-    val q = quantizers.getOrElse(loadQuantizers(spark, st, a))
-    requireIndexBatchParity(spark, st, "annIvfMaintained")
-    Similarity.annIvfFromPacked(readTable(spark, st.ivfPackedPath),
-      queries, k, nprobe, q.cents, idCol = idCol, vecCol = a.vecCol,
-      excludeSelf = excludeSelf)
-  }
+                       excludeSelf: Boolean = true): DataFrame =
+    search(spark, st, a, queries, k, nprobe, None, None, quantizers, idCol,
+      excludeSelf, "annIvfMaintained")
 
   /** FILTERED exact-IVF search over the MAINTAINED index: top-k
     * cosine among the corpus rows whose id appears in `eligible` —
@@ -1152,60 +1141,33 @@ object ContinuousIngest {
     * column is the id set; derive it however the deployment likes
     * (`readTable(spark, st.docsPath).where(pred).select("doc_id")`,
     * an external allowlist table, …) — this face never reads docs
-    * itself, so like the index-only rerank it serves from the index
-    * root alone.
+    * itself.
     *
     * Shape, at 100 TB: selectivity comes from the SLIM `(nn_id,
     * list)` assignment table (two column-pruned integer scans, no
-    * float I/O), probing widens to ~`nprobe/sel` lists capped at
-    * nlist ([[graft.ops.Similarity.annIvfFiltered]]'s compensation,
-    * so the filtered search scans ~the same candidate volume the
-    * unfiltered one would), the packed float segments are pruned to
-    * the PROBED lists before unpacking (`list IN (…)` reaches the
-    * parquet scan — serving sessions raise
-    * `spark.sql.parquet.pushdown.inFilterThreshold` for exact
-    * row-group skipping, as with the rerank gather), and the
-    * eligible-id semi-join then drops ineligible rows before the
-    * scan. Float reads are ∝ the probed lists' eligible volume —
-    * the same order the unfiltered packed scan pays.
+    * float I/O, memoized across a serving loop — [[filteredNprobe]]),
+    * probing widens to ~`nprobe/sel` lists capped at nlist (so the
+    * filtered search scans ~the same candidate volume the unfiltered
+    * one would), the packed float segments are pruned to the PROBED
+    * lists before unpacking, and the eligible-id semi-join then drops
+    * ineligible rows before the scan.
     *
     * Answers are multiset-identical to the one-shot
     * `annIvfFiltered` under the same persisted quantizers (the
     * packed segments restore [[graft.ops.Similarity.ivfAssign]]'s
-    * rows exactly and both faces derive the same widened nprobe from
-    * the same counts) — law-pinned by `check_ingest_ann_replay`'s
-    * `ingest_filtered_*` and by ContinuousIngestSpec through a
-    * physically-absent docs table. `excludeSelf` as on
-    * [[annIvfPqFilteredMaintained]] (default true — the dedup
-    * convention; an EXTERNAL query batch whose id namespace may
-    * collide with corpus doc_ids must pass `false`, or a query
-    * sharing an id with its true nearest eligible corpus row
-    * silently loses that answer). Guarded by
-    * [[requireIndexBatchParity]] like every maintained face. */
+    * rows exactly and both faces widen with
+    * [[graft.ops.Similarity.widenedNprobe]] from the same counts) —
+    * law-pinned by `check_ingest_ann_replay`'s `ingest_filtered_*`
+    * and by ContinuousIngestSpec through a physically-absent docs
+    * table. */
   def annIvfFilteredMaintained(spark: SparkSession, st: IngestState,
                                a: AnnParams, queries: DataFrame, k: Int,
                                nprobe: Int, eligible: DataFrame,
                                quantizers: Option[AnnQuantizers] = None,
                                idCol: String = "doc_id",
-                               adaptProbe: Boolean = true,
-                               excludeSelf: Boolean = true): DataFrame = {
-    val q = quantizers.getOrElse(loadQuantizers(spark, st, a))
-    requireIndexBatchParity(spark, st, "annIvfFilteredMaintained")
-    val elig = eligible.select(col(eligible.columns.head).as("nn_id"))
-    // the UNWRAPPED frame keys the memo (see filteredNprobe)
-    val nprobeEff = filteredNprobe(spark, st, eligible, nprobe,
-      q.cents.length, adaptProbe)
-    // only the probed lists' segments can contribute candidates —
-    // prune them at the parquet scan before paying the unpack
-    val probed = Similarity.probedLists(queries, q.cents, nprobeEff,
-      idCol, a.vecCol)
-    val index = Similarity.ivfUnpack(
-        readTable(spark, st.ivfPackedPath)
-          .where(col("list").isin(probed.toSeq: _*)))
-      .join(elig, Seq("nn_id"), "left_semi")
-    Similarity.annIvfFromIndex(index, queries, k, nprobeEff, q.cents,
-      idCol = idCol, vecCol = a.vecCol, excludeSelf = excludeSelf)
-  }
+                               excludeSelf: Boolean = true): DataFrame =
+    search(spark, st, a, queries, k, nprobe, Some(eligible), None,
+      quantizers, idCol, excludeSelf, "annIvfFilteredMaintained")
 
   /** [[graft.ops.Similarity.annIvfFiltered]]'s selectivity-widened
     * probe count, derived from the MAINTAINED index: eligible fraction
@@ -1215,7 +1177,7 @@ object ContinuousIngest {
     * one-shot faces' arithmetic exactly (the `ingest_filtered_*` /
     * `ingest_fltadc_*` equality laws depend on it).
     *
-    * MEMOIZED so the `adaptProbe = true` DEFAULT is serving-loop
+    * MEMOIZED so the filtered faces are serving-loop
     * cheap: a loop answering M batches against a stable eligible set
     * measures once, not 2·M corpus-scale integer scans. The cache key
     * is (state root, the eligible plan's canonical form, the
@@ -1227,8 +1189,7 @@ object ContinuousIngest {
     * lifetime — exactly the serving loop the memo exists for); bounded
     * by wholesale clear past 1024 entries. The widening only
     * compensates recall, so even a hypothetically stale width degrades
-    * recall gracefully, never correctness ([[filteredProbeWidth]]'s
-    * contract). */
+    * recall gracefully, never correctness. */
   private val selectivityCache =
     new java.util.concurrent.ConcurrentHashMap[String, Integer]()
   /** Measurement count, test-visible: specs pin "one measurement per
@@ -1262,47 +1223,43 @@ object ContinuousIngest {
     * constructs a FRESH plan per call, which would defeat the
     * weak-identity digest cache. */
   private def filteredNprobe(spark: SparkSession, st: IngestState,
-                             elig: DataFrame, nprobe: Int, nCells: Int,
-                             adaptProbe: Boolean): Int =
-    if (!adaptProbe) nprobe
-    else {
-      // strong digest, not hashCode: two distinct eligible sets in one
-      // long-lived serving JVM colliding on a 32-bit hash would
-      // silently reuse the wrong probe width (recall-only per the
-      // contract, but undetectable). The plan STRING alone is not
-      // enough — LocalRelation (an in-memory allowlist DF, the
-      // scaladoc's own example) prints only its schema, so every such
-      // allowlist would share one key; digest the local rows and the
-      // plan hash alongside the structure.
-      val plan = elig.queryExecution.analyzed.canonicalized
-      val eligFp = eligDigestCache.get(plan, () => {
-        fingerprintComputations.incrementAndGet()
-        val md = java.security.MessageDigest.getInstance("MD5")
-        md.update(plan.toString.getBytes("UTF-8"))
-        md.update(plan.hashCode().toString.getBytes("UTF-8"))
-        plan.foreach {
-          case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-            lr.data.foreach(r => md.update(r.toString.getBytes("UTF-8")))
-          case _ => ()
-        }
-        md.digest().map("%02x".format(_)).mkString
-      })
-      val stateFp = md5Hex(
-        batchDirNames(spark, st.ivfPath).toSeq.sorted.mkString(",") + "#" +
-          opDirNames(spark, s"${st.root}/deletes_log").mkString(","))
-      val key = s"${st.root}|$eligFp|$stateFp|$nprobe|$nCells"
-      if (selectivityCache.size > 1024) selectivityCache.clear()
-      selectivityCache.computeIfAbsent(key, { _ =>
-        selectivityMeasurements.incrementAndGet()
-        val slim = readTable(spark, st.ivfPath).select("nn_id")
-        val n = slim.count()
-        val e = slim.join(
-          elig.select(col(elig.columns.head).as("nn_id")),
-          Seq("nn_id"), "left_semi").count()
-        if (e <= 0 || e >= n) nprobe
-        else math.min(nCells, math.ceil(nprobe.toDouble * n / e).toInt)
-      }).intValue()
-    }
+                             elig: DataFrame, nprobe: Int, nCells: Int): Int = {
+    // strong digest, not hashCode: two distinct eligible sets in one
+    // long-lived serving JVM colliding on a 32-bit hash would
+    // silently reuse the wrong probe width (recall-only per the
+    // contract, but undetectable). The plan STRING alone is not
+    // enough — LocalRelation (an in-memory allowlist DF, the
+    // scaladoc's own example) prints only its schema, so every such
+    // allowlist would share one key; digest the local rows and the
+    // plan hash alongside the structure.
+    val plan = elig.queryExecution.analyzed.canonicalized
+    val eligFp = eligDigestCache.get(plan, () => {
+      fingerprintComputations.incrementAndGet()
+      val md = java.security.MessageDigest.getInstance("MD5")
+      md.update(plan.toString.getBytes("UTF-8"))
+      md.update(plan.hashCode().toString.getBytes("UTF-8"))
+      plan.foreach {
+        case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+          lr.data.foreach(r => md.update(r.toString.getBytes("UTF-8")))
+        case _ => ()
+      }
+      md.digest().map("%02x".format(_)).mkString
+    })
+    val stateFp = md5Hex(
+      batchDirNames(spark, st.ivfPath).toSeq.sorted.mkString(",") + "#" +
+        opDirNames(spark, s"${st.root}/deletes_log").mkString(","))
+    val key = s"${st.root}|$eligFp|$stateFp|$nprobe|$nCells"
+    if (selectivityCache.size > 1024) selectivityCache.clear()
+    selectivityCache.computeIfAbsent(key, { _ =>
+      selectivityMeasurements.incrementAndGet()
+      val slim = readTable(spark, st.ivfPath).select("nn_id")
+      val n = slim.count()
+      val e = slim.join(
+        elig.select(col(elig.columns.head).as("nn_id")),
+        Seq("nn_id"), "left_semi").count()
+      Similarity.widenedNprobe(nprobe, n, e, nCells)
+    }).intValue()
+  }
 
   private def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
@@ -1445,14 +1402,23 @@ object ContinuousIngest {
       r
     }
 
-  private lazy val stateWriteEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newCachedThreadPool(
-        (r: Runnable) => {
-          val t = new Thread(r, "graft-state-write")
-          t.setDaemon(true)
-          t
-        }))
+  /** Run `body` on a new daemon thread that the CALLING thread
+    * creates, so the thread inherits the caller's Spark local
+    * properties (job group, description, scheduler pool, tracer span)
+    * as of this call: its jobs are attributed to, and cancelled with,
+    * the operation that submitted them. A reused pool thread would
+    * keep the properties of whichever call created it, and no public
+    * API copies them into an existing thread. */
+  private def fork[T](body: => T): scala.concurrent.Future[T] = {
+    val p = scala.concurrent.Promise[T]()
+    val t = new Thread(() => p.complete(
+      try scala.util.Success(body)
+      catch { case e: Throwable => scala.util.Failure(e) }),
+      "graft-state-write")
+    t.setDaemon(true)
+    t.start()
+    p.future
+  }
 
   /** Run independent state writes concurrently and rethrow the FIRST
     * failure only after every thunk has settled (no write is left in
@@ -1477,10 +1443,10 @@ object ContinuousIngest {
     * purges fan tables × partitions) — per-group chunking bounded
     * each level but let the product grow multiplicatively. Two rules
     * keep nesting deadlock-free AND thread-bounded:
-    *   1. a permit is acquired BEFORE a thunk's Future is submitted
-    *      (the submitting loop blocks, so at most
-    *      `MaxConcurrentStateWrites` pool threads exist at once), and
-    *      released when that thunk settles;
+    *   1. a permit is acquired BEFORE a thunk's thread is forked
+    *      ([[fork]] — the submitting loop blocks, so at most
+    *      `MaxConcurrentStateWrites` thunks run at once), and released
+    *      when that thunk settles;
     *   2. a thread never HOLDS a permit while awaiting a nested
     *      group: a thunk that calls [[inParallel]] releases its own
     *      permit for the duration of the nested group and re-acquires
@@ -1498,16 +1464,15 @@ object ContinuousIngest {
   private val holdsStateWritePermit: ThreadLocal[java.lang.Boolean] =
     ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
   private[graft] def inParallel(tasks: Seq[() => Unit]): Unit = {
-    import scala.concurrent.{Await, Future}
+    import scala.concurrent.Await
     import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = stateWriteEc
     // rule 2: a nested caller lends its permit to its children
     val nested = holdsStateWritePermit.get()
     if (nested) { holdsStateWritePermit.set(false); stateWritePermits.release() }
     try {
       val settled = tasks.map { t =>
         stateWritePermits.acquire() // rule 1: admission gates submission
-        Future {
+        fork {
           holdsStateWritePermit.set(true)
           try { t(); Option.empty[Throwable] }
           catch { case e: Throwable => Some(e) }
@@ -1539,95 +1504,33 @@ object ContinuousIngest {
       .map(_.getPath.getName).toSeq.sorted
   }
 
-  /** The selectivity-widened probe count the filtered faces derive
-    * when `adaptProbe` is on — EXPOSED so a caller can measure
-    * explicitly and pass the result as `nprobe` with
-    * `adaptProbe = false`: same arithmetic, so the answers are
-    * identical to the adaptive path (spec-pinned). Since the adaptive
-    * default is now MEMOIZED (see [[filteredNprobe]] — a serving loop
-    * over a stable eligible set measures once, with automatic
-    * ingest/delete invalidation), this face is for callers that want
-    * the width pinned across state changes, or derived on one root
-    * and applied to another. The widening only compensates recall, so
-    * a stale width degrades recall gracefully, never correctness. */
-  def filteredProbeWidth(spark: SparkSession, st: IngestState,
-                         a: AnnParams, eligible: DataFrame, nprobe: Int,
-                         quantizers: Option[AnnQuantizers] = None): Int = {
-    val q = quantizers.getOrElse(loadQuantizers(spark, st, a))
-    filteredNprobe(spark, st, eligible,
-      nprobe, q.cents.length, adaptProbe = true)
-  }
-
   /** FILTERED IVFADC over the MAINTAINED index: the
     * [[graft.ops.Similarity.annIvfPqFiltered]] semantics (top-k among
     * the eligible ids, candidates generated from eligible codes only
     * — pre-filter, so an eligible answer can never be crowded out of
-    * a segment's ADC top-R by ineligible rows) served from the stored
-    * tables. The probed lists' code segments are pruned at the
-    * parquet scan (`list IN (…)`, as with the other serving faces),
-    * unpacked (m bytes per candidate — no float I/O), semi-joined to
-    * the eligible ids, and scanned through the standard ADC path;
-    * rerank floats come from the docs table via the bounded-shortlist
-    * serving join. The per-call re-pack inside the ADC scan is
-    * INHERENT here — an ad-hoc predicate has no persisted pack — and
-    * its input is only the probed lists' ELIGIBLE codes, ∝ the same
-    * candidate volume the search itself scans.
+    * a segment's ADC top-R by ineligible rows) served from the index
+    * root alone. The probed lists' code segments are pruned at the
+    * parquet scan, unpacked (m bytes per candidate — no float I/O),
+    * semi-joined to the eligible ids and re-packed for the ADC scan;
+    * rerank floats gather from the packed float segments. The
+    * per-call re-pack is INHERENT here — an ad-hoc predicate has no
+    * persisted pack — and its input is only the probed lists'
+    * ELIGIBLE codes, ∝ the same candidate volume the search itself
+    * scans.
     *
     * Multiset-identical to the one-shot `annIvfPqFiltered` under the
     * persisted quantizers (`check_ingest_ann_replay`'s
     * `ingest_fltadc_*` law). Guards and conventions as on
-    * [[annIvfPqMaintained]] (parity check, `excludeSelf` id-namespace
-    * contract). */
+    * [[annIvfPqMaintained]]. */
   def annIvfPqFilteredMaintained(spark: SparkSession, st: IngestState,
                                  a: AnnParams, queries: DataFrame, k: Int,
                                  nprobe: Int, eligible: DataFrame,
                                  rerank: Int = 32,
                                  quantizers: Option[AnnQuantizers] = None,
                                  idCol: String = "doc_id",
-                                 excludeSelf: Boolean = true,
-                                 adaptProbe: Boolean = true,
-                                 rerankFromIndex: Boolean = false): DataFrame = {
-    val q = quantizers.getOrElse(loadQuantizers(spark, st, a))
-    requireIndexBatchParity(spark, st, "annIvfPqFilteredMaintained")
-    val elig = eligible.select(col(eligible.columns.head).as("nn_id"))
-    // the UNWRAPPED frame keys the memo (see filteredNprobe)
-    val nprobeEff = filteredNprobe(spark, st, eligible, nprobe,
-      q.cents.length, adaptProbe)
-    val probed = Similarity.probedLists(queries, q.cents, nprobeEff,
-      idCol, a.vecCol)
-    val index = Similarity.pqUnpack(
-        readTable(spark, st.pqPackedPath)
-          .where(col("list").isin(probed.toSeq: _*)))
-      .join(elig, Seq("nn_id"), "left_semi")
-    // a FLOAT-ONCE root reranks from the packed segments (no docs
-    // float column exists — see annIvfPqMaintained)
-    val slim = docsSlim(spark, st)
-    if (rerankFromIndex || (slim && rerank >= math.max(1, k))) {
-      // INDEX-ONLY filtered serving (the docs-free tier, filtered
-      // twin of [[annIvfPqMaintained]]'s shape): the eligible-only
-      // candidate codes re-pack per call (inherent — an ad-hoc
-      // predicate has no persisted pack; the input is the same
-      // probed-eligible m-byte volume the scan itself reads), the
-      // shortlist runs against THAT table, and the rerank floats
-      // gather from the packed float segments — byte-identical to the
-      // docs-store shape, docs table never read
-      require(rerank >= math.max(1, k),
-        s"annIvfPqFilteredMaintained: rerankFromIndex needs a rerank " +
-          s"stage (rerank=$rerank < k=$k)")
-      return annIvfPqIndexRerank(spark, st, a, queries, k, nprobeEff,
-        rerank, q, idCol, excludeSelf,
-        codePacked = Some(Similarity.pqPack(index, m = packedAdcM(spark, st))))
-    }
-    // rerank = 0 (the pure-ADC audit shape) never touches floats —
-    // a slim root passes no corpus
-    val corpus =
-      if (slim) None
-      else Some(readTable(spark, st.docsPath)
-        .select(col("doc_id").as(idCol), col(a.vecCol)))
-    Similarity.annIvfPqFromIndex(index, queries, k, nprobeEff, q.cents,
-      q.books, rerank = rerank, idCol = idCol, vecCol = a.vecCol,
-      corpus = corpus, excludeSelf = excludeSelf)
-  }
+                                 excludeSelf: Boolean = true): DataFrame =
+    search(spark, st, a, queries, k, nprobe, Some(eligible), Some(rerank),
+      quantizers, idCol, excludeSelf, "annIvfPqFilteredMaintained")
 
   /** The five maintained index tables (assignment, packed float
     * segments, codes, packed code segments, semantic assignments)
@@ -1680,155 +1583,105 @@ object ContinuousIngest {
       "batch (or rebuildIndexes) first")
   }
 
-  /** IVFADC query face over the MAINTAINED tables: the reranked
-    * product path scans the PERSISTED `pq_packed` code segments
-    * ([[Similarity.annIvfPqFromPacked]]) — pack-once, so a serving
-    * call never re-joins or re-packs the corpus-sized code table —
-    * with the maintained DOCS table as the rerank float store
-    * (external queries are usually not corpus members, so reranking
-    * against the query batch alone would drop every candidate at the
-    * float join). Floats are touched only by the `rerank` shortlist
-    * (∝ nq·rerank rows), never by the ADC candidate stream.
-    * Byte-compatible with the one-shot `annIvfPq` under the same
-    * persisted quantizers (segmentation independence);
-    * ContinuousIngestSpec pins the equality through a real ingest
-    * round trip.
-    *
-    * Guarded by [[requireIndexBatchParity]] across ALL FIVE index
-    * tables — the product path reads only `pq_packed` (plus docs for
-    * the rerank floats), but any table's orphaned or missing batch
-    * dir means THIS root is missing or misrepresenting a batch's
-    * rows, so every asymmetry fails loudly instead of silently
-    * serving partial answers.
-    *
-    * `excludeSelf` (default true — the dedup/self-query convention):
-    * id equality means same document; an EXTERNAL query batch whose
-    * id namespace may collide with corpus doc_ids must pass `false`,
-    * or a query sharing an id with its true nearest corpus row
-    * silently loses that answer.
-    *
-    * `rerankFromIndex = true` answers from the INDEX ROOT ALONE —
-    * rerank floats gathered from the `ivf_packed` segments instead of
-    * a per-batch corpus scan of docs (see [[annIvfPqIndexRerank]]).
-    * Byte-identical answers, EAGER candidate stage, and the docs
-    * table need not exist on the serving side. */
+  /** IVFADC query face over the MAINTAINED tables: the ADC shortlist
+    * scans the PERSISTED `pq_packed` code segments — pack-once, so a
+    * serving call never re-joins or re-packs the corpus-sized code
+    * table — and the rerank floats gather from `ivf_packed`
+    * ([[graft.ops.Similarity.annIvfPqGatherRerank]]), so the index
+    * root answers EXTERNAL queries alone and the docs table need not
+    * exist on the serving side. Floats are touched only for the
+    * `rerank` shortlist (∝ nq·rerank rows), never by the ADC
+    * candidate stream. The candidate stage runs EAGERLY (one action)
+    * so the gather can be pruned to the shortlist ids. `rerank = 0`
+    * is the pure-ADC audit shape over the same code segments, pruned
+    * to the probed lists. Byte-compatible with the one-shot
+    * `annIvfPq` under the same persisted quantizers (segmentation
+    * independence; `check_ingest_ann_replay`'s `ingest_search_*`
+    * law). Conventions and guards as on every maintained face
+    * ([[search]]). */
   def annIvfPqMaintained(spark: SparkSession, st: IngestState, a: AnnParams,
                          queries: DataFrame, k: Int, nprobe: Int,
                          rerank: Int = 32,
                          quantizers: Option[AnnQuantizers] = None,
                          idCol: String = "doc_id",
-                         excludeSelf: Boolean = true,
-                         rerankFromIndex: Boolean = false): DataFrame = {
-    val q = quantizers.getOrElse(loadQuantizers(spark, st, a))
-    requireIndexBatchParity(spark, st, "annIvfPqMaintained")
-    // a FLOAT-ONCE root has no docs float column — reranks ALWAYS
-    // gather from the packed segments there (same answers: the index
-    // store serves the exact unit vectors the docs shape normalizes to)
-    val slim = docsSlim(spark, st)
-    if (rerankFromIndex || (slim && rerank >= math.max(1, k))) {
-      require(rerank >= math.max(1, k),
-        s"annIvfPqMaintained: rerankFromIndex needs a rerank stage " +
-          s"(rerank=$rerank < k=$k) — the pure-ADC face has no float reads " +
-          "to redirect")
-      return annIvfPqIndexRerank(spark, st, a, queries, k, nprobe, rerank,
-        q, idCol, excludeSelf)
-    }
-    if (rerank >= math.max(1, k)) {
-      // the product path: scan the PERSISTED code segments — no
-      // corpus-sized ivf ⋈ pq join, no per-call re-pack (measured
-      // 3.0 s of a 3.2 s serving batch before pack-once)
-      val corpus = readTable(spark, st.docsPath)
-        .select(col("doc_id").as(idCol), col(a.vecCol))
-      Similarity.annIvfPqFromPacked(readTable(spark, st.pqPackedPath),
-        queries, k, nprobe, q.cents, q.books, rerank = rerank,
-        idCol = idCol, vecCol = a.vecCol,
-        corpus = Some(corpus), excludeSelf = excludeSelf)
-    } else {
-      // rerank = 0 is the pure-ADC audit face (the degenerate-law
-      // shape) — rare, served from the core tables, and float-free
-      // (corpus is only consulted when rerank > 0, so a slim root
-      // passes None)
-      val index = readTable(spark, st.ivfPath).select("nn_id", "list")
-        .join(readTable(spark, st.pqPath)
-          .select(col("vec_id").as("nn_id"), col("codes")), "nn_id")
-      val corpus =
-        if (slim) None
-        else Some(readTable(spark, st.docsPath)
-          .select(col("doc_id").as(idCol), col(a.vecCol)))
-      Similarity.annIvfPqFromIndex(index, queries, k, nprobe,
-        q.cents, q.books, rerank = rerank, idCol = idCol, vecCol = a.vecCol,
-        corpus = corpus, excludeSelf = excludeSelf)
-    }
-  }
+                         excludeSelf: Boolean = true): DataFrame =
+    search(spark, st, a, queries, k, nprobe, None, Some(rerank), quantizers,
+      idCol, excludeSelf, "annIvfPqMaintained")
 
-  /** INDEX-ONLY serving rerank: answer a query batch from the index
-    * root alone — `pq_packed` for the ADC candidate scan, `ivf_packed`
-    * for the rerank floats — never touching the docs table. The docs
-    * shape scans the corpus float column once per serving batch
-    * (semi-join-filtered, but still a full-corpus column read); here
-    * the candidates' unit vectors are GATHERED from the packed float
-    * segments the slim-index discipline already maintains
-    * ([[graft.functions.Native.gatherVecsNative]] — one binary search
-    * per candidate id per surviving segment), so float reads are
-    * candidate-proportional up to scan granularity and a serving
-    * deployment ships only the index root, not the 100 TB corpus.
+  /** The one maintained ANN search behind the four query faces,
+    * composed from three choices:
+    *  - CANDIDATES: the persisted packed segments — read whole, or
+    *    pruned to the probed lists at the parquet scan (`list IN (…)`)
+    *    and unpacked, then semi-joined to `eligible`'s ids when a
+    *    filter is given, with probing widened by the memoized
+    *    selectivity ([[filteredNprobe]]);
+    *  - SCORING: exact [[graft.functions.DotTopK]] over `ivf_packed`
+    *    (`rerank = None`), or the ADC shortlist over `pq_packed`;
+    *  - RERANK: for ADC with `rerank ≥ k`, floats are gathered from
+    *    `ivf_packed` (a shortlist id the gather misses cannot occur:
+    *    both packed tables are written from the same assignment rows
+    *    per batch, and the parity guard below refuses asymmetric roots
+    *    first); `rerank = 0` is pure ADC.
     *
-    * EAGER, unlike every other query face: the ADC shortlist must be
-    * known before the gather filter can be built, so this method runs
-    * the candidate stage at CALL time (one action) plus a tiny
-    * probed-list action, then returns the lazy rerank plan. Both
-    * driver collects are bounded by the serving contract that already
-    * caps nq — the per-query LUTs broadcast (nq·m·ksub doubles), so
-    * nq·rerank id pairs and nq·nprobe list ids are of the same order.
+    * Every call first runs [[requireIndexBatchParity]]: an append that
+    * crashed partway leaves assignment partitions with no packed twin
+    * (or the reverse), and a bare packed read would silently answer
+    * from a partial index — the parity check (one listing per table,
+    * metadata cost) fails loudly instead.
     *
-    * The gather's `list IN (probed lists)` filter reaches the parquet
-    * scan; with `spark.sql.parquet.pushdown.inFilterThreshold` raised
-    * to ≥ the probed-list count (default 10 — serving sessions should
-    * set it, as the specs do) the In-set pushes exactly and parquet's
-    * row-group dictionary filter skips segments of unprobed lists.
-    * Below the threshold-exceeding fallback (a min/max range push)
-    * the filter still evaluates before the gather, just without
-    * row-group skipping.
-    *
-    * Byte-identical to the docs-store shape (ContinuousIngestSpec
-    * law): the packed segments persist [[graft.ops.Similarity.ivfAssign]]'s
-    * normalized vectors verbatim, and the final scoring skips
-    * re-normalization, so every cosine — and every tie — matches. A
-    * shortlist id missing from the gather is impossible under
-    * [[requireIndexBatchParity]] (ivf_packed and pq_packed are written
-    * from the same assignment rows per batch, and the guard refuses
-    * asymmetric roots before this path runs). */
-  private def annIvfPqIndexRerank(spark: SparkSession, st: IngestState,
-                                  a: AnnParams, queries: DataFrame, k: Int,
-                                  nprobe: Int, rerank: Int,
-                                  q: AnnQuantizers, idCol: String,
-                                  excludeSelf: Boolean,
-                                  codePacked: Option[DataFrame] = None): DataFrame = {
-    import spark.implicits._
-    // action 1 (tiny): the union of every query's probed lists — the
-    // only lists a candidate can come from, recomputed from the
-    // centroid literal over the nq query rows (no corpus scan)
-    val probedLists = Similarity.probedLists(queries, q.cents, nprobe,
+    * `excludeSelf` (default true on the batch faces — the
+    * dedup/self-query convention): id equality means same document;
+    * an EXTERNAL query batch whose id namespace may collide with
+    * corpus doc_ids must pass `false`, or a query sharing an id with
+    * its true nearest corpus row silently loses that answer. */
+  private def search(spark: SparkSession, st: IngestState, a: AnnParams,
+                     queries: DataFrame, k: Int, nprobe: Int,
+                     eligible: Option[DataFrame], rerank: Option[Int],
+                     quantizers: Option[AnnQuantizers], idCol: String,
+                     excludeSelf: Boolean, caller: String): DataFrame = {
+    val q = quantizers.getOrElse(loadQuantizers(spark, st, a))
+    requireIndexBatchParity(spark, st, caller)
+    // the UNWRAPPED frame keys the memo (see filteredNprobe)
+    val nprobeEff = eligible.fold(nprobe)(e =>
+      filteredNprobe(spark, st, e, nprobe, q.cents.length))
+    lazy val probed = Similarity.probedLists(queries, q.cents, nprobeEff,
       idCol, a.vecCol)
-    // action 2: the ADC candidate stage, collected — nq·rerank id
-    // pairs. `codePacked` lets a caller substitute a restricted code
-    // table (the filtered face's eligible-only re-pack); candidates
-    // then come only from it, and the float gather below stays valid
-    // because its id set can only shrink
-    val pairs = Similarity.pqPackedShortlist(
-        codePacked.getOrElse(readTable(spark, st.pqPackedPath)),
-        queries, nprobe, q.cents, q.books,
-        rerank, idCol, a.vecCol, lit(true), excludeSelf)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val wanted = pairs.map(_._2).distinct.sorted
-    val shortlist = spark.createDataset(pairs.toSeq).toDF("vec_id", "nn_id")
-    val store = readTable(spark, st.ivfPackedPath)
-      .where(col("list").isin(probedLists.toSeq: _*))
-      .select(explode(graft.functions.Native.gatherVecsNative(spark,
-        col("packed"), col("ids"), wanted)).as("e"))
-      .select(col("e.nn_id").as("nn_id"), col("e.vb").as("vb"))
-    Similarity.scoreShortlistUnitStore(shortlist, store, queries, k,
-      idCol, a.vecCol, lit(true))
+    // only the probed lists' segments can contribute candidates —
+    // prune them at the parquet scan before paying the unpack
+    def candidates(path: String, unpack: DataFrame => DataFrame): DataFrame = {
+      val rows = unpack(readTable(spark, path)
+        .where(col("list").isin(probed.toSeq: _*)))
+      eligible.fold(rows)(e => rows.join(
+        e.select(col(e.columns.head).as("nn_id")), Seq("nn_id"), "left_semi"))
+    }
+    rerank match {
+      case None if eligible.isEmpty =>
+        Similarity.annIvfFromPacked(readTable(spark, st.ivfPackedPath),
+          queries, k, nprobeEff, q.cents, idCol = idCol, vecCol = a.vecCol,
+          excludeSelf = excludeSelf)
+      case None =>
+        Similarity.annIvfFromIndex(candidates(st.ivfPackedPath,
+            Similarity.ivfUnpack),
+          queries, k, nprobeEff, q.cents, idCol = idCol, vecCol = a.vecCol,
+          excludeSelf = excludeSelf)
+      case Some(r) if r <= 0 =>
+        Similarity.annIvfPqFromIndex(candidates(st.pqPackedPath,
+            Similarity.pqUnpack),
+          queries, k, nprobeEff, q.cents, q.books, idCol = idCol,
+          vecCol = a.vecCol, excludeSelf = excludeSelf)
+      case Some(r) =>
+        // an ad-hoc filter has no persisted pack: the eligible codes
+        // re-pack per call (the probed-eligible m-byte volume the scan
+        // reads anyway); the shortlist's ids can only shrink, so the
+        // float gather stays valid
+        val codes =
+          if (eligible.isEmpty) readTable(spark, st.pqPackedPath)
+          else Similarity.pqPack(candidates(st.pqPackedPath,
+            Similarity.pqUnpack), m = q.books.length)
+        Similarity.annIvfPqGatherRerank(codes,
+          readTable(spark, st.ivfPackedPath), queries, k, nprobeEff, probed,
+          q.cents, q.books, r, idCol, a.vecCol, excludeSelf)
+    }
   }
 
   private[streaming] def batchDirNames(spark: SparkSession, path: String): Set[String] =
@@ -3496,18 +3349,14 @@ object ContinuousIngest {
     * quantizers are immutable post-bootstrap and load once. The
     * parity guard runs per batch at metadata cost, so a crashed
     * concurrent append halts serving loudly instead of answering
-    * from a partial index.
-    *
-    * `rerankFromIndex = true` serves from the index root alone (no
-    * docs table on the serving side — rerank floats gathered from the
-    * packed segments, byte-identical answers; see
-    * [[annIvfPqMaintained]]). */
+    * from a partial index. Like every maintained face, serving reads
+    * the index root alone: rerank floats gather from the packed float
+    * segments, so the serving tier needs no docs table. */
   def serve(queryStream: DataFrame, st: IngestState, a: AnnParams,
             outPath: String, k: Int, nprobe: Int, rerank: Int = 32,
             excludeSelf: Boolean = false,
             quantizers: Option[AnnQuantizers] = None,
-            availableNow: Boolean = true,
-            rerankFromIndex: Boolean = false): StreamingQuery = {
+            availableNow: Boolean = true): StreamingQuery = {
     val spark = queryStream.sparkSession
     // same deployment-startup argument as [[start]]: bringing the
     // serving stream up happens from the maintenance context (the
@@ -3519,7 +3368,7 @@ object ContinuousIngest {
     val writer = queryStream.writeStream
       .foreachBatch { (b: DataFrame, id: Long) =>
         annIvfPqMaintained(spark, st, a, b, k, nprobe, rerank, quant,
-            excludeSelf = excludeSelf, rerankFromIndex = rerankFromIndex)
+            excludeSelf = excludeSelf)
           .write.mode("overwrite").parquet(s"$outPath/batch=$id")
         () }
       .option("checkpointLocation", s"$outPath/_checkpoint")

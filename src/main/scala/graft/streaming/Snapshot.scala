@@ -42,12 +42,13 @@ import graft.streaming.ContinuousIngest.IngestState
   * exportRoot)` returns an [[IngestState]] rooted at the newest
   * complete version; [[ContinuousIngest.readTable]] and the
   * batch-dir listings are manifest-aware, so `annIvfMaintained`,
-  * `annIvfPqMaintained` (both rerank shapes), the filtered faces,
-  * and [[ContinuousIngest.serve]] all answer from the snapshot
+  * `annIvfPqMaintained`, the filtered faces and
+  * [[ContinuousIngest.serve]] all answer from the snapshot
   * byte-identically to the primary (law: `check_snapshot_serve`).
-  * An index-only export (the default, `includeDocs = false`) writes
-  * the docs-slim marker so reranks auto-gather from the packed float
-  * segments — the docs-free serving tier.
+  * Every maintained face reads the index root alone (reranks gather
+  * from the packed float segments), so an index-only export (the
+  * default, `includeDocs = false`) is a complete serving tier; it
+  * writes the docs-slim marker so the tree reads as float-once.
   *
   * RIGHT-TO-BE-FORGOTTEN propagation: snapshots pin history, and a
   * takedown's whole point is destroying it. Every version records the
@@ -452,9 +453,8 @@ object Snapshot {
     }
     if (!includeDocs && !full) {
       // index-only snapshot: no docs table at all. Stamp the slim
-      // marker so the maintained reranks auto-switch to the packed
-      // float segments (the float-once convention: "the floats live
-      // only in the index here" — literally true on this tree).
+      // marker (the float-once convention: "the floats live only in
+      // the index here" — literally true on this tree).
       val dst = new HPath(vtmp, "docs")
       fs.mkdirs(dst)
       writeText(fs, new HPath(dst, ContinuousIngest.DocsSlimMarker), "")

@@ -626,16 +626,15 @@ class ContinuousIngestSpec extends SparkSpec {
     assert(servedRows() === served, "re-served answers changed")
   }
 
-  /** INDEX-ONLY serving rerank: `rerankFromIndex = true` answers from
-    * the index root alone — ADC candidates from `pq_packed`, rerank
-    * floats GATHERED from `ivf_packed`'s persisted unit vectors — so
-    * a serving deployment ships no docs table and reads no corpus
-    * float column per batch. Pins: byte-identical answers to the
-    * docs-store shape (corpus self-queries AND external queries with
-    * the id-collision row), survival of the docs table being
-    * physically absent (the deployment claim, functionally — docs
-    * renamed away, answers unchanged), and the loud pure-ADC guard. */
-  test("index-only rerank: byte-identical to the docs shape, and serves with the docs table gone") {
+  /** INDEX-ONLY serving rerank: the IVFADC face answers from the index
+    * root alone — ADC candidates from `pq_packed`, rerank floats
+    * GATHERED from `ivf_packed`'s persisted unit vectors — so a serving
+    * deployment ships no docs table and reads no corpus float column
+    * per batch. Pins: an external query sharing an id with its corpus
+    * twin keeps that answer under `excludeSelf = false`, the docs
+    * table being physically absent changes no answer, and the
+    * streaming `serve` twin equals the direct calls. */
+  test("index-only rerank: keeps the id-collision answer, serves with the docs table gone, and serve equals the direct calls") {
     import graft.streaming.ContinuousIngest.AnnParams
     val root = freshRoot()
     def emb(i: Long): Seq[Float] =
@@ -652,59 +651,34 @@ class ContinuousIngestSpec extends SparkSpec {
     val q = Some(ContinuousIngest.loadQuantizers(spark, st, ann))
     def same(name: String, a: DataFrame, b: DataFrame): Unit =
       assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
-        s"$name: index-only rerank differs from the docs-store shape")
-    // corpus self-queries under the default self-exclusion
-    val corpus = ContinuousIngest.readTable(spark, st.docsPath)
-      .select("doc_id", "embedding")
-    same("self",
-      ContinuousIngest.annIvfPqMaintained(spark, st, ann, corpus,
-        k = 1, nprobe = 2, rerank = 8, q, rerankFromIndex = true),
-      ContinuousIngest.annIvfPqMaintained(spark, st, ann, corpus,
-        k = 1, nprobe = 2, rerank = 8, q))
+        s"$name: answers differ")
     // external queries incl. the 1001 collision (emb period 21 ⇒ the
     // 1022 twin), under the serving convention excludeSelf = false
     val extQ = (Seq((1001L, emb(1001L))) ++
       (1L to 5L).map(i => (5000L + i, emb(3L * i)))).toDF("doc_id", "embedding")
     val gotExt = ContinuousIngest.annIvfPqMaintained(spark, st, ann, extQ,
-      k = 2, nprobe = 4, rerank = 8, q, excludeSelf = false,
-      rerankFromIndex = true).localCheckpoint()
-    same("external", gotExt,
-      ContinuousIngest.annIvfPqMaintained(spark, st, ann, extQ,
-        k = 2, nprobe = 4, rerank = 8, q, excludeSelf = false))
+      k = 2, nprobe = 4, rerank = 8, q, excludeSelf = false).localCheckpoint()
+    assert(gotExt.count() === 12L, "every external query must get k answers")
     assert(gotExt.where(col("vec_id") === 1001L && col("rank") === 1)
       .select("nn_id").as[Long].collect().toSeq === Seq(1001L),
       "the colliding query must keep answering its own corpus row")
     // the deployment claim, functionally: with the docs table GONE the
-    // index-only face still answers (identically), while the docs
-    // shape cannot
+    // face still answers, identically
     val docsDir = java.nio.file.Path.of(st.docsPath)
     val parked = java.nio.file.Path.of(s"${st.docsPath}.parked")
     java.nio.file.Files.move(docsDir, parked)
     try {
-      val gotNoDocs = ContinuousIngest.annIvfPqMaintained(spark, st, ann,
-        extQ, k = 2, nprobe = 4, rerank = 8, q, excludeSelf = false,
-        rerankFromIndex = true).localCheckpoint()
-      same("docs-free", gotNoDocs, gotExt)
-      intercept[Throwable] {
-        ContinuousIngest.annIvfPqMaintained(spark, st, ann, extQ,
-          k = 2, nprobe = 4, rerank = 8, q, excludeSelf = false).count()
-      }
+      same("docs-free", ContinuousIngest.annIvfPqMaintained(spark, st, ann,
+        extQ, k = 2, nprobe = 4, rerank = 8, q, excludeSelf = false)
+        .localCheckpoint(), gotExt)
     } finally java.nio.file.Files.move(parked, docsDir)
-    // the rerank-float redirect has no meaning for the pure-ADC face
-    val eAdc = intercept[IllegalArgumentException] {
-      ContinuousIngest.annIvfPqMaintained(spark, st, ann, extQ,
-        k = 2, nprobe = 4, rerank = 0, q, rerankFromIndex = true)
-    }
-    assert(eAdc.getMessage.contains("pure-ADC"),
-      s"rerank=0 + rerankFromIndex must refuse loudly: ${eAdc.getMessage}")
-    // streaming twin: serve(rerankFromIndex = true) == the direct calls
+    // streaming twin: serve == the direct calls
     extQ.coalesce(1).write.parquet(s"$root/qix/chunk_0")
     val out = s"$root/served_ix"
     ContinuousIngest.serve(
       Bounded.fileStream(spark, s"$root/qix/chunk_*",
         schemaDDL = "doc_id BIGINT, embedding ARRAY<FLOAT>"),
-      st, ann, out, k = 2, nprobe = 4, rerank = 8,
-      rerankFromIndex = true).awaitTermination()
+      st, ann, out, k = 2, nprobe = 4, rerank = 8).awaitTermination()
     same("served-ix", spark.read.parquet(out).drop("batch"), gotExt)
   }
 
@@ -758,8 +732,8 @@ class ContinuousIngestSpec extends SparkSpec {
     assert(perQuery === Set(2),
       s"every query must get exactly k eligible answers, got sizes $perQuery")
     // the ADC twin: maintained filtered IVFADC (code segments pruned
-    // + eligible semi-join, docs rerank store) == the one-shot
-    // annIvfPqFiltered under the persisted quantizers
+    // + eligible semi-join, floats gathered from the packed segments)
+    // == the one-shot annIvfPqFiltered under the persisted quantizers
     val gotAdc = ContinuousIngest.annIvfPqFilteredMaintained(spark, st, ann,
       docs.where(slice), k = 2, nprobe = 2, eligible, rerank = 8, q)
     val wantAdc = graft.ops.Similarity.annIvfPqFiltered(docs, 2,
@@ -777,24 +751,16 @@ class ContinuousIngestSpec extends SparkSpec {
     // it before parking the table (a real deployment's allowlist is
     // its own table; the FACE reads only the index root)
     val eligCp = eligible.localCheckpoint()
-    // measure-once serving: filteredProbeWidth + adaptProbe=false is
-    // the same arithmetic as the per-call adaptive path, so a serving
-    // loop that hoists the two assignment scans answers identically
-    val width = ContinuousIngest.filteredProbeWidth(spark, st, ann,
-      eligible, nprobe = 2, q)
-    val gotHoisted = ContinuousIngest.annIvfFilteredMaintained(spark, st, ann,
-      docs.where(slice), k = 2, nprobe = width, eligible, q,
-      adaptProbe = false)
-    assert(gotHoisted.exceptAll(got).isEmpty && got.exceptAll(gotHoisted).isEmpty,
-      "hoisted probe width answers differ from the per-call adaptive path")
-    // the index-only ADC twin must be byte-identical to the
-    // docs-store shape BEFORE the parking proves its docs-free claim
-    val gotAdcIx = ContinuousIngest.annIvfPqFilteredMaintained(spark, st, ann,
-      docs.where(slice), k = 2, nprobe = 2, eligible, rerank = 8, q,
-      rerankFromIndex = true).localCheckpoint()
-    assert(gotAdcIx.exceptAll(wantAdc).isEmpty &&
-      wantAdc.exceptAll(gotAdcIx).isEmpty,
-      "index-only filtered IVFADC differs from the one-shot answers")
+    // measure-once serving: a loop re-querying the SAME eligible frame
+    // on an unchanged state measures the selectivity once (the memo)
+    // and answers identically to the first call
+    val m0 = ContinuousIngest.selectivityMeasurements.get()
+    val again = ContinuousIngest.annIvfFilteredMaintained(spark, st, ann,
+      docs.where(slice), k = 2, nprobe = 2, eligible, q)
+    assert(again.exceptAll(got).isEmpty && got.exceptAll(again).isEmpty,
+      "a memoized probe width answers differently from the first call")
+    assert(ContinuousIngest.selectivityMeasurements.get() === m0,
+      "a repeat call on an unchanged state must not re-measure selectivity")
     java.nio.file.Files.move(docsDir, parked)
     try {
       val noDocs = ContinuousIngest.annIvfFilteredMaintained(spark, st, ann,
@@ -805,7 +771,7 @@ class ContinuousIngestSpec extends SparkSpec {
       // queries answered with the corpus table physically absent
       val noDocsAdc = ContinuousIngest.annIvfPqFilteredMaintained(spark, st,
         ann, extQ, k = 2, nprobe = 2, eligCp, rerank = 8, q,
-        excludeSelf = false, rerankFromIndex = true)
+        excludeSelf = false)
       assert(noDocsAdc.count() === 10,
         "index-only filtered IVFADC must answer with the docs table gone")
       assert(noDocsAdc.select("nn_id").as[Long].collect().forall(eligSet),
@@ -2052,26 +2018,36 @@ class ContinuousIngestSpec extends SparkSpec {
     val narrow = Seq(1001L, 1002L).toDF("doc_id")
     val broad = ContinuousIngest.readTable(spark, st.docsPath)
       .select("doc_id").as[Long].collect().toSeq.toDF("doc_id")
+    val qs = ContinuousIngest.readTable(spark, st.docsPath)
+      .select("doc_id", "embedding").limit(3).localCheckpoint()
+    def search(eligible: DataFrame): Set[Long] =
+      ContinuousIngest.annIvfFilteredMaintained(spark, st, ann, qs, k = 2,
+        nprobe = 1, eligible, q).select("nn_id").as[Long].collect().toSet
     val fp0 = ContinuousIngest.fingerprintComputations.get()
-    val wNarrow = ContinuousIngest.filteredProbeWidth(spark, st, ann,
-      narrow, nprobe = 1, q)
+    val m0 = ContinuousIngest.selectivityMeasurements.get()
+    val narrowAnswers = search(narrow)
+    assert(narrowAnswers.nonEmpty && narrowAnswers.subsetOf(Set(1001L, 1002L)),
+      s"an ineligible neighbor leaked: $narrowAnswers")
+    assert(ContinuousIngest.selectivityMeasurements.get() === m0 + 1)
     // a serving loop re-probing the SAME allowlist object digests its
-    // rows exactly once — the fingerprint rides the weak-keyed
-    // plan-object cache, not a per-call row walk
-    (1 to 5).foreach { _ =>
-      assert(ContinuousIngest.filteredProbeWidth(spark, st, ann,
-        narrow, nprobe = 1, q) === wNarrow)
-    }
+    // rows exactly once and measures once — the fingerprint rides the
+    // weak-keyed plan-object cache, not a per-call row walk
+    (1 to 5).foreach(_ => assert(search(narrow) === narrowAnswers))
     assert(ContinuousIngest.fingerprintComputations.get() === fp0 + 1,
       "the allowlist digest must be computed once per plan object " +
         "across a serving loop")
-    val wBroad = ContinuousIngest.filteredProbeWidth(spark, st, ann,
-      broad, nprobe = 1, q)
+    assert(ContinuousIngest.selectivityMeasurements.get() === m0 + 1,
+      "a serving loop over one allowlist must measure its selectivity once")
+    // the broad allowlist has the same schema and plan string: only a
+    // row-digesting fingerprint gives it its own memo entry, and so
+    // its own measurement (a shared key would reuse the narrow
+    // allowlist's widened probe count)
+    search(broad)
     assert(ContinuousIngest.fingerprintComputations.get() === fp0 + 2,
       "a distinct allowlist object must get its own digest")
-    assert(wNarrow > wBroad,
-      s"memo served one allowlist the other's width: narrow=$wNarrow " +
-        s"broad=$wBroad (LocalRelation fingerprints must differ)")
+    assert(ContinuousIngest.selectivityMeasurements.get() === m0 + 2,
+      "the memo served one in-memory allowlist the other's probe width " +
+        "(LocalRelation fingerprints must differ)")
   }
 
   /** `compactEveryNBatches`: a forever-running stream compacts its own
@@ -2631,5 +2607,43 @@ class ContinuousIngestSpec extends SparkSpec {
     }
     assert(err.getMessage === "boom")
     assert(ran.get() === 2 * n + 1, "a failure must not stop later thunks")
+    // every job a group launches carries its OWN caller's Spark local
+    // properties (job group, description, scheduler pool, tracer
+    // span): two groups run in turn under different values of one
+    // property. A reused pool thread keeps the value it inherited when
+    // it was created, so the second group's jobs would carry the first
+    // caller's (and cancelJobGroup on the caller's group would miss
+    // them).
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p =>
+          Option(p.getProperty("graft.test.thunk"))
+            .map(t => (t, p.getProperty("graft.test.caller"))))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      Seq("A", "B").foreach { caller =>
+        sc.setLocalProperty("graft.test.caller", caller)
+        ContinuousIngest.inParallel((1 to 2 * n).map(i => () => {
+          sc.setLocalProperty("graft.test.thunk", s"$caller$i")
+          sc.parallelize(1 to 2, 1).count()
+          ()
+        }))
+      }
+      val deadline = System.nanoTime() + 30000000000L
+      while (seen.size < 4 * n && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.setLocalProperty("graft.test.caller", null)
+    }
+    val jobs = seen.toArray(Array.empty[(String, String)]).toSeq
+    assert(jobs.size === 4 * n, s"one job per thunk expected: $jobs")
+    val foreign = jobs.filterNot { case (thunk, caller) => thunk.take(1) == caller }
+    assert(foreign.isEmpty,
+      s"jobs carried another caller's local properties: $foreign")
   }
 }

@@ -357,49 +357,48 @@ class PlanSpec extends SparkSpec {
     assert(ipr.contains("BroadcastHashJoin"),
       s"packed list table not broadcast:\n${ipr.take(1000)}")
     // the SERVING face (external bounded query batch against a STORED
-    // index + corpus — the deployment shape annIvfPqMaintained runs)
-    // must keep the corpus float table UNSHUFFLED: the id-only
-    // shortlist (nq·R two-long rows) and the query floats broadcast
-    // onto a single corpus scan, so the whole query face plans with
-    // ZERO shuffled joins (a SortMergeJoin here means the 100 TB side
-    // moved because a computed shortlist had no stats;
-    // exactScoreShortlist's serving shape makes it impossible). The
-    // one-shot `ipr` plan above legitimately shuffles while BUILDING
-    // its index (corpus ⋈ corpus on nn_id) and its SELF-QUERY rerank
-    // deliberately does NOT broadcast the corpus-sized shortlist
-    // (measured +29% on ann_pq at sf0.1), so the pin lives on the
-    // corpus-passing face only.
+    // index — the plan annIvfPqMaintained runs) must never shuffle a
+    // join side: the ADC shortlist scans the stored pq_packed segments
+    // behind a broadcast with no Window and no corpus-sized groupBy
+    // (the pack cost must not reappear at query time in any form), and
+    // the rerank gathers floats from the stored ivf_packed segments,
+    // with the id-only shortlist (nq·R two-long rows) and the query
+    // floats broadcast onto the candidate-sized gather — ZERO
+    // shuffled joins (a SortMergeJoin here means an index-sized side
+    // moved). The one-shot `ipr` plan above legitimately shuffles
+    // while BUILDING its index and its SELF-QUERY rerank deliberately
+    // does NOT broadcast the corpus-sized shortlist (measured +29% on
+    // ann_pq at sf0.1), so the pin lives on the stored-index face.
     val idxDir = java.nio.file.Files.createTempDirectory("graft_planspec_idx")
     try {
+      import org.apache.spark.sql.functions.{col, lit}
       val cents = graft.ops.Similarity.ivfCentroids(embs, 8)
-      graft.ops.Similarity.ivfAssign(embs, cents).select("nn_id", "list")
-        .join(graft.ops.Similarity.pqEncode(embs, books)
-          .select(org.apache.spark.sql.functions.col("vec_id").as("nn_id"),
-            org.apache.spark.sql.functions.col("codes")), "nn_id")
+      val assigned = graft.ops.Similarity.ivfAssign(embs, cents)
+      graft.ops.Similarity.pqPack(assigned.select("nn_id", "list")
+          .join(graft.ops.Similarity.pqEncode(embs, books)
+            .select(col("vec_id").as("nn_id"), col("codes")), "nn_id"), m = 8)
+        .write.mode("overwrite").parquet(s"${idxDir}_adc")
+      graft.ops.Similarity.ivfPack(assigned, dim = cents.head.length)
         .write.mode("overwrite").parquet(idxDir.toString)
-      val qp = plan(graft.ops.Similarity.annIvfPqFromIndex(
-        spark.read.parquet(idxDir.toString),
-        embs.where(org.apache.spark.sql.functions.col("vec_id") % 100 === 0),
-        k = 1, nprobe = 4, cents, books, rerank = 16,
-        corpus = Some(embs)))
+      val codes = spark.read.parquet(s"${idxDir}_adc")
+      val queries = embs.where(col("vec_id") % 100 === 0)
+      val sp = plan(graft.ops.Similarity.pqPackedShortlist(codes, queries,
+        nprobe = 4, cents, books, rerank = 16, "vec_id", "embedding",
+        lit(true), excludeSelf = true))
+      assert(!sp.contains("SortMergeJoin") && !sp.contains("ShuffledHashJoin"),
+        s"packed-ADC shortlist shuffled a join side:\n${sp.take(1500)}")
+      assert(!sp.contains("Window"),
+        s"packed-ADC shortlist re-packs at query time:\n${sp.take(1500)}")
+      assert(sp.contains("graft_pq_adc_topk"), sp.take(800))
+      val probed = graft.ops.Similarity.probedLists(queries, cents, 4,
+        "vec_id", "embedding")
+      val qp = plan(graft.ops.Similarity.annIvfPqGatherRerank(codes,
+        spark.read.parquet(idxDir.toString), queries, k = 1, nprobe = 4,
+        probed, cents, books, rerank = 16, "vec_id", "embedding",
+        excludeSelf = true))
+      assert(qp.contains("graft_gather_vecs"), qp.take(800))
       assert(!qp.contains("SortMergeJoin") && !qp.contains("ShuffledHashJoin"),
         s"maintained-index rerank shuffled a join side:\n${qp.take(1500)}")
-      // the PACK-ONCE serving plan (stored pq_packed segments — what
-      // annIvfPqMaintained scans): zero shuffled joins AND no Window,
-      // no corpus-sized groupBy — the pack cost must not reappear at
-      // query time in any form
-      graft.ops.Similarity.pqPack(spark.read.parquet(idxDir.toString), m = 8)
-        .write.mode("overwrite").parquet(s"${idxDir}_adc")
-      val pp = plan(graft.ops.Similarity.annIvfPqFromPacked(
-        spark.read.parquet(s"${idxDir}_adc"),
-        embs.where(org.apache.spark.sql.functions.col("vec_id") % 100 === 0),
-        k = 1, nprobe = 4, cents, books, rerank = 16,
-        corpus = Some(embs)))
-      assert(!pp.contains("SortMergeJoin") && !pp.contains("ShuffledHashJoin"),
-        s"packed-ADC serving plan shuffled a join side:\n${pp.take(1500)}")
-      assert(!pp.contains("Window"),
-        s"packed-ADC serving plan re-packs at query time:\n${pp.take(1500)}")
-      assert(pp.contains("graft_pq_adc_topk"), pp.take(800))
     } finally {
       import java.nio.file.{Files, Path}
       import java.util.Comparator

@@ -105,7 +105,7 @@ class ScaleOpsSpec extends SparkSpec {
     assert(unfiltered(9001L) == 9002L, "fixture: the distractor must win unfiltered")
     // full probing scans every eligible candidate ⇒ exact filtered brute
     val fullProbe = top1(Similarity.annIvfFiltered(embs, 1, nlist = 6,
-      nprobe = 6, corpusPred = pred, adaptProbe = false))
+      nprobe = 6, corpusPred = pred))
     assert(fullProbe == exact, "nprobe=nlist filtered must equal exact filtered brute")
     // containment: every reported neighbor satisfies the predicate
     val eligIds = rows.filter(_._3 < 3).map(_._1).toSet
@@ -123,8 +123,7 @@ class ScaleOpsSpec extends SparkSpec {
     // candidate the product path is exact-filtered too — including
     // the planted triangle the unfiltered search gets wrong
     val fltAdc = top1(Similarity.annIvfPqFiltered(embs, 1, nlist = 6,
-      nprobe = 6, corpusPred = pred, m = 4, ksub = 8, rerank = 32,
-      adaptProbe = false))
+      nprobe = 6, corpusPred = pred, m = 4, ksub = 8, rerank = 32))
     assert(fltAdc == exact,
       "full-probe filtered IVFADC with an all-eligible rerank must equal exact filtered brute")
     val fltAdcAdaptive = top1(Similarity.annIvfPqFiltered(embs, 1, nlist = 6,

@@ -132,9 +132,8 @@ class SnapshotSpec extends SparkSpec {
         q, k = 3, nprobe = 4)) ===
       rows(ContinuousIngest.annIvfMaintained(spark, st, P.ann.get,
         q, k = 3, nprobe = 4)))
-    // the index-only snapshot carries the slim marker: the rerank
-    // auto-gathers from the packed segments; answers must still equal
-    // the primary's docs-store shape
+    // the index-only snapshot carries the slim marker and no docs
+    // floats; its answers must still equal the primary's
     assert(ContinuousIngest.docsSlim(spark, snap))
     assert(rows(ContinuousIngest.annIvfPqMaintained(spark, snap, P.ann.get,
         q, k = 3, nprobe = 4, rerank = 8)) ===
@@ -265,7 +264,7 @@ class SnapshotSpec extends SparkSpec {
       q, k = 3, nprobe = 4).count() > 0L)
     // the streaming SERVING face runs against the snapshot root too —
     // the full shipped-tier deployment shape (query stream answered
-    // from an immutable snapshot, docs-free via the slim marker)
+    // from an immutable, docs-free snapshot)
     val qDir = s"$root/queries"
     q.limit(10).coalesce(1).write.parquet(qDir)
     val out = s"$root/answers"
@@ -273,8 +272,7 @@ class SnapshotSpec extends SparkSpec {
       Bounded.fileStream(spark, qDir,
         schemaDDL = "doc_id BIGINT, text STRING, embedding ARRAY<FLOAT>")
         .select("doc_id", "embedding"),
-      snap, p.ann.get, out, k = 3, nprobe = 4, rerank = 8,
-      rerankFromIndex = true).awaitTermination()
+      snap, p.ann.get, out, k = 3, nprobe = 4, rerank = 8).awaitTermination()
     assert(spark.read.parquet(s"$out/batch=0").count() > 0L)
   }
 
@@ -701,7 +699,7 @@ class SnapshotSpec extends SparkSpec {
     assert(Snapshot.versions(spark, s"$root/replica2").isEmpty)
   }
 
-  test("docs-carrying export serves the docs-store rerank and readTable(docs)") {
+  test("docs-carrying export serves the IVFADC face and readTable(docs)") {
     val primary = freshDir("graft_snap_docs_src")
     val ex = freshDir("graft_snap_docs_ex")
     val st = IngestState(s"$primary/state")
@@ -712,8 +710,8 @@ class SnapshotSpec extends SparkSpec {
     // 7 tables × 2 batch dirs
     assert(r.copiedPoolDirs === 14L)
     val snap = Snapshot.state(spark, ex)
-    // a fat-root export carries NO slim marker: the rerank reads the
-    // snapshot's own docs floats (the docs-store shape, end to end)
+    // a fat-root export carries NO slim marker (its docs keep their
+    // floats); the face still answers from the index root alone
     assert(!ContinuousIngest.docsSlim(spark, snap))
     val q = docs.where(pmod(col("doc_id"), lit(7)) === 0)
     assert(rows(ContinuousIngest.annIvfPqMaintained(spark, snap, P.ann.get,

@@ -4,8 +4,13 @@
 # without compiling — this script is the "never again".
 #
 # Usage:
-#   tools/presnapshot.sh           # full gate: sbt test (compile + all specs)
+#   tools/presnapshot.sh           # full gate: the ROADMAP.md Tier-1 command
 #   tools/presnapshot.sh compile   # minimum gate: sbt compile only
+#
+# The full gate runs the Tier-1 command exactly as ROADMAP.md states it
+# (its environment, offline sbt flags and timeouts included) and prints
+# its wall time, so a suite drifting past its budget fails here before
+# it fails Tier-1.
 #
 # Both modes also run the benchmark's own build step (perfbench/src
 # compiled against src/main), so a change that breaks a call the
@@ -19,6 +24,15 @@ python3 -c 'import sys; sys.path.insert(0, "perfbench"); import build; build.bui
 if [[ "${1:-test}" == "compile" ]]; then
   sbt -batch compile
 else
-  sbt -batch test
+  tier1=$(sed -n 's/^\*\*Tier-1 verify:\*\* `\(.*\)`$/\1/p' ROADMAP.md)
+  if [[ -z "$tier1" ]]; then
+    echo "presnapshot: no Tier-1 command found in ROADMAP.md" >&2
+    exit 1
+  fi
+  t0=$(date +%s)
+  rc=0
+  bash -c "$tier1" || rc=$?
+  echo "presnapshot: Tier-1 command took $(( $(date +%s) - t0 )) s wall (exit $rc)"
+  [[ $rc -eq 0 ]] || exit "$rc"
 fi
 echo "presnapshot: gate passed ($(git rev-parse --short HEAD) + working tree)"
