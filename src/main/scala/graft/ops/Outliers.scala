@@ -1,8 +1,10 @@
 package graft.ops
 
 import graft.Point
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import scala.collection.mutable
 
 /** (D,M)-outlier detection: exact and grid-approximate.
   *
@@ -18,82 +20,75 @@ import org.apache.spark.sql.functions._
   *
   * The reference's exact path is a driver-side O(N²) loop capped at
   * N ≤ 200 000 (`HWK_1/G029HW1.py:18-32,155`). Here the all-pairs
-  * distance theta-join is rewritten as a grid-bucketed EQUI-join
-  * (side = D, 3×3 neighbor buckets): each point is joined only with
-  * points of the 9 surrounding buckets, then the exact distance
-  * predicate filters. Catalyst plans a shuffled hash / sort-merge join
-  * on the bucket key, so the same query runs on 60 k points locally
-  * and on 10⁹ points on a cluster — no driver collect anywhere.
+  * distance theta-join is a strip sweep ([[Outliers.neighborCounts]]):
+  * one shuffle on the strip key, one on id for the per-point sum — no
+  * pair rows, no join, no driver collect, at any scale.
   */
 object Outliers {
 
-  private def distSqCol(x1: Column, y1: Column, x2: Column, y2: Column): Column = {
-    val dx = x1 - x2; val dy = y1 - y2
-    dx * dx + dy * dy
+  /** A sweep-window row: a point's home or halo copy and its pair count so far. */
+  private final class Slot(val id: Long, val x: Double, val y: Double, val halo: Boolean) {
+    var cnt = 0L
   }
 
   /** Per-point neighbor counts within distance D.
     *
-    * Input: points with unique `id`, coords `x`, `y`.
-    * Output: `id, cnt` where cnt includes the point itself (reference
-    * init `counter = 1`, `HWK_1/G029HW1.py:24`).
+    * Input: points with unique non-null `id` and non-null coords `x`,
+    * `y`. Output: `id, cnt` (non-null bigint) where cnt includes the
+    * point itself (reference init `counter = 1`, `HWK_1/G029HW1.py:24`).
     *
-    * Self-join is bucketed on a side-D grid: a disc of radius D around
-    * any point only intersects the 3×3 neighborhood of its bucket, so
-    * exploding 9 offsets on the probe side makes the join an equi-join
-    * on (bi, bj) with an exact distance post-filter.
+    * Strips `s = floor(y / D)`: each point has a home row in `s` and a
+    * halo row in `s + 1`, so every pair within D meets in exactly one
+    * strip, as home×home or halo×home (halo×halo is skipped). Each strip
+    * is swept in x order with a window of the rows within D in x; a row
+    * leaves the window with its count, so memory is bounded by the
+    * window. A hot strip is one task, though: AQE cannot split it.
     */
   def neighborCounts(points0: DataFrame, d: Double): DataFrame = {
-    // single-file scans are one task — fan the pair-generation out
-    // (the reference's explicit repartition(L), HWK_1/G029HW1.py:148).
-    // NOT cached, deliberately (r20 A/B): caching the bucketed points
-    // to spare the 3× upstream recompute made every variant unstable
-    // (4.7 s stable uncached vs 11–68 s cached — the cached blocks
-    // compete with the ~30M-row pair join's execution memory and the
-    // eviction/recompute thrash dwarfs the saved scans); the upstream
-    // projection is a cheap pruned scan + one per-id window.
-    val bucketed = points0
-      .repartition(points0.sparkSession.sparkContext.defaultParallelism)
-      .withColumn("bi", floor(col("x") / lit(d)))
-      .withColumn("bj", floor(col("y") / lit(d)))
-    val rhs = bucketed.select(col("bi"), col("bj"), col("id").as("id2"),
-      col("x").as("x2"), col("y").as("y2"))
-    // each unordered pair is generated exactly ONCE (half-plane trick,
-    // 2x fewer candidates than the full 3x3 probe): the probe explodes
-    // 5 offsets — (0,0) pairs only with id<id2 inside the cell, and
-    // {(1,0),(1,1),(0,1),(-1,1)} cover each cell adjacency once.
-    // Single equi-join; the same/cross distinction is a residual
-    // predicate, so there is one probe shuffle, not two.
-    val offs5 = array((Seq((0, 0), (1, 0), (1, 1), (0, 1), (-1, 1)).map { case (di, dj) =>
-      struct(lit(di).as("di"), lit(dj).as("dj"), lit(di == 0 && dj == 0).as("same"))
-    }): _*)
-    val probe = bucketed
-      .select(col("id"), col("x"), col("y"), explode(offs5).as("off"),
-        col("bi"), col("bj"))
-      .select(col("id"), col("x"), col("y"), col("off.same").as("same"),
-        (col("bi") + col("off.di")).as("bi"),
-        (col("bj") + col("off.dj")).as("bj"))
-    // SHUFFLE_HASH, pinned: the planner's size estimates here put the
-    // 5×-exploded probe under the broadcast threshold and built a
-    // multi-million-row broadcast hash relation (r20 A/B: stable-ish
-    // uncached, catastrophically GC-bound once the inputs were
-    // cached). Hash-partitioning both sides on the cell key is the
-    // shape that survives any scale — no driver-sized build, no
-    // per-key sort (SMJ would re-sort the dense cells), AQE splits a
-    // skewed cell at runtime.
-    val pairs = probe
-      .join(rhs.hint("shuffle_hash"), Seq("bi", "bj"))
-      .where((!col("same") || col("id") < col("id2")) &&
-        distSqCol(col("x"), col("y"), col("x2"), col("y2")) <= lit(d * d))
-    // scatter each surviving pair to both endpoints, count, then +1
-    // for the self-pair; points with no neighbor re-enter via left join
-    val counts = pairs
-      .select(explode(array(col("id"), col("id2"))).as("id"))
+    val spark = points0.sparkSession
+    import spark.implicits._
+    val d2 = d * d
+    points0
+      .select(col("id"), col("x"), col("y"), floor(col("y") / lit(d)).as("s"))
+      .select(col("id"), col("x"), col("y"),
+        posexplode(array(col("s"), col("s") + 1L)).as(Seq("halo", "s")))
+      .repartition(spark.sparkContext.defaultParallelism, col("s"))
+      .sortWithinPartitions("s", "x")
+      .select(col("id"), col("x"), col("y"), col("s"), col("halo") === 1)
+      .as[(Long, Double, Double, Long, Boolean)]
+      .mapPartitions { rows =>
+        val win = mutable.ArrayDeque.empty[Slot]
+        val out = mutable.ArrayDeque.empty[(Long, Long)]
+        var strip = 0L
+        // home rows always (zero too: no join back), halo rows if counted
+        def retire(r: Slot): Unit = if (!r.halo || r.cnt > 0) out += ((r.id, r.cnt))
+        new Iterator[(Long, Long)] {
+          def hasNext: Boolean = {
+            while (out.isEmpty && rows.hasNext) {
+              val (id, x, y, s, halo) = rows.next()
+              if (s != strip) { win.foreach(retire); win.clear(); strip = s }
+              // (x − x_head)² > D² rounds like the predicate: a pruned
+              // row is never one the predicate would accept
+              while (win.nonEmpty && { val dx = x - win.head.x; dx * dx > d2 })
+                retire(win.removeHead())
+              val cur = new Slot(id, x, y, halo)
+              win.foreach { o =>
+                if (!(halo && o.halo) && Point.distSq(x, y, o.x, o.y) <= d2) {
+                  o.cnt += 1; cur.cnt += 1
+                }
+              }
+              win += cur
+            }
+            if (out.isEmpty) { win.foreach(retire); win.clear() }
+            out.nonEmpty
+          }
+          def next(): (Long, Long) = if (hasNext) out.removeHead() else Iterator.empty.next()
+        }
+      }
+      .toDF("id", "npairs")
       .groupBy("id")
-      .agg(count(lit(1)).as("npairs"))
-    bucketed.select(col("id"))
-      .join(counts, Seq("id"), "left")
-      .select(col("id"), (coalesce(col("npairs"), lit(0L)) + 1L).as("cnt"))
+      .agg((coalesce(sum(col("npairs")), lit(0L)) + 1L).as("cnt"))
+      .select(col("id").cast(points0.schema("id").dataType), col("cnt"))
   }
 
   /** Exact (D,M)-outliers: points with ≤ M neighbors (self included),

@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 /** Distributed range (interval) join — the second join shape Spark's
   * optimizer has no native strategy for: `point.v ∈ [lo, hi)` plans as
   * BroadcastNestedLoopJoin (|L|×|R| comparisons) when written as a raw
-  * theta-join. Same family as the engine's 2-D distance join
-  * (`Outliers.neighborCounts`): quantize to a grid so the predicate
-  * becomes an EQUI-join on the bucket key plus a residual filter.
+  * theta-join. Same family as the engine's 7×7 cell join
+  * (`Grid.n3n7`): quantize to a grid so the predicate becomes an
+  * EQUI-join on the bucket key plus a residual filter.
   *
   * Buckets of width `bucketWidth`: a point falls in exactly one
   * bucket; an interval explodes to every bucket it overlaps. A

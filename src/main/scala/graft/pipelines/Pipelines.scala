@@ -21,35 +21,40 @@ object Hw1 {
           exactCap: Long = 200000L): Seq[String] = {
     val out = Seq.newBuilder[String]
     val pts = Points.fromCsv(spark, path, l).cache()
-    val n = pts.count()
-    out += s"$path D=$d M=$m K=$k L=$l"
-    out += s"Number of points = $n"
+    try {
+      val n = pts.count()
+      out += s"$path D=$d M=$m K=$k L=$l"
+      out += s"Number of points = $n"
 
-    if (n <= exactCap) {
-      val t0 = System.nanoTime()
-      val withIds = Points.withIds(pts)
-      val outliers = Outliers.neighborCounts(withIds, d)
-        .where(col("cnt") <= m)
-      val nOut = outliers.count()
-      // re-sort driver-side: the join after limit(k) does not
-      // guarantee the orderBy survives into collect()
-      val topK = outliers.orderBy(col("cnt"), col("id")).limit(k)
-        .join(withIds, "id").select(col("x"), col("y"), col("cnt"), col("id"))
-        .collect()
-        .sortBy(r => (r.getLong(2), r.getLong(3)))
-      out += s"Number of Outliers = $nOut"
-      topK.foreach(r => out += s"Point: (${r.getDouble(0)}, ${r.getDouble(1)})")
-      out += s"Running time of ExactOutliers = ${(System.nanoTime() - t0) / 1e6} ms"
-    }
+      if (n <= exactCap) {
+        val t0 = System.nanoTime()
+        val withIds = Points.withIds(pts)
+        // pin only the small outlier set: count and top-K share one
+        // sweep (r20: caching the id'd points starved execution memory)
+        val outliers = Outliers.neighborCounts(withIds, d)
+          .where(col("cnt") <= m).persist()
+        try {
+          val nOut = outliers.count()
+          // re-sort driver-side: the join after limit(k) does not
+          // guarantee the orderBy survives into collect()
+          val topK = outliers.orderBy(col("cnt"), col("id")).limit(k)
+            .join(withIds, "id").select(col("x"), col("y"), col("cnt"), col("id"))
+            .collect()
+            .sortBy(r => (r.getLong(2), r.getLong(3)))
+          out += s"Number of Outliers = $nOut"
+          topK.foreach(r => out += s"Point: (${r.getDouble(0)}, ${r.getDouble(1)})")
+        } finally outliers.unpersist()
+        out += s"Running time of ExactOutliers = ${(System.nanoTime() - t0) / 1e6} ms"
+      }
 
-    val t1 = System.nanoTime()
-    val counts = Outliers.approxOutlierCounts(pts, d, m).head()
-    val cells = Outliers.smallestCells(pts, d, k).collect()
-    out += s"Number of sure outliers= ${counts.getLong(0)}"
-    out += s"Number of uncertain points= ${counts.getLong(1)}"
-    cells.foreach(r => out += s"Cell: (${r.getLong(0)}, ${r.getLong(1)}) Size = ${r.getLong(2)}")
-    out += s"Running time of MRApproxOutliers = ${(System.nanoTime() - t1) / 1e6} ms"
-    pts.unpersist()
+      val t1 = System.nanoTime()
+      val counts = Outliers.approxOutlierCounts(pts, d, m).head()
+      val cells = Outliers.smallestCells(pts, d, k).collect()
+      out += s"Number of sure outliers= ${counts.getLong(0)}"
+      out += s"Number of uncertain points= ${counts.getLong(1)}"
+      cells.foreach(r => out += s"Cell: (${r.getLong(0)}, ${r.getLong(1)}) Size = ${r.getLong(2)}")
+      out += s"Running time of MRApproxOutliers = ${(System.nanoTime() - t1) / 1e6} ms"
+    } finally pts.unpersist()
     val lines = out.result()
     lines.foreach(println)
     lines
@@ -74,25 +79,26 @@ object Hw2 {
     val out = Seq.newBuilder[String]
     out += s"$path M=$m K=$k L=$l"
     val pts = Points.fromCsv(spark, path, l).cache()
-    out += s"Number of points = ${pts.count()}"
+    try {
+      out += s"Number of points = ${pts.count()}"
 
-    val t1 = System.nanoTime()
-    val coreset = Fft.coreset(pts, k, l)
-    out += s"Running time of MRFFT Round 1 = ${(System.nanoTime() - t1) / 1e6} ms"
-    val t2 = System.nanoTime()
-    val centers = Fft.seqFFT(coreset, k)
-    out += s"Running time of MRFFT Round 2 = ${(System.nanoTime() - t2) / 1e6} ms"
-    val t3 = System.nanoTime()
-    val radius = Fft.radius(pts, centers)
-    out += s"Running time of MRFFT Round 3 = ${(System.nanoTime() - t3) / 1e6} ms"
-    out += s"Radius = $radius"
+      val t1 = System.nanoTime()
+      val coreset = Fft.coreset(pts, k, l)
+      out += s"Running time of MRFFT Round 1 = ${(System.nanoTime() - t1) / 1e6} ms"
+      val t2 = System.nanoTime()
+      val centers = Fft.seqFFT(coreset, k)
+      out += s"Running time of MRFFT Round 2 = ${(System.nanoTime() - t2) / 1e6} ms"
+      val t3 = System.nanoTime()
+      val radius = Fft.radius(pts, centers)
+      out += s"Running time of MRFFT Round 3 = ${(System.nanoTime() - t3) / 1e6} ms"
+      out += s"Radius = $radius"
 
-    val t4 = System.nanoTime()
-    val counts = Outliers.approxOutlierCounts(pts, radius, m).head()
-    out += s"Number of sure outliers= ${counts.getLong(0)}"
-    out += s"Number of uncertain points= ${counts.getLong(1)}"
-    out += s"Running time of MRApproxOutliers = ${(System.nanoTime() - t4) / 1e6} ms"
-    pts.unpersist()
+      val t4 = System.nanoTime()
+      val counts = Outliers.approxOutlierCounts(pts, radius, m).head()
+      out += s"Number of sure outliers= ${counts.getLong(0)}"
+      out += s"Number of uncertain points= ${counts.getLong(1)}"
+      out += s"Running time of MRApproxOutliers = ${(System.nanoTime() - t4) / 1e6} ms"
+    } finally pts.unpersist()
     val lines = out.result()
     lines.foreach(println)
     lines

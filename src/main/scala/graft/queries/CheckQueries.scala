@@ -2736,11 +2736,9 @@ object CheckQueries extends QueryPack {
       // subset: the exact side is pair-quadratic and a cross-
       // validation query should not pay the full corpus's pair count
       // (at 100 TB one would bracket-check a slice, never the corpus).
-      // The window-dedup lineage feeds FOUR consumers (both sides of
-      // the bucketed self-join, the no-neighbor left join, and the
-      // approx path) — cache it so the scan + dedup window run once,
-      // and unpersist after the two eager actions (everything
-      // downstream is driver values).
+      // The window-dedup lineage feeds the exact sweep and the approx
+      // path — cache it so the scan + dedup window run once; unpersist
+      // after the two eager actions (the rest is driver values).
       val ptsU = Tables.pointsWithId(s, d)
         .where(pmod(col("id"), lit(4)) === 0).cache()
       val (exact, sure, unc) = try {

@@ -52,6 +52,36 @@ class GridSpec extends SparkSpec {
     assert(dist.map(t => (t._1.toInt, t._2.toInt)).toSeq == local.toSeq)
   }
 
+  test("neighborCounts strip sweep == local O(N^2) on the sweep's edge cases") {
+    def check(name: String, pts: Seq[(Double, Double)], d: Double): Unit = {
+      val df = pts.zipWithIndex.map { case ((x, y), i) => (i.toLong, x, y) }.toDF("id", "x", "y")
+      val out = Outliers.neighborCounts(df, d)
+      val cnt = out.schema("cnt")
+      assert(cnt.dataType == org.apache.spark.sql.types.LongType && !cnt.nullable, s"$name: $cnt")
+      val got = out.as[(Long, Long)].collect()
+      assert(got.length == pts.length && got.map(_._1).distinct.length == pts.length,
+        s"$name: not one row per input id")
+      val want = Outliers.exactOutliersLocal(pts.map { case (x, y) => Point(x, y) }.toArray,
+        d, Int.MaxValue).map { case (i, c) => (i.toLong, c.toLong) }.toMap
+      assert(got.toMap == want, name)
+    }
+    check("single point", Seq((0.3, 0.7)), 1.0)
+    check("duplicate coordinates", Seq.fill(5)((2.0, 3.0)) ++ Seq((2.0, 4.0), (2.0, 5.5)), 1.0)
+    // 3-4-5 triangles: distances of exactly D in both axes and diagonally
+    check("pairs exactly D apart", Seq((0.0, 0.0), (5.0, 0.0), (3.0, 4.0), (-3.0, -4.0),
+      (0.0, 5.0), (0.0, -5.0)), 5.0)
+    check("strip boundaries y = kD, kD ± D",
+      for (k <- -3 to 3; x <- Seq(0.0, 0.5, 1.0)) yield (x, k.toDouble), 1.0)
+    check("negative coordinates", Seq((-0.5, -0.5), (-1.2, -0.9), (-1.0, -1.0),
+      (-3.5, -2.0), (-3.0, -2.5)), 1.0)
+    check("every point in one strip", (0 until 40).map(i => (i * 0.3, 0.5 + (i % 3) * 0.1)), 1.0)
+    // strips 0 and 2 are occupied: strips 1 and 3 hold only halo rows
+    check("halo-only strips", Seq((0.0, 0.2), (0.4, 0.9), (0.2, 2.1), (0.6, 2.95)), 1.0)
+    val rnd = new scala.util.Random(11)
+    check("quarter lattice: duplicates, exact-D pairs, negatives",
+      Seq.fill(400)(((rnd.nextInt(17) - 8) * 0.25, (rnd.nextInt(17) - 8) * 0.25)), 0.5)
+  }
+
   test("approx bracket invariant: sure <= exact <= sure+uncertain") {
     val rnd = new scala.util.Random(13)
     val pts = Array.fill(400)(Point(rnd.nextDouble() * 20, rnd.nextDouble() * 20))

@@ -80,6 +80,20 @@ class PlanSpec extends SparkSpec {
     assert(coords == coords.sorted)
   }
 
+  test("neighborCounts is a strip sweep: no join, no shuffle_hash hint, two exchanges") {
+    import spark.implicits._
+    val pts = Seq((1L, 0.0, 0.0), (2L, 0.5, 0.5), (3L, 3.0, 1.5)).toDF("id", "x", "y")
+    val nc = graft.ops.Outliers.neighborCounts(pts, 1.0)
+    val p = plan(nc)
+    assert(!p.contains("Join"), s"pair join planned:\n$p")
+    assert(!nc.queryExecution.analyzed.toString.toLowerCase.contains("shuffle_hash"), p)
+    // the tree's Exchange nodes: the strip repartition, then the id aggregate
+    val exchanges = p.linesIterator.takeWhile(_.nonEmpty)
+      .count(_.matches(""".*Exchange \(\d+\)$"""))
+    assert(exchanges == 2, s"expected 2 exchanges:\n$p")
+    assert(p.contains("REPARTITION_BY_NUM") && p.contains("ENSURE_REQUIREMENTS"), p)
+  }
+
   test("rpBucket plans codegen'd dot products, not interpreted HOF folds") {
     val embs = Tables.embeddings(spark, sf0001)
     val df = graft.ops.Similarity.annBucketed(embs, 1, dim = 64, nBits = 4, seed = 42L)

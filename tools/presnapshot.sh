@@ -15,6 +15,9 @@
 # Both modes also run the benchmark's own build step (perfbench/src
 # compiled against src/main), so a change that breaks a call the
 # harness compiles against fails here instead of in every benchmark run.
+# The full gate then runs one short hw_pipelines benchmark pass: run.py
+# exits non-zero on any failed check (the exact-outlier and catalog
+# references among them), so a kernel that changes an answer fails here.
 #
 # Exit 0 iff the gate passes; commit only on exit 0.
 set -euo pipefail
@@ -34,5 +37,7 @@ else
   bash -c "$tier1" || rc=$?
   echo "presnapshot: Tier-1 command took $(( $(date +%s) - t0 )) s wall (exit $rc)"
   [[ $rc -eq 0 ]] || exit "$rc"
+  python3 perfbench/run.py --workload hw_pipelines --seed 1 --seconds 1 --trace 0 \
+    || { echo "presnapshot: hw_pipelines benchmark checks failed" >&2; exit 1; }
 fi
 echo "presnapshot: gate passed ($(git rev-parse --short HEAD) + working tree)"
