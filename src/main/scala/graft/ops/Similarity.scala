@@ -142,34 +142,42 @@ object Similarity {
     * packed doubles. The 2¹⁸ cap above is ROW-based — honest at the
     * fixture dims (16–64), but at dim 1024 those rows are ≈ 2 GiB on
     * the driver — so the effective sample is additionally capped at
-    * `budget / (dim·8)` rows ([[cappedTrainRows]]): the guard follows
+    * `budget / (dim·8)` rows ([[TrainSample.rows]]): the guard follows
     * bytes, the thing the driver actually runs out of. */
   val TrainSampleByteBudget: Long = 256L << 20
 
-  /** The effective driver-collected training-sample row count:
-    * explicit when given, else [[trainSampleFor]]'s row cap tightened
-    * by the byte budget for the corpus' ACTUAL vector dim (peeked
-    * from one row — skipped below 2048 rows, where even dim 16384
-    * stays inside the budget). Floor 1024 keeps a degenerate
-    * high-dim corpus trainable at all. */
-  private def vecDim(embs: DataFrame, vecCol: String): Int =
-    embs.select(size(col(vecCol)).as("d")).take(1)
+  /** THE driver training sample every quantizer trainer reads: the
+    * id-ordered prefix of the unit-normalized corpus, `(id, v)` rows.
+    * A k-cell quantizer trains on the first [[rows]]`(k)` of them.
+    * Ids are a deterministic total order, so a longer prefix's head IS
+    * every shorter sample: [[collected]] runs ONE collect, at the
+    * longest prefix any of `cells` needs, and every quantizer trains
+    * from its head ([[ivfPqSearch]], `ContinuousIngest.trainQuantizers`). */
+  private[graft] final class TrainSample(val embs: DataFrame, cells: Seq[Int],
+                                         val sampleSize: Int, val idCol: String,
+                                         val vecCol: String) {
+    // the corpus' ACTUAL vector dim, peeked from one row (one take(1)
+    // job) only when a sample is big enough for the byte budget to bite
+    private lazy val dim = embs.select(size(col(vecCol))).take(1)
       .headOption.map(r => math.max(1, r.getInt(0))).getOrElse(1)
 
-  private def byteCappedRows(want: Int, dim: Int): Int =
-    if (want <= 2048) want
-    else math.max(1024, math.min(want,
-      (TrainSampleByteBudget / (dim.toLong * 8L)).toInt))
-
-  private def cappedTrainRows(embs: DataFrame, k: Int, sampleSize: Int,
-                              vecCol: String): Int =
-    if (sampleSize > 0) sampleSize
-    else {
-      val want = trainSampleFor(k, 0)
-      // the dim peek (one take(1) job) only runs when the sample is
-      // big enough for the byte budget to possibly bite
-      if (want <= 2048) want else byteCappedRows(want, vecDim(embs, vecCol))
+    /** Explicit `sampleSize` when given, else [[trainSampleFor]]'s row
+      * cap tightened by the byte budget for the corpus' dim (skipped
+      * below 2048 rows, where even dim 16384 stays inside the budget).
+      * Floor 1024 keeps a degenerate high-dim corpus trainable at all. */
+    def rows(k: Int): Int = {
+      val want = trainSampleFor(k, sampleSize)
+      if (sampleSize > 0 || want <= 2048) want
+      else math.max(1024, math.min(want, (TrainSampleByteBudget / (dim.toLong * 8L)).toInt))
     }
+
+    lazy val collected: Array[org.apache.spark.sql.Row] =
+      normalized(embs, idCol, vecCol, "id", "v")
+        .orderBy("id").limit(cells.map(rows).max).select("id", "v").collect()
+
+    def head(k: Int): Array[Array[Double]] =
+      collected.take(rows(k)).map(_.getSeq[Double](1).toArray)
+  }
 
   /** Coarse quantizer shared by IVF and k-center: FFT centroids over a
     * deterministic driver-sized sample (sorted by id) of the normalized
@@ -178,12 +186,9 @@ object Similarity {
     * default) auto-scales the sample with `nlist`
     * ([[trainSampleFor]]). */
   def ivfCentroids(embs: DataFrame, nlist: Int, sampleSize: Int = 0,
-                   idCol: String = "vec_id", vecCol: String = "embedding"): Array[Array[Double]] = {
-    val sample = normalized(embs, idCol, vecCol, "id", "v")
-      .orderBy("id").limit(cappedTrainRows(embs, nlist, sampleSize, vecCol))
-      .select("v").collect().map(_.getSeq[Double](0).toArray)
-    graft.ops.Fft.seqFFTVec(sample, nlist)
-  }
+                   idCol: String = "vec_id", vecCol: String = "embedding"): Array[Array[Double]] =
+    graft.ops.Fft.seqFFTVec(
+      new TrainSample(embs, Seq(nlist), sampleSize, idCol, vecCol).head(nlist), nlist)
 
   /** Per-vector probed list ids under the same quantizer as [[annIvf]]:
     * `id, lists` with `lists(0)` the vector's own list — the invariant
@@ -310,24 +315,10 @@ object Similarity {
           graft.functions.Native.dotNative(spark, col("va"), col("vb")).as("cos"))
       topKByCos(scored, k)
     } else {
-      // the SINGLE-PASS window pack, not ivfPack: this face's index is
-      // usually a COMPUTED plan (annIvf feeds ivfAssign straight in),
-      // and ivfPack's count pass would recompute the whole assignment —
-      // measured ~1 s slower at sf0.1 than paying the window sort once
-      val effSeg =
-        if (segSize > 0) segSize
-        else math.max(256, (1 << 22) / (math.max(1, dim) * 8))
-      val segW = org.apache.spark.sql.expressions.Window
-        .partitionBy("list").orderBy("nn_id")
-      val packed = index
-        .withColumn("_seg", ((row_number().over(segW) - 1) / effSeg).cast("int"))
-        .groupBy("list", "_seg").agg(
-          array_sort(collect_list(struct(col("nn_id"), col("vb")))).as("ent"))
-        .select(col("list"),
-          transform(col("ent"), e => e.getField("nn_id")).as("ids"),
-          flatten(transform(col("ent"), e => e.getField("vb"))).as("packed"))
-      annIvfFromPacked(packed, queries, k, nprobe, centroids, idCol, vecCol,
-        excludeSelf = excludeSelf)
+      // window segments: this face's index is usually a COMPUTED plan
+      // (annIvf feeds ivfAssign straight in), see [[packSegments]]
+      annIvfFromPacked(packSegments(index, Floats(dim), WindowSegments, segSize),
+        queries, k, nprobe, centroids, idCol, vecCol, excludeSelf = excludeSelf)
     }
   }
 
@@ -338,57 +329,89 @@ object Similarity {
     * 200k–500k vectors; an explicit `segSize` forces the packed path. */
   val PackedScanMinDim = 128
 
-  /** Pack an [[ivfAssign]] table (`nn_id, vb, list`) into the
-    * segment layout [[annIvfFromPacked]] scans: one row per ≈
-    * `segSize`-entry slice of an inverted list — `list, ids, packed`
-    * with `ids` in ascending nn_id order beside their concatenated
-    * unit vectors. Each row is self-contained (the scan never groups
-    * by segment), so packed tables UNION freely: per-batch packs of a
-    * maintained index answer queries identically to one whole-corpus
-    * pack — segment boundaries change which DotTopK call sees which
-    * candidate, never the merged (cos desc, nn_id asc) answer. The
-    * maintained lifecycle ([[graft.streaming.ContinuousIngest]])
-    * persists this table per ingest batch so packing runs once per
-    * batch over BATCH-sized input, not per query call over the corpus
-    * — the train-once/pack-once discipline.
-    *
-    * Segment ASSIGNMENT is `xxhash64(nn_id) mod ceil(|list|/segSize)`
-    * — deterministic, and windowless on purpose: a row_number window
-    * per list would shuffle + SORT the float rows and funnel each
-    * whole list through one task, pure overhead given that answers
-    * are segmentation-independent. The per-list counts it needs are a
+  /** A packed segment's payload: the unit vectors `vb` of an
+    * [[ivfAssign]] table (dim doubles per entry, concatenated) or the
+    * m-byte PQ `codes` of an IVFADC index (concatenated bytes). */
+  private[graft] sealed abstract class Payload(val col: String, val entryBytes: Int)
+  private[graft] final case class Floats(dim: Int) extends Payload("vb", 8 * dim)
+  private[graft] final case class Codes(m: Int) extends Payload("codes", m)
+
+  /** How [[packSegments]] cuts an inverted list into segments. */
+  private[graft] sealed trait SegRule
+  /** `xxhash64(nn_id) mod ceil(|list|/segSize)` — deterministic, and
+    * windowless on purpose: a row_number window per list would
+    * shuffle + SORT the payload rows and funnel each whole list
+    * through one task. The per-list counts it needs are a
     * column-pruned aggregation (scans only `list`, partial-agg'd to
-    * nlist rows) broadcast back, so the floats shuffle exactly once —
-    * into the (list, seg) hash aggregation. That count pass is only
-    * cheap when `index` is STORED (parquet prunes to one int column)
-    * — the maintained lifecycle's case; for a computed one-shot index
-    * it would recompute the whole assignment, which is why
-    * [[annIvfFromIndex]] keeps the single-pass window pack instead.
-    * Hash segments are BALANCED IN EXPECTATION, not exactly (sizes
-    * concentrate within a few % of `segSize` for segSize ≥ 256),
-    * which the ≈ 4 MiB auto-size absorbs; `segSize` 0 derives it
-    * from `dim` (8Ki entries at dim 64, 512 at dim 1024), the
-    * hot-cell skew guard. */
-  def ivfPack(index: DataFrame, dim: Int, segSize: Int = 0,
-              counts: Option[DataFrame] = None): DataFrame = {
+    * nlist rows) broadcast back, so the payload shuffles exactly once
+    * — into the (list, seg) hash aggregation. That count pass is only
+    * cheap when the index is STORED (parquet prunes to one int
+    * column), the maintained lifecycle's case; callers that already
+    * hold the counts (the ingest append path shares ONE counts pass
+    * between both packs) pass them in. Hash segments are BALANCED IN
+    * EXPECTATION, not exactly (sizes concentrate within a few % of
+    * `segSize` for segSize ≥ 256), which the auto-size absorbs. Every
+    * persisted `ivf_packed`/`pq_packed` segment is cut by this rule,
+    * so a replay or a compaction writes identical rows. */
+  private[graft] final case class HashSegments(counts: Option[DataFrame] = None) extends SegRule
+  /** A single-pass `row_number` window per list (ordered by nn_id):
+    * for a COMPUTED one-shot index, where the hash rule's count pass
+    * would recompute the whole assignment (measured ~1 s slower at
+    * sf0.1 than paying the window sort once). The window adds a
+    * per-list sort but no extra shuffle: HashPartitioning(list)
+    * already satisfies the (list, _seg) grouping. */
+  private[graft] case object WindowSegments extends SegRule
+
+  /** THE segment packer: an index (`nn_id, list` plus the payload
+    * column) becomes the layout [[annIvfFromPacked]] and
+    * [[pqPackedShortlist]] scan — one row per ≈ `segSize`-entry slice
+    * of an inverted list, `list, ids, packed` with `ids` in ascending
+    * nn_id order beside their concatenated payloads. Each row is
+    * self-contained (the scans never group by segment), so packed
+    * tables UNION freely: per-batch packs of a maintained index answer
+    * queries identically to one whole-corpus pack, and either segment
+    * rule gives the same answers — segment boundaries change which
+    * DotTopK/PqAdcTopK call sees which candidate, never the merged
+    * (score desc, nn_id asc) answer.
+    *
+    * `segSize` 0 auto-sizes segments to ≈ 4 MiB rows from the entry
+    * width: `max(256, 4 MiB / entry bytes)` entries (8Ki at dim 64,
+    * 512 at dim 1024, 512Ki for 8-byte codes) — the hot-cell skew
+    * guard, so one hot Voronoi cell cannot blow a row past task-memory
+    * or broadcast limits. */
+  private[graft] def packSegments(index: DataFrame, payload: Payload,
+                                  rule: SegRule, segSize: Int = 0): DataFrame = {
     val effSeg =
       if (segSize > 0) segSize
-      else math.max(256, (1 << 22) / (math.max(1, dim) * 8))
-    // callers that already hold the per-list counts (the ingest append
-    // path shares ONE counts pass between this and [[pqPack]]) pass
-    // them in; the default recomputes from the index (pqPack's note)
-    val cnt = counts.getOrElse(
-      index.groupBy("list").agg(count(lit(1)).as("_n")))
-    index
-      .join(broadcast(cnt), Seq("list"))
-      .withColumn("_seg", pmod(xxhash64(col("nn_id")),
-        ceil(col("_n").cast("double") / effSeg).cast("long")).cast("int"))
-      .groupBy("list", "_seg").agg(
-        array_sort(collect_list(struct(col("nn_id"), col("vb")))).as("ent"))
-      .select(col("list"),
-        transform(col("ent"), e => e.getField("nn_id")).as("ids"),
-        flatten(transform(col("ent"), e => e.getField("vb"))).as("packed"))
+      else math.max(256, (4 << 20) / math.max(1, payload.entryBytes))
+    val cut = rule match {
+      case HashSegments(counts) =>
+        index.join(broadcast(counts.getOrElse(
+            index.groupBy("list").agg(count(lit(1)).as("_n")))), Seq("list"))
+          .withColumn("_seg", pmod(xxhash64(col("nn_id")),
+            ceil(col("_n").cast("double") / effSeg).cast("long")).cast("int"))
+      case WindowSegments =>
+        val w = org.apache.spark.sql.expressions.Window.partitionBy("list").orderBy("nn_id")
+        index.withColumn("_seg", ((row_number().over(w) - 1) / effSeg).cast("int"))
+    }
+    val ent = col("ent")
+    cut.groupBy("list", "_seg").agg(
+        array_sort(collect_list(struct(col("nn_id"), col(payload.col)))).as("ent"))
+      .select(col("list"), transform(ent, e => e.getField("nn_id")).as("ids"),
+        (payload match {
+          case Floats(_) => flatten(transform(ent, e => e.getField("vb")))
+          case Codes(_) => aggregate(ent, lit(Array.emptyByteArray),
+            (acc, e) => concat(acc, e.getField("codes")))
+        }).as("packed"))
   }
+
+  /** [[packSegments]] of an [[ivfAssign]] table (`nn_id, vb, list`)
+    * under hash segments — the persisted `ivf_packed` layout (the
+    * maintained lifecycle packs once per ingest batch over
+    * BATCH-sized input, never per query call over the corpus). */
+  def ivfPack(index: DataFrame, dim: Int, segSize: Int = 0,
+              counts: Option[DataFrame] = None): DataFrame =
+    packSegments(index, Floats(dim), HashSegments(counts), segSize)
 
   /** Inverse of [[ivfPack]]: explode a packed-segment table back to
     * [[ivfAssign]] rows (`nn_id, vb, list`) — the re-pack path state
@@ -403,41 +426,13 @@ object Similarity {
         slice(col("packed"), col("_pos") * col("_dim") + 1, col("_dim")).as("vb"),
         col("list"))
 
-  /** [[ivfPack]]'s PQ-code twin: hash-segmented windowless pack of an
-    * IVFADC index (`nn_id, list, codes` — the maintained assignment ⋈
-    * code join) into `(list, ids, packed)` scan segments, `packed`
-    * the concatenated m-byte codes in `ids` order. Same two-pass
-    * shape as [[ivfPack]] (per-list counts from a column-pruned scan,
-    * broadcast back; deterministic `xxhash64` segment assignment, so
-    * a replay writes identical rows) and the same ≤ 4 MiB auto-sized
-    * segments as the hot-cell guard — at m bytes/code that is
-    * ~(4 MiB / m) entries per segment. Persisted per ingest batch as
-    * the `pq_packed` table so [[pqPackedShortlist]] scans never
-    * re-join or re-pack the corpus-sized code table (pack-once, the
-    * `ivf_packed` lesson applied to the ADC face). */
+  /** [[packSegments]] of an IVFADC index (`nn_id, list, codes` — the
+    * maintained assignment ⋈ code join) under hash segments — the
+    * persisted `pq_packed` layout, so [[pqPackedShortlist]] scans
+    * never re-join or re-pack the corpus-sized code table. */
   def pqPack(index: DataFrame, m: Int, segSize: Int = 0,
-             counts: Option[DataFrame] = None): DataFrame = {
-    val effSeg =
-      if (segSize > 0) segSize
-      else math.max(256, (1 << 22) / math.max(1, m))
-    // the count pass executes the input a second time — when the
-    // input is a computed join (the append path), callers pass the
-    // per-list counts from the STORED assignment batch instead (one
-    // column-pruned scan; `list` comes solely from that side and the
-    // id sets match, so the counts are identical by construction)
-    val cnt = counts.getOrElse(
-      index.groupBy("list").agg(count(lit(1)).as("_n")))
-    index
-      .join(broadcast(cnt), Seq("list"))
-      .withColumn("_seg", pmod(xxhash64(col("nn_id")),
-        ceil(col("_n").cast("double") / effSeg).cast("long")).cast("int"))
-      .groupBy("list", "_seg").agg(
-        array_sort(collect_list(struct(col("nn_id"), col("codes")))).as("ent"))
-      .select(col("list"),
-        transform(col("ent"), e => e.getField("nn_id")).as("ids"),
-        aggregate(col("ent"), lit(Array.emptyByteArray),
-          (acc, e) => concat(acc, e.getField("codes"))).as("packed"))
-  }
+             counts: Option[DataFrame] = None): DataFrame =
+    packSegments(index, Codes(m), HashSegments(counts), segSize)
 
   /** Inverse of [[pqPack]]: explode a packed ADC segment table back
     * to `(nn_id, list, codes)` rows — the re-pack path compaction
@@ -507,19 +502,16 @@ object Similarity {
     * distinct — so no dedup is needed before ranking.
     *
     * Cost ∝ Σ_list |probe(list)|·|list| — at 1000 executors both sides
-    * shuffle on the list id and each list's pairs stay co-located. */
+    * shuffle on the list id and each list's pairs stay co-located.
+    * `queryPred` restricts the QUERY side against the full corpus
+    * (query-batch ANN). This is [[annIvfFiltered]] with no predicate. */
   def annIvf(embs: DataFrame, k: Int, nlist: Int, nprobe: Int,
              sampleSize: Int = 0,
              idCol: String = "vec_id", vecCol: String = "embedding",
              queryPred: Column = lit(true),
-             centroids: Option[Array[Array[Double]]] = None): DataFrame = {
-    val cents = centroids
-      .getOrElse(ivfCentroids(embs, nlist, sampleSize, idCol, vecCol))
-    // queryPred restricts the QUERY side against the full corpus
-    // (query-batch ANN); lit(true) folds away for the self-NN default
-    annIvfFromIndex(ivfAssign(embs, cents, idCol, vecCol),
-      embs.where(queryPred), k, nprobe, cents, idCol, vecCol)
-  }
+             centroids: Option[Array[Array[Double]]] = None): DataFrame =
+    annIvfFiltered(embs, k, nlist, nprobe, lit(true), sampleSize, idCol, vecCol,
+      queryPred, centroids)
 
   /** FILTERED IVF ANN: top-k cosine neighbors among the corpus rows
     * satisfying `corpusPred` — the "nearest English docs", "nearest
@@ -595,13 +587,30 @@ object Similarity {
                        idCol: String = "vec_id", vecCol: String = "embedding",
                        queryPred: Column = lit(true),
                        centroids: Option[Array[Array[Double]]] = None,
-                       books: Option[Array[Array[Array[Double]]]] = None): DataFrame = {
-    val (cents, bks) = trainIvfPq(embs, nlist, m, ksub, sampleSize,
-      idCol, vecCol, centroids, books)
+                       books: Option[Array[Array[Array[Double]]]] = None): DataFrame =
+    ivfPqSearch(embs, k, nlist, nprobe, corpusPred, m, ksub, rerank, sampleSize,
+      idCol, vecCol, queryPred, centroids, books, None)
+
+  /** The one body of [[annIvfPq]] (`corpusPred = lit(true)`) and
+    * [[annIvfPqFiltered]]: train what is not given (both quantizers
+    * from ONE [[TrainSample]] collect), widen nprobe by the
+    * selectivity, build the eligible index (list assignment ⋈ codes —
+    * `precomputedCodes` under the SAME books skips the full-corpus
+    * encode), then search it. */
+  private def ivfPqSearch(embs: DataFrame, k: Int, nlist: Int, nprobe: Int,
+                          corpusPred: Column, m: Int, ksub: Int, rerank: Int,
+                          sampleSize: Int, idCol: String, vecCol: String,
+                          queryPred: Column,
+                          centroids: Option[Array[Array[Double]]],
+                          books: Option[Array[Array[Array[Double]]]],
+                          precomputedCodes: Option[DataFrame]): DataFrame = {
+    lazy val sample = new TrainSample(embs, Seq(nlist, ksub), sampleSize, idCol, vecCol)
+    val cents = centroids.getOrElse(graft.ops.Fft.seqFFTVec(sample.head(nlist), nlist))
+    val bks = books.getOrElse(pqTrainFromSample(sample.head(ksub), m, ksub))
     val nprobeEff = filteredNprobe(embs, corpusPred, nprobe, cents.length)
     val elig = embs.where(corpusPred)
     val index = ivfAssign(elig, cents, idCol, vecCol).select("nn_id", "list")
-      .join(pqEncode(elig, bks, idCol, vecCol)
+      .join(precomputedCodes.getOrElse(pqEncode(elig, bks, idCol, vecCol))
         .select(col("vec_id").as("nn_id"), col("codes")), "nn_id")
     annIvfPqFromIndex(index, embs, k, nprobeEff, cents, bks, rerank,
       idCol, vecCol, queryPred)
@@ -618,12 +627,16 @@ object Similarity {
     if (e <= 0 || e >= n) nprobe
     else math.min(nCells, math.ceil(nprobe.toDouble * n / e).toInt)
 
+  /** [[widenedNprobe]] from one counting aggregate over `embs`; the
+    * unfiltered faces pass `lit(true)` (sel = 1) and run no job. */
   private def filteredNprobe(embs: DataFrame, corpusPred: Column,
-                             nprobe: Int, nCells: Int): Int = {
-    val row = embs.agg(count(lit(1)).as("n"),
-      count(when(corpusPred, lit(1))).as("e")).head()
-    widenedNprobe(nprobe, row.getLong(0), row.getLong(1), nCells)
-  }
+                             nprobe: Int, nCells: Int): Int =
+    if (corpusPred == lit(true)) nprobe
+    else {
+      val row = embs.agg(count(lit(1)).as("n"),
+        count(when(corpusPred, lit(1))).as("e")).head()
+      widenedNprobe(nprobe, row.getLong(0), row.getLong(1), nCells)
+    }
 
   /** Embedding k-center clustering: FFT centroids over a sample, every
     * vector assigned to its nearest centroid in one codegen'd argmax
@@ -651,11 +664,9 @@ object Similarity {
     * points it traversed; non-sample points carry no bound). */
   def kcenterSampleRadius(embs: DataFrame, k: Int, sampleSize: Int = 0,
                           idCol: String = "vec_id", vecCol: String = "embedding"): (Array[Long], Double) = {
-    val rows = normalized(embs, idCol, vecCol, "id", "v")
-      .orderBy("id").limit(cappedTrainRows(embs, k, sampleSize, vecCol))
-      .select("id", "v").collect()
-    val ids = rows.map(_.getLong(0))
-    val vecs = rows.map(_.getSeq[Double](1).toArray)
+    val sample = new TrainSample(embs, Seq(k), sampleSize, idCol, vecCol)
+    val ids = sample.collected.map(_.getLong(0))
+    val vecs = sample.head(k)
     val centroids = graft.ops.Fft.seqFFTVec(vecs, k)
     def dSq(a: Array[Double], b: Array[Double]): Double = {
       var s = 0.0; var i = 0
@@ -885,40 +896,32 @@ object Similarity {
     * [[CentroidTree.k]] exposes the inflation. */
   def hierarchicalCentroids(embs: DataFrame, k: Int, sampleSize: Int = 0,
                             idCol: String = "vec_id", vecCol: String = "embedding",
-                            spill: Double = 0.0): CentroidTree = {
+                            spill: Double = 0.0): CentroidTree =
+    trainTree(new TrainSample(embs, Seq(k), sampleSize, idCol, vecCol), k, spill)
+
+  /** [[hierarchicalCentroids]] over a shared [[TrainSample]] (whose
+    * `cells` include `k`). */
+  private[graft] def trainTree(s: TrainSample, k: Int, spill: Double): CentroidTree = {
     require(k >= 1, s"k=$k must be positive")
     require(spill >= 0.0, s"spill=$spill must be >= 0")
+    val nCoarse = math.max(1, math.ceil(math.sqrt(k.toDouble)).toInt)
     // past the driver caps the Θ(k) anchoring sample can no longer be
     // collected — hand the level-2 training to the executors instead
-    // of silently thinning per-cell anchoring toward 1 sample/cell.
-    // ONE dim peek serves the delegation check, the driver limit, and
-    // (via coarseSampleSize) the delegated build's coarse sample.
-    val desired = if (sampleSize > 0) sampleSize else math.max(2048, 8 * k)
-    // row cap (2^18) first, then the byte budget — same chain as
-    // cappedTrainRows, inlined to share the single dim peek
-    val rowCapped = trainSampleFor(k, 0)
-    val capped =
-      if (sampleSize > 0) sampleSize
-      else if (rowCapped <= 2048) rowCapped
-      else byteCappedRows(rowCapped, vecDim(embs, vecCol))
-    if (sampleSize == 0 && desired > capped) {
-      val nCoarse = math.max(1, math.ceil(math.sqrt(k.toDouble)).toInt)
-      return hierarchicalCentroidsDistributed(embs, k,
+    // of silently thinning per-cell anchoring toward 1 sample/cell
+    val capped = s.rows(k)
+    val desired = math.max(2048, 8 * k)
+    if (s.sampleSize == 0 && desired > capped)
+      return hierarchicalCentroidsDistributed(s.embs, k,
         coarseSampleSize = math.min(trainSampleFor(nCoarse, 0), capped),
-        childSampleSize = desired, idCol = idCol, vecCol = vecCol,
+        childSampleSize = desired, idCol = s.idCol, vecCol = s.vecCol,
         spill = spill)
-    }
-    val sample = normalized(embs, idCol, vecCol, "id", "v")
-      .orderBy("id").limit(capped)
-      .select("v").collect().map(_.getSeq[Double](0).toArray)
+    val sample = s.head(k)
     require(sample.nonEmpty, "hierarchicalCentroids: empty corpus")
-    val nCoarse = math.max(1, math.ceil(math.sqrt(k.toDouble)).toInt)
     val coarse = graft.ops.Fft.seqFFTVec(sample, nCoarse)
-    val byCell = Array.fill(coarse.length)(
-      scala.collection.mutable.ArrayBuffer.empty[Array[Double]])
-    sample.foreach(v => byCell(routeCellMinDist(coarse, v)) += v)
-    applySpill(assembleTree(coarse,
-      byCell.map(_.toArray), sample.length.toLong, k), spill)
+    val byCell = sample.groupBy(routeCellMinDist(coarse, _))
+    applySpill(assembleTree(coarse, byCell.keys.toSeq.sorted.map { c =>
+      (c, graft.ops.Fft.seqFFTVec(byCell(c), childCount(k, byCell(c).length, sample.length)))
+    }), spill)
   }
 
   /** Nearest coarse cell by EXACT min-distance with first-index wins —
@@ -944,29 +947,20 @@ object Similarity {
     * childless cell would make routing a dead end, and a vector
     * whose nRoute probes all landed on dead ends would silently
     * vanish from the assignment — so the invariant is structural:
-    * every coarse cell a probe can hit has ≥ 1 child. Per-cell child
-    * counts ∝ occupancy (≥ 1); global ids run consecutively over the
-    * kept cells in coarse order. */
+    * every coarse cell a probe can hit has ≥ 1 child. `kids` holds
+    * the occupied cells' trained children in coarse order; global ids
+    * run consecutively over them. */
   private def assembleTree(coarse: Array[Array[Double]],
-                           byCell: Array[Array[Array[Double]]],
-                           total: Long, k: Int): CentroidTree = {
-    val kept = coarse.indices.filter(c => byCell(c).nonEmpty)
-    val prunedCoarse = kept.map(coarse(_)).toArray
-    val childIds = new Array[Array[Int]](kept.length)
-    val childFlat = new Array[Array[Double]](kept.length)
-    var nextId = 0
-    var ci = 0
-    while (ci < kept.length) {
-      val pts = byCell(kept(ci))
-      val kc = math.max(1, math.round(k.toDouble * pts.length / total).toInt)
-      val kids = graft.ops.Fft.seqFFTVec(pts, kc)
-      childIds(ci) = Array.tabulate(kids.length)(j => nextId + j)
-      childFlat(ci) = kids.flatten
-      nextId += kids.length
-      ci += 1
-    }
-    CentroidTree(prunedCoarse, childIds, childFlat)
+                           kids: Seq[(Int, Array[Array[Double]])]): CentroidTree = {
+    val firstId = kids.map(_._2.length).scanLeft(0)(_ + _)
+    CentroidTree(kids.map(p => coarse(p._1)).toArray,
+      kids.indices.map(i => Array.range(firstId(i), firstId(i + 1))).toArray,
+      kids.map(_._2.flatten).toArray)
   }
+
+  /** Per-cell child count ∝ the cell's share of the sample (≥ 1). */
+  private def childCount(k: Int, n: Int, total: Long): Int =
+    math.max(1, math.round(k.toDouble * n / total).toInt)
 
   /** CHILD SPILL (the spill-tree idea applied at BUILD time): a
     * child centroid sitting near a coarse Voronoi boundary is
@@ -1019,7 +1013,7 @@ object Similarity {
 
   /** The DISTRIBUTED second-level build — for cell counts whose Θ(k)
     * anchoring sample no longer fits the driver caps
-    * ([[cappedTrainRows]]): the coarse level still trains on a small
+    * ([[TrainSample.rows]]): the coarse level still trains on a small
     * driver sample (√k cells need Θ(√k) rows), but the level-2 sample
     * is routed to its coarse cell on the EXECUTORS and each cell's
     * children FFT-train inside a typed map over the grouped cells —
@@ -1047,12 +1041,8 @@ object Similarity {
     val spark = embs.sparkSession
     import spark.implicits._
     val nCoarse = math.max(1, math.ceil(math.sqrt(k.toDouble)).toInt)
-    val norm = normalized(embs, idCol, vecCol, "id", "v")
-    val cS =
-      if (coarseSampleSize > 0) coarseSampleSize
-      else cappedTrainRows(embs, nCoarse, 0, vecCol)
-    val coarseSample = norm.orderBy("id").limit(cS)
-      .select("v").collect().map(_.getSeq[Double](0).toArray)
+    val coarseSample = new TrainSample(embs, Seq(nCoarse), coarseSampleSize,
+      idCol, vecCol).head(nCoarse)
     require(coarseSample.nonEmpty, "hierarchicalCentroidsDistributed: empty corpus")
     val coarse = graft.ops.Fft.seqFFTVec(coarseSample, nCoarse)
     val chS =
@@ -1063,7 +1053,7 @@ object Similarity {
     // `total` count and the per-cell grouping read the same
     // materialization instead of re-routing (the sample is bounded by
     // chS rows ≤ the byte budget, so the block fits executor storage)
-    val routed = norm.orderBy("id").limit(chS)
+    val routed = normalized(embs, idCol, vecCol, "id", "v").orderBy("id").limit(chS)
       .select(col("id"), col("v")).as[(Long, Seq[Double])]
       .map { case (id, v) =>
         (routeCellMinDist(bcCoarse.value, v.toArray), id, v) }
@@ -1075,27 +1065,13 @@ object Similarity {
       .as[(Int, Seq[(Long, Seq[Double])])]
       .map { case (cell, pts) =>
         val arr = pts.map(_._2.toArray).toArray
-        val kc = math.max(1, math.round(k.toDouble * arr.length / total).toInt)
-        (cell, graft.ops.Fft.seqFFTVec(arr, kc).map(_.toSeq).toSeq)
+        (cell, graft.ops.Fft.seqFFTVec(arr, childCount(k, arr.length, total)).map(_.toSeq).toSeq)
       }
       .collect().sortBy(_._1)
     routed.unpersist()
-    // assemble with the shared layout: kept cells in coarse order,
-    // global ids consecutive per cell (assembleTree's contract, with
-    // the per-cell FFT already done on the executors)
-    val prunedCoarse = perCell.map(p => coarse(p._1))
-    val childIds = new Array[Array[Int]](perCell.length)
-    val childFlat = new Array[Array[Double]](perCell.length)
-    var nextId = 0
-    var ci = 0
-    while (ci < perCell.length) {
-      val kids = perCell(ci)._2
-      childIds(ci) = Array.tabulate(kids.length)(j => nextId + j)
-      childFlat(ci) = kids.flatten.toArray
-      nextId += kids.length
-      ci += 1
-    }
-    applySpill(CentroidTree(prunedCoarse, childIds, childFlat), spill)
+    // the per-cell FFT already ran on the executors
+    applySpill(assembleTree(coarse,
+      perCell.map { case (c, ks) => (c, ks.map(_.toArray).toArray) }.toSeq), spill)
   }
 
   /** Routed spill assignment under a [[CentroidTree]] — the scale
@@ -1447,19 +1423,13 @@ object Similarity {
     bits.reduce(_ + _)
   }
 
-  /** Multi-probe bucket ids: the vector's own bucket plus every
-    * bucket at Hamming distance 1 (flip each of the nBits sign bits).
-    * Fixes the singleton-bucket recall hole of plain LSH at the cost
-    * of (nBits+1)x probe rows — still ∝ collisions, never all-pairs. */
-  def rpBucketsMultiProbe(vec: Column, dim: Int, nBits: Int, seed: Long): Column = {
-    val own = rpBucket(vec, dim, nBits, seed)
-    array((own +: (0 until nBits).map(b => own.bitwiseXOR(lit(1L << b)))): _*)
-  }
-
   /** Approximate NN with multi-probe: probe side explodes its
-    * (nBits+1) candidate buckets, build side keeps its own bucket;
+    * (nBits+1) candidate buckets — its own plus every bucket at
+    * Hamming distance 1 — and the build side keeps its own bucket;
     * every pair within Hamming distance 1 of each other's buckets is
-    * scored. `vec_id, nn_id, rank`.
+    * scored. `vec_id, nn_id, rank`. Fixes the singleton-bucket recall
+    * hole of [[annBucketed]] at the cost of (nBits+1)x probe rows —
+    * still ∝ collisions, never all-pairs.
     *
     * The probed buckets are pairwise distinct and the build side has
     * exactly one bucket per vector, so each (vec, nn) pair is scored
@@ -1467,42 +1437,40 @@ object Similarity {
     * map-side max_by aggregate (no wide shuffle of the candidates). */
   def annMultiProbe(embs: DataFrame, k: Int, dim: Int, nBits: Int, seed: Long = 42L,
                     idCol: String = "vec_id", vecCol: String = "embedding",
-                    queryPred: Column = lit(true)): DataFrame = {
-    val spark = embs.sparkSession
-    val base = normalized(embs, idCol, vecCol, "id", "v")
-      .repartition(spark.sparkContext.defaultParallelism)
-    val probe = normalized(embs.where(queryPred), idCol, vecCol, "id", "v")
-      .repartition(spark.sparkContext.defaultParallelism)
-      .select(col("id"), col("v"),
-        explode(rpBucketsMultiProbe(col("v"), dim, nBits, seed)).as("bucket"))
-    val build = base.select(col("id").as("nn_id"), col("v").as("vb"),
-      rpBucket(col("v"), dim, nBits, seed).as("bucket"))
-    val scored = probe.join(build, Seq("bucket"))
-      .where(col("id") =!= col("nn_id"))
-      .select(col("id").as("vec_id"), col("nn_id"),
-        graft.functions.Native.dotNative(spark, col("v"), col("vb")).as("cos"))
-    topKByCos(scored, k)
-  }
+                    queryPred: Column = lit(true)): DataFrame =
+    annLsh(embs, k, dim, nBits, seed, idCol, vecCol, queryPred, hamming1 = true)
 
   /** Approximate NN via random-hyperplane buckets: joins only within
-    * buckets; `vec_id, nn_id, rank` (rank within bucket). Vectors in
-    * singleton buckets produce no rows (trade-off of the scale path —
-    * [[annMultiProbe]] closes that hole). */
+    * buckets; `vec_id, nn_id, rank`. Vectors in singleton buckets
+    * produce no rows (trade-off of the scale path — [[annMultiProbe]]
+    * closes that hole). */
   def annBucketed(embs: DataFrame, k: Int, dim: Int, nBits: Int, seed: Long = 42L,
                   idCol: String = "vec_id", vecCol: String = "embedding",
-                  queryPred: Column = lit(true)): DataFrame = {
+                  queryPred: Column = lit(true)): DataFrame =
+    annLsh(embs, k, dim, nBits, seed, idCol, vecCol, queryPred, hamming1 = false)
+
+  /** The one LSH body: queries (`queryPred` rows) probe their own
+    * bucket, plus the Hamming-1 buckets when `hamming1`; the corpus
+    * side keeps its own bucket; candidates are scored by exact dot. */
+  private def annLsh(embs: DataFrame, k: Int, dim: Int, nBits: Int, seed: Long,
+                     idCol: String, vecCol: String, queryPred: Column,
+                     hamming1: Boolean): DataFrame = {
     val spark = embs.sparkSession
     def prep(df: DataFrame): DataFrame =
       normalized(df, idCol, vecCol, "id", "v")
         .repartition(spark.sparkContext.defaultParallelism)
-        .withColumn("bucket", rpBucket(col("v"), dim, nBits, seed))
-    val probe = prep(embs.where(queryPred))
-    val build = prep(embs)
-    val scored = probe.as("l").join(build.as("r"),
-        col("l.bucket") === col("r.bucket") && col("l.id") =!= col("r.id"))
-      .select(col("l.id").as("vec_id"), col("r.id").as("nn_id"),
-        graft.functions.Native.dotNative(spark, col("l.v"), col("r.v")).as("cos"))
-    topKByCos(scored, k)
+    val own = rpBucket(col("v"), dim, nBits, seed)
+    val probe = prep(embs.where(queryPred)).select(col("id").as("vec_id"),
+      col("v").as("va"),
+      (if (hamming1)
+         explode(array(own +: (0 until nBits).map(b => own.bitwiseXOR(lit(1L << b))): _*))
+       else own).as("bucket"))
+    val build = prep(embs).select(col("id").as("nn_id"), col("v").as("vb"),
+      own.as("bucket"))
+    topKByCos(probe.join(build, Seq("bucket"))
+      .where(col("vec_id") =!= col("nn_id"))
+      .select(col("vec_id"), col("nn_id"),
+        graft.functions.Native.dotNative(spark, col("va"), col("vb")).as("cos")), k)
   }
 
   // ---- int8 scalar quantization ---------------------------------
@@ -1635,19 +1603,14 @@ object Similarity {
     * maintained code table keeps its original books. `dim` must be a
     * multiple of `m`; ksub ≤ 256 so a code fits one unsigned byte. */
   def pqTrain(embs: DataFrame, m: Int, ksub: Int, sampleSize: Int = 0,
-              idCol: String = "vec_id", vecCol: String = "embedding"): Array[Array[Array[Double]]] = {
-    val sample = embs.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-      .orderBy("id").limit(trainSampleFor(ksub, sampleSize))
-      .select("v").collect()
-      .map(r => normalizeUnit(r.getSeq[Float](0).toArray))
-    pqTrainFromSample(sample, m, ksub)
-  }
+              idCol: String = "vec_id", vecCol: String = "embedding"): Array[Array[Array[Double]]] =
+    pqTrainFromSample(
+      new TrainSample(embs, Seq(ksub), sampleSize, idCol, vecCol).head(ksub), m, ksub)
 
   /** [[pqTrain]]'s driver half over an ALREADY-COLLECTED normalized
-    * sample — shared with [[trainIvfPq]], which feeds both quantizer
-    * trains from ONE collect. */
-  private def pqTrainFromSample(sample: Array[Array[Double]], m: Int,
-                                ksub: Int): Array[Array[Array[Double]]] = {
+    * sample ([[TrainSample.head]]). */
+  private[graft] def pqTrainFromSample(sample: Array[Array[Double]], m: Int,
+                                       ksub: Int): Array[Array[Array[Double]]] = {
     require(ksub >= 1 && ksub <= 256, s"ksub=$ksub must fit an unsigned byte")
     require(sample.nonEmpty, "pqTrain: empty corpus")
     val dim = sample.head.length
@@ -1657,34 +1620,6 @@ object Similarity {
       graft.ops.Fft.seqFFTVec(sample.map(v => v.slice(j * dsub, (j + 1) * dsub)), ksub)
     }
   }
-
-  /** Both IVFADC quantizers from ONE driver collect (guide §5: the
-    * driver barriers, not the bytes, bound the one-shot faces at
-    * bench scale — each train used to collect its own sorted-by-id
-    * prefix of the SAME normalized corpus). The longer prefix's head
-    * IS the shorter sample (ids are a deterministic total order), and
-    * the `normalized` Column path and driver [[normalizeUnit]] are
-    * IEEE-identical double chains (same cast→dot→sqrt→divide order),
-    * so centroids AND codebooks are bit-identical to the two-collect
-    * formulation. Callers that supply both arrays skip the collect
-    * entirely (the train-once lifecycle). */
-  private def trainIvfPq(embs: DataFrame, nlist: Int, m: Int, ksub: Int,
-                         sampleSize: Int, idCol: String, vecCol: String,
-                         centroids: Option[Array[Array[Double]]],
-                         books: Option[Array[Array[Array[Double]]]])
-      : (Array[Array[Double]], Array[Array[Array[Double]]]) =
-    (centroids, books) match {
-      case (Some(c), Some(b)) => (c, b)
-      case _ =>
-        val nIvf = cappedTrainRows(embs, nlist, sampleSize, vecCol)
-        val nPq = trainSampleFor(ksub, sampleSize)
-        val sample = normalized(embs, idCol, vecCol, "id", "v")
-          .orderBy("id").limit(math.max(nIvf, nPq))
-          .select("v").collect().map(_.getSeq[Double](0).toArray)
-        (centroids.getOrElse(
-            graft.ops.Fft.seqFFTVec(sample.take(nIvf), nlist)),
-         books.getOrElse(pqTrainFromSample(sample.take(nPq), m, ksub)))
-    }
 
   /** Row-major flat layout of the codebooks (subspace j, centroid c,
     * component t) — the literal the LUT builder and reconstruction
@@ -1918,15 +1853,9 @@ object Similarity {
                queryPred: Column = lit(true),
                centroids: Option[Array[Array[Double]]] = None,
                books: Option[Array[Array[Array[Double]]]] = None,
-               precomputedCodes: Option[DataFrame] = None): DataFrame = {
-    val (cents, bks) = trainIvfPq(embs, nlist, m, ksub, sampleSize,
-      idCol, vecCol, centroids, books)
-    val index = ivfAssign(embs, cents, idCol, vecCol).select("nn_id", "list")
-      .join(precomputedCodes.getOrElse(pqEncode(embs, bks, idCol, vecCol))
-        .select(col("vec_id").as("nn_id"), col("codes")), "nn_id")
-    annIvfPqFromIndex(index, embs, k, nprobe, cents, bks, rerank,
-      idCol, vecCol, queryPred)
-  }
+               precomputedCodes: Option[DataFrame] = None): DataFrame =
+    ivfPqSearch(embs, k, nlist, nprobe, lit(true), m, ksub, rerank, sampleSize,
+      idCol, vecCol, queryPred, centroids, books, precomputedCodes)
 
   /** IVFADC search against an ASSIGNED index: `index` is the join of
     * the list assignments and PQ codes (`nn_id, list, codes` — e.g.
@@ -1967,39 +1896,15 @@ object Similarity {
       topKByCos(scored, k)
     } else {
       require(rerank >= k, s"rerank=$rerank must be ≥ k=$k")
-      // FAISS-style list scan: pack each inverted list ONCE (ids in
-      // nn_id order beside their concatenated m-byte codes), then one
-      // PqAdcTopK call per (query, probed list) row keeps the list's
-      // best R+1 in a bounded loop — no 1-row-per-candidate join, so
-      // the N·nprobe·occupancy candidate stream never pays per-row
-      // join/aggregate machinery (measured 115 s → ~9 s at the 10×
-      // scaling fixture, identical answers). The packed table is
-      // ~nlist rows ∝ √N — broadcastable until ~10⁹ vectors, a list
-      // equi-join beyond. R+1 so a self-hit cannot cost a slot.
-      //
-      // Skew guard: a packed row is O(|list|·m) bytes, so ONE hot
-      // Voronoi cell could blow past single-row/broadcast limits long
-      // before the balanced-occupancy estimate says it would. Lists
-      // are therefore split into ≤ 64Ki-entry segments (512 KiB of
-      // codes at m=8) before packing: a probe row joins every segment
-      // of its list, each segment returns its own sorted top-(R+1),
-      // and MergeTopKAgg merges them per query exactly like the
-      // nprobe list-tops — byte-identical answers (each candidate
-      // lives in exactly one segment and the total order is shared).
-      // The segment window adds a per-list sort but NO extra shuffle:
-      // HashPartitioning(list) already satisfies the (list, _seg)
-      // grouping.
-      val segSize = 1 << 16
-      val segW = org.apache.spark.sql.expressions.Window
-        .partitionBy("list").orderBy("nn_id")
-      val packed = index
-        .withColumn("_seg", ((row_number().over(segW) - 1) / segSize).cast("int"))
-        .groupBy("list", "_seg").agg(
-          array_sort(collect_list(struct(col("nn_id"), col("codes")))).as("ent"))
-        .select(col("list"),
-          transform(col("ent"), e => e.getField("nn_id")).as("ids"),
-          aggregate(col("ent"), lit(Array.emptyByteArray),
-            (acc, e) => concat(acc, e.getField("codes"))).as("packed"))
+      // FAISS-style list scan: pack each inverted list ONCE (window
+      // segments — the index is computed, see [[packSegments]]), then
+      // one PqAdcTopK call per (query, segment) row keeps the
+      // segment's best R+1 in a bounded loop — no 1-row-per-candidate
+      // join, so the N·nprobe·occupancy candidate stream never pays
+      // per-row join/aggregate machinery (measured 115 s → ~9 s at the
+      // 10× scaling fixture, identical answers). R+1 so a self-hit
+      // cannot cost a slot.
+      val packed = packSegments(index, Codes(bks.length), WindowSegments)
       exactScoreShortlist(pqPackedShortlist(packed, embs, nprobe, cents, bks,
         rerank, idCol, vecCol, queryPred, excludeSelf),
         embs, k, idCol, vecCol, queryPred)
@@ -2026,8 +1931,7 @@ object Similarity {
   }
 
   /** The ADC candidate stage against a packed code-segment table
-    * ([[pqPack]]'s layout, or the inline window pack
-    * [[annIvfPqFromIndex]] builds for a computed index), stopped at
+    * ([[packSegments]]'s layout under either segment rule), stopped at
     * the `(vec_id, nn_id)` shortlist: queries probe their `nprobe`
     * nearest lists, one [[graft.functions.PqAdcTopK]] call per
     * (query, segment) row keeps the segment's ADC-best R+1 in a

@@ -672,75 +672,42 @@ object ContinuousIngest {
 
   /** Train the quantizers on `corpus` and persist them beside the
     * index tables (overwriting any previous set) — the shared step of
-    * [[bootstrap]] and [[rebuildIndexes]]. */
+    * [[bootstrap]] and [[rebuildIndexes]]. Every quantizer trains from
+    * the head of ONE driver sample ([[Similarity.TrainSample]], collected
+    * once at the longest prefix any of them needs); the table writes
+    * are independent and run as one concurrent group (a crashed
+    * (re)train re-runs wholesale; no cross-ordering to preserve). */
   private def trainQuantizers(corpus: DataFrame, st: IngestState,
                               a: AnnParams): AnnQuantizers = {
     val spark = corpus.sparkSession
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    // the (up to) three quantizer trains are independent — separate
-    // driver samples, separate output tables — so they overlap on
-    // forked threads (a crashed (re)train re-runs wholesale; no
-    // cross-ordering to preserve). MEMORY: each train collects its
-    // own ~sampleSize-vector driver sample, so peak driver memory is
-    // up to 3x the old sequential pipeline's — size the driver for
-    // three concurrent samples (or cap AnnParams.sampleSize; the
-    // auto-scaled default keeps samples metadata-sized)
-    val centsF = fork {
-      val cents = Similarity.ivfCentroids(corpus, a.nlist, a.sampleSize,
-        idCol = "doc_id", vecCol = a.vecCol)
-      Similarity.centroidsToDF(spark, cents)
-        .write.mode("overwrite").parquet(st.centroidsPath)
-      // the assignment-identity fingerprint, stamped INSIDE the
-      // centroids dir (underscore-prefixed, so parquet readers skip it,
-      // and it rides the rebuild swap with its quantizer for free):
-      // loadQuantizers refuses params that would silently mix
-      // assignment conventions in the maintained tables
-      writeAnnConfig(spark, st, a)
-      cents
-    }
-    val treeF = fork {
-      a.semClusters match {
-        case Some(nc) if semRouted(a) =>
-          val t = Similarity.hierarchicalCentroids(corpus, nc, a.sampleSize,
-            idCol = "doc_id", vecCol = a.vecCol, spill = effSpill(a))
-          Similarity.treeToDF(spark, t)
-            .write.mode("overwrite").parquet(st.semTreePath)
-          Some(t)
-        case _ => None
-      }
-    }
-    val semF = fork {
-      a.semClusters match {
-        case Some(nc) if !semRouted(a) =>
-          val sc = Similarity.ivfCentroids(corpus, nc, a.sampleSize,
-            idCol = "doc_id", vecCol = a.vecCol)
-          Similarity.centroidsToDF(spark, sc)
-            .write.mode("overwrite").parquet(st.semCentroidsPath)
-          Some(sc)
-        case _ => None
-      }
-    }
-    val booksF = fork {
-      val books = Similarity.pqTrain(corpus, a.m, a.ksub, a.sampleSize,
-        idCol = "doc_id", vecCol = a.vecCol)
-      Similarity.booksToDF(spark, books)
-        .write.mode("overwrite").parquet(st.booksPath)
-      books
-    }
-    // settle everything before surfacing the first failure — no train
-    // left in flight when the caller unwinds (the inParallel rule)
-    def settle[T](f: Future[T]): Either[Throwable, T] =
-      Await.ready(f, Duration.Inf).value.get.toEither
-    val (rCents, rTree, rSem, rBooks) =
-      (settle(centsF), settle(treeF), settle(semF), settle(booksF))
-    Seq[Either[Throwable, Any]](rCents, rTree, rSem, rBooks)
-      .collectFirst { case Left(e) => throw e }
-    val (cents, tree) = (rCents.toOption.get, rTree.toOption.get)
-    val semCents =
-      if (tree.isDefined) Array.empty[Array[Double]]
-      else rSem.toOption.get.getOrElse(cents)
-    AnnQuantizers(cents, semCents, rBooks.toOption.get, tree)
+    val sample = new Similarity.TrainSample(corpus, Seq(a.nlist, a.ksub) ++ a.semClusters,
+      a.sampleSize, "doc_id", a.vecCol)
+    val cents = graft.ops.Fft.seqFFTVec(sample.head(a.nlist), a.nlist)
+    val books = Similarity.pqTrainFromSample(sample.head(a.ksub), a.m, a.ksub)
+    val tree = a.semClusters.filter(_ => semRouted(a))
+      .map(nc => Similarity.trainTree(sample, nc, effSpill(a)))
+    val semCents = a.semClusters.filterNot(_ => semRouted(a))
+      .map(nc => graft.ops.Fft.seqFFTVec(sample.head(nc), nc))
+    inParallel(Seq[() => Unit](
+      () => {
+        Similarity.centroidsToDF(spark, cents)
+          .write.mode("overwrite").parquet(st.centroidsPath)
+        // the assignment-identity fingerprint, stamped INSIDE the
+        // centroids dir (underscore-prefixed, so parquet readers skip
+        // it, and it rides the rebuild swap with its quantizer for
+        // free): loadQuantizers refuses params that would silently mix
+        // assignment conventions in the maintained tables
+        writeAnnConfig(spark, st, a)
+      },
+      () => Similarity.booksToDF(spark, books)
+        .write.mode("overwrite").parquet(st.booksPath)) ++
+      tree.map(t => () => Similarity.treeToDF(spark, t)
+        .write.mode("overwrite").parquet(st.semTreePath)) ++
+      semCents.map(sc => () => Similarity.centroidsToDF(spark, sc)
+        .write.mode("overwrite").parquet(st.semCentroidsPath)))
+    AnnQuantizers(cents,
+      if (tree.isDefined) Array.empty[Array[Double]] else semCents.getOrElse(cents),
+      books, tree)
   }
 
   /** The drift response: retrain the quantizers on the CURRENT corpus
@@ -1074,16 +1041,16 @@ object ContinuousIngest {
       // deterministic under recompute), so a replay writes identical
       // segments.
       inParallel(Seq(
-        () => ptime("ai_ivfpack")(Similarity.ivfPack(assigned,
-            dim = q.cents.head.length, counts = Some(cnts))
-          .write.mode("overwrite").parquet(s"${st.ivfPackedPath}/batch=$batchId")),
-        () => ptime("ai_sem")((q.semTree match {
+        () => Similarity.ivfPack(assigned,
+          dim = q.cents.head.length, counts = Some(cnts))
+          .write.mode("overwrite").parquet(s"${st.ivfPackedPath}/batch=$batchId"),
+        () => (q.semTree match {
           case Some(t) => routedSemAssign(batch, t, a)
           case None => Similarity.semanticAssign(batch, q.semCents, a.nAssign,
             idCol = "doc_id", vecCol = a.vecCol)
-        }).write.mode("overwrite").parquet(s"${st.semPath}/batch=$batchId")),
-        () => ptime("ai_ivf_slim")(assigned.select("nn_id", "list")
-          .write.mode("overwrite").parquet(s"${st.ivfPath}/batch=$batchId")),
+        }).write.mode("overwrite").parquet(s"${st.semPath}/batch=$batchId"),
+        () => assigned.select("nn_id", "list")
+          .write.mode("overwrite").parquet(s"${st.ivfPath}/batch=$batchId"),
         () => {
           // slim here too: codes_arr is codes widened to ints (a law-audit
           // convenience on the one-shot face) — 4·m bytes of pure
@@ -1091,10 +1058,9 @@ object ContinuousIngest {
           // The maintained table keeps codes (scoring) + rerr (the ADC
           // error bound, a monitoring signal floats can't be re-derived
           // from without a full re-encode).
-          ptime("ai_pqencode")(Similarity.pqEncode(batch, q.books,
-              idCol = "doc_id", vecCol = a.vecCol)
+          Similarity.pqEncode(batch, q.books, idCol = "doc_id", vecCol = a.vecCol)
             .drop("codes_arr")
-            .write.mode("overwrite").parquet(s"${st.pqPath}/batch=$batchId"))
+            .write.mode("overwrite").parquet(s"${st.pqPath}/batch=$batchId")
           // pack-once for the ADC face: the pinned assignment (the
           // rows the slim write stores — reading the cache skips that
           // parquet round-trip AND the wait on its write) joined with
@@ -1103,13 +1069,13 @@ object ContinuousIngest {
           // concurrent consumers contend for the same cores). Counts
           // come from the same pinned frame (identical by
           // construction to the stored slim table's).
-          ptime("ai_pqpack")(Similarity.pqPack(
+          Similarity.pqPack(
               assigned.select(col("nn_id"), col("list"))
                 .join(spark.read.parquet(s"${st.pqPath}/batch=$batchId")
                   .select(col("vec_id").as("nn_id"), col("codes")), "nn_id"),
               m = a.m,
               counts = Some(cnts))
-            .write.mode("overwrite").parquet(s"${st.pqPackedPath}/batch=$batchId"))
+            .write.mode("overwrite").parquet(s"${st.pqPackedPath}/batch=$batchId")
         }))
     } finally assigned.unpersist()
   }
@@ -1392,16 +1358,6 @@ object ContinuousIngest {
     * threads is the handful of writes a single batch performs.
     * Spark actions are thread-safe across driver threads by design
     * (each carries its own plan; the session is shared). */
-  // dev-only sub-phase timing (set GRAFT_INGEST_TIMING=1); zero cost when unset
-  private val ingestTiming = sys.env.contains("GRAFT_INGEST_TIMING")
-  @inline private def ptime[A](name: String)(f: => A): A =
-    if (!ingestTiming) f
-    else {
-      val t0 = System.nanoTime(); val r = f
-      println(f"  SUBPHASE $name%-28s ${(System.nanoTime() - t0) / 1e9}%.2f")
-      r
-    }
-
   /** Run `body` on a new daemon thread that the CALLING thread
     * creates, so the thread inherits the caller's Spark local
     * properties (job group, description, scheduler pool, tracer span)
@@ -1733,10 +1689,8 @@ object ContinuousIngest {
     // reads below — admitting against it would re-admit every
     // duplicate of the hidden window (one listing per table when
     // clean; ingestBatch is the single-writer context)
-    ptime("recover+layout") {
-      recoverCompactionSwaps(spark, st)
-      requireLayoutMatch(spark, st, p)
-    }
+    recoverCompactionSwaps(spark, st)
+    requireLayoutMatch(spark, st, p)
     // within-batch exact dedup: the flags window runs over NARROW
     // (doc_id, digest) rows (column pruning) and the semi-join back
     // broadcasts the small verdict side — measured FASTER than an
@@ -1746,8 +1700,7 @@ object ContinuousIngest {
     val local = batch.join(
       Dedup.exactDupFlags(batch).where(!col("is_dup")).select("doc_id"),
       Seq("doc_id"), "left_semi")
-    val bloom = ptime("readBloom")(
-      Dedup.bloomFromBytes(readBloomBytes(spark, st)))
+    val bloom = Dedup.bloomFromBytes(readBloomBytes(spark, st))
     val admitted = Dedup.incrementalNewBloom(local,
       readTable(spark, st.digestsPath, excludeBatch = batchId),
       expectedDigests = p.expectedDigests, fpp = p.fpp,
@@ -1784,11 +1737,10 @@ object ContinuousIngest {
     val stage = s"${st.docsPath}/$IngestStagePrefix$batchId"
     val survivors =
       if (slim) {
-        ptime("stage_write")(kept.write.mode("overwrite").parquet(stage))
+        kept.write.mode("overwrite").parquet(stage)
         spark.read.parquet(stage)
       } else {
-        ptime("stage_write")(
-          kept.write.mode("overwrite").parquet(s"${st.docsPath}/batch=$batchId"))
+        kept.write.mode("overwrite").parquet(s"${st.docsPath}/batch=$batchId")
         spark.read.parquet(s"${st.docsPath}/batch=$batchId")
       }
     // everything below derives from the PINNED survivors — distinct
@@ -1799,25 +1751,25 @@ object ContinuousIngest {
     // window because a maybe-hit verifies against the digest table)
     val group = Seq.newBuilder[() => Unit]
     if (slim)
-      group += (() => ptime("docs_slim_write")(survivors.drop(p.ann.get.vecCol)
-        .write.mode("overwrite").parquet(s"${st.docsPath}/batch=$batchId")))
-    group += (() => ptime("digests_write")(digestRows(survivors)
-      .write.mode("overwrite").parquet(s"${st.digestsPath}/batch=$batchId")))
+      group += (() => survivors.drop(p.ann.get.vecCol)
+        .write.mode("overwrite").parquet(s"${st.docsPath}/batch=$batchId"))
+    group += (() => digestRows(survivors)
+      .write.mode("overwrite").parquet(s"${st.digestsPath}/batch=$batchId"))
     if (p.nearDup)
       group += (() =>
         Dedup.minhashBandKeys(survivors, p.shingleN, p.numHashes, p.bands, p.seed)
           .write.mode("overwrite").parquet(s"${st.keysPath}/batch=$batchId"))
-    group += (() => ptime("stats_write")(partialStats(survivors)
-      .write.mode("overwrite").parquet(s"${st.statsPath}/batch=$batchId")))
-    group += (() => ptime("bloom_write")(
+    group += (() => partialStats(survivors)
+      .write.mode("overwrite").parquet(s"${st.statsPath}/batch=$batchId"))
+    group += (() =>
       writeBloomAtomic(spark, st.bloomPath, Dedup.mergeBloomBytes(
         readBloomBytes(spark, st),
-        Dedup.bloomToBytes(Dedup.buildDigestBloom(survivors, p.expectedDigests, p.fpp))))))
+        Dedup.bloomToBytes(Dedup.buildDigestBloom(survivors, p.expectedDigests, p.fpp)))))
     p.ann.foreach { a =>
-      group += (() => ptime("appendIndexes")(appendIndexes(survivors, batchId, st, a,
-        quantizers.getOrElse(loadQuantizers(spark, st, a)))))
+      group += (() => appendIndexes(survivors, batchId, st, a,
+        quantizers.getOrElse(loadQuantizers(spark, st, a))))
     }
-    ptime("write_group")(inParallel(group.result()))
+    inParallel(group.result())
     if (slim) {
       fsFor(spark, stage).delete(new HPath(stage), true)
       // the stage is gone — hand back the STORED survivor rows (the

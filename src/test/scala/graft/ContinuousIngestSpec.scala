@@ -2646,4 +2646,79 @@ class ContinuousIngestSpec extends SparkSpec {
     assert(foreign.isEmpty,
       s"jobs carried another caller's local properties: $foreign")
   }
+
+  test("quantizer training reads ONE sample collect per ann bootstrap and per one-shot annIvfPq; the persisted quantizers equal the public trainers'; pqTrain's books == the driver-normalized books") {
+    import graft.ops.{Fft, Similarity}
+    import graft.streaming.ContinuousIngest.AnnParams
+    import scala.jdk.CollectionConverters._
+    // each SQL action's call site: a driver sample collect reads
+    // "collect at Similarity.scala:<line>"
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case x: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            jobs.add(x.description)
+          case _ =>
+        }
+    }
+    def jobsOf(body: => Unit): Seq[String] = {
+      jobs.clear()
+      body
+      // one marker action: the bus delivers events in order, so once
+      // the marker is seen every action of `body` has been counted
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!jobs.asScala.exists(_.contains("ContinuousIngestSpec.scala")) &&
+        System.nanoTime() < deadline) Thread.sleep(20)
+      jobs.asScala.toSeq
+    }
+    def sampleCollects(js: Seq[String]) = js.count(_.contains("collect at Similarity.scala"))
+    val ann = AnnParams(nlist = 4, m = 4, ksub = 4, nAssign = 2, semClusters = Some(6))
+    def emb(i: Long): Seq[Float] =
+      (0 until 16).map(j => ((((31 * i + 7 * j) % 21) - 10) / 10.0).toFloat)
+    val boot = (1L to 40L).map(i => (1000L + i, text(1000L + i), emb(1000L + i)))
+      .toDF("doc_id", "text", "embedding")
+    val st = IngestState(s"${freshRoot()}/ann")
+    sc.addSparkListener(listener)
+    val (bootJobs, oneShotJobs) =
+      try (jobsOf(ContinuousIngest.bootstrap(boot, st, P.copy(ann = Some(ann)))),
+        jobsOf(Similarity.annIvfPq(boot, 1, nlist = 4, nprobe = 2, m = 4, ksub = 4,
+          idCol = "doc_id")))
+      finally sc.removeSparkListener(listener)
+    assert(sampleCollects(bootJobs) === 1,
+      s"ann bootstrap must train every quantizer from one sample: ${bootJobs.mkString("\n")}")
+    assert(sampleCollects(oneShotJobs) === 1 &&
+      !oneShotJobs.exists(_.contains("head at Similarity.scala")),
+      s"one-shot annIvfPq: one sample collect, no selectivity job: ${oneShotJobs.mkString("\n")}")
+    // the shared sample trains exactly what each public trainer trains
+    def same(a: Array[Array[Double]], b: Array[Array[Double]]) =
+      a.map(_.toSeq).toSeq == b.map(_.toSeq).toSeq
+    val q = ContinuousIngest.loadQuantizers(spark, st, ann)
+    assert(same(q.cents, Similarity.ivfCentroids(boot, 4, idCol = "doc_id")))
+    assert(same(q.semCents, Similarity.ivfCentroids(boot, 6, idCol = "doc_id")))
+    assert(q.books.map(_.map(_.toSeq).toSeq).toSeq ===
+      Similarity.pqTrain(boot, 4, 4, idCol = "doc_id").map(_.map(_.toSeq).toSeq).toSeq)
+    // pqTrain reads the SQL-normalized shared sample; its books equal,
+    // bit for bit, those of a driver-side normalization (sequential
+    // sum of squares, one sqrt, per-element divide) of the same
+    // id-ordered prefix, on a seeded corpus in shuffled id order
+    val rnd = new scala.util.Random(11)
+    val embs = rnd.shuffle((1L to 3000L).toList)
+      .map(i => (i, Seq.fill(16)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    val sample = embs.orderBy("vec_id").limit(Similarity.trainSampleFor(16))
+      .collect().map { r =>
+        val d = r.getSeq[Float](1).map(_.toDouble).toArray
+        var s = 0.0
+        d.foreach(x => s += x * x)
+        val n = math.sqrt(s)
+        d.map(_ / n)
+      }
+    val driverBooks = (0 until 4).map(j =>
+      Fft.seqFFTVec(sample.map(_.slice(j * 4, (j + 1) * 4)), 16).map(_.toSeq).toSeq)
+    assert(Similarity.pqTrain(embs, m = 4, ksub = 16).map(_.map(_.toSeq).toSeq).toSeq ===
+      driverBooks, "pqTrain's books moved off the driver-normalized books")
+  }
 }

@@ -317,5 +317,37 @@ class NativeFunctionsSpec extends SparkSpec {
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
       "gather must recover exactly the unpack-then-filter rows")
     assert(got.count() === 5, "every present wanted id found exactly once")
+    // the one packer: both payloads under both segment rules unpack to
+    // their input rows, and the packed scans answer identically under
+    // either rule (segments of ≤ 32 entries, so every list splits)
+    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
+      a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+    val embs = rows.map { case (i, v, _) => (i, v.map(_.toFloat)) }
+      .toDF("vec_id", "embedding")
+    val cents = Similarity.ivfCentroids(embs, 5)
+    val books = Similarity.pqTrain(embs, m = 4, ksub = 16)
+    val floats = Similarity.ivfAssign(embs, cents)
+    val codes = floats.select("nn_id", "list").join(Similarity.pqEncode(embs, books)
+      .select(col("vec_id").as("nn_id"), col("codes")), "nn_id")
+    val queries = embs.where(col("vec_id") % 7 === 0)
+    val answers = Seq(Similarity.HashSegments(), Similarity.WindowSegments).map { rule =>
+      val pf = Similarity.packSegments(floats, Similarity.Floats(dim), rule, segSize = 32)
+      val pc = Similarity.packSegments(codes, Similarity.Codes(4), rule, segSize = 32)
+      assert(pf.count() > 5 && pc.count() > 5, s"$rule: lists were not split")
+      if (rule == Similarity.WindowSegments)
+        assert(pf.where(size(col("ids")) > 32).isEmpty, "oversized window segment")
+      assert(same(Similarity.ivfUnpack(pf), floats.select("nn_id", "vb", "list")),
+        s"$rule: float unpack != input rows")
+      assert(same(Similarity.pqUnpack(pc), codes.select("nn_id", "list", "codes")),
+        s"$rule: code unpack != input rows")
+      (Similarity.annIvfFromPacked(pf, queries, 3, 2, cents)
+        .as[(Long, Long, Int)].collect().toSet,
+       Similarity.pqPackedShortlist(pc, queries, 2, cents, books, 8,
+         "vec_id", "embedding", lit(true), excludeSelf = true)
+         .as[(Long, Long)].collect().toSet)
+    }
+    assert(answers.head._1.nonEmpty && answers.head._2.nonEmpty)
+    assert(answers.head === answers.last,
+      "hash and window segments must answer identically")
   }
 }

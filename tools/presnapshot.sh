@@ -19,10 +19,16 @@
 # exits non-zero on any failed check (the exact-outlier and catalog
 # references among them), so a kernel that changes an answer fails here.
 #
+# Both modes print the src/main Scala line count and its delta against
+# HEAD, the net-lines figure every change reports.
+#
 # Exit 0 iff the gate passes; commit only on exit 0.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+now=$(find src/main -name '*.scala' -print0 | xargs -0 cat | wc -l)
+base=$(git archive HEAD src/main | tar -xO --wildcards '*.scala' | wc -l)
+echo "presnapshot: src/main Scala lines $now ($(printf '%+d' $((now - base))) vs HEAD)"
 python3 -c 'import sys; sys.path.insert(0, "perfbench"); import build; build.build(".")'
 if [[ "${1:-test}" == "compile" ]]; then
   sbt -batch compile
